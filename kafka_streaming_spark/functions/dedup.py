@@ -492,10 +492,9 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
             if np.array_equal(lo, label[ia]) and np.array_equal(lo, label[ib]):
                 break
         label = nxt
-    out = np.stack([nodes, nodes[label]], axis=1)
-    return edges.sparkSession.createDataFrame(
-        [(int(r[0]), int(r[1])) for r in out], schema
-    )
+    # tolist() yields native Python values of any node type (int or str)
+    out = np.stack([nodes, nodes[label]], axis=1).tolist()
+    return edges.sparkSession.createDataFrame(out, schema)
 
 
 def dedup_clusters(

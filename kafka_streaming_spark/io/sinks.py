@@ -23,15 +23,25 @@ gets from rewriting only the files with matched rows — so a 1-key commit
 rewrites ~|state|/n_buckets, not the whole table (the round-4 full-state
 rewrite was the one flagged scale-killer on the parquet backend).
 
+One commit path per write mode, one driver round-trip per micro-batch:
+``insert_if_absent`` collects the batch's distinct prune values (the
+IN-list of its anti-join probe and its empty-batch check);
+``upsert_state`` takes the changed keys and their buckets from one collect
+of the caller's per-batch aggregate (``key_buckets``).  First commits and
+replays go through the same path as every other commit.
+
 Change-feed metadata (``_change_type``, ``_commit_version``) is **derived
 from the file name at read time** (``attach_cdf_metadata``) instead of being
-written into the rows: insert commits just hard-link the committed data
-files into ``cdf/`` — zero extra write amplification per micro-batch, the
-same trick Delta plays by logging file-level actions rather than row-level
-copies.
+written into the rows: ``insert_if_absent`` commits just hard-link the
+committed data files into ``cdf/`` — zero extra write amplification per
+micro-batch, the same trick Delta plays by logging file-level actions
+rather than row-level copies; ``upsert_state`` commits write their change
+rows in one job partitioned by change type.
 
-CDF coverage vs Delta: upsert commits emit ``update_preimage`` (the changed
-keys' previous rows) AND ``update_postimage``; first-time commits emit
+CDF coverage vs Delta: an upsert commit labels its change rows as Delta
+does — a changed key that existed before emits ``update_preimage`` (its
+previous row) and ``update_postimage``; a key new to the table emits
+``insert``, whichever version first writes it; insert-only commits emit
 ``insert``.  ``delete`` never occurs (neither table deletes rows — same as
 the reference's workload); the delete routing filters are exercised against
 synthetic delete rows in tests.
@@ -44,11 +54,9 @@ import os
 import shutil
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-from kafka_streaming_spark.ops.dedup import prune_in_list
 
 #: Regexes over the cdf file name (see module docstring).
 _VERSION_RE = r"/v(\d+)_"
@@ -73,9 +81,10 @@ class ParquetUpsertTable:
     - ``insert_if_absent`` (silver pattern, J1): append-only; new rows are
       the rows whose key is absent from current data (anti-join with bucket
       pruning, silver.py:22-40);
-    - ``upsert_state`` (gold pattern, J2): versioned full-state commit; the
-      caller computes the new state (e.g. via ``combine_states``) and the
-      changed keys' rows are logged to the change feed.
+    - ``upsert_state`` (gold pattern, J2): versioned commit of the changed
+      key-buckets; the caller computes their new state (e.g. via
+      ``combine_states``) and the changed keys' rows are logged to the
+      change feed.
     """
 
     def __init__(
@@ -142,11 +151,6 @@ class ParquetUpsertTable:
         final = (f"v{version}_insert_", f"v{version}_update_postimage_")
         return any(f.startswith(final) for f in os.listdir(self.cdf_dir))
 
-    @property
-    def latest_version(self) -> int | None:
-        vs = self._versions()
-        return vs[-1] if vs else None
-
     # -- bucketing ---------------------------------------------------------
 
     def bucket_of(self, df: DataFrame) -> F.Column:
@@ -186,22 +190,6 @@ class ParquetUpsertTable:
             f"{self.root}/data/v_{v}/__bucket={b}" for b, v in sorted(latest.items())
         ]
 
-    def _append_dir_has_files(self) -> bool:
-        """Single source of truth for "the append dir holds committed data"
-        — shared by :meth:`read` and :meth:`_has_append_data` so the
-        emptiness probe behind ``insert_if_absent``'s first-batch fast path
-        can never disagree with what ``read`` would actually scan."""
-        append_dir = f"{self.root}/data/append"
-        return os.path.isdir(append_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(append_dir)
-        )
-
-    def _has_append_data(self) -> bool:
-        """True when the append dir holds at least one committed data file
-        (or bucketed state exists) — the driver-side emptiness probe
-        backing ``insert_if_absent``'s first-batch fast path."""
-        return self._append_dir_has_files() or bool(self._versions())
-
     def read_buckets(
         self, bucket_ids: Sequence[int] | None = None, before_version: int | None = None
     ) -> DataFrame:
@@ -216,14 +204,18 @@ class ParquetUpsertTable:
     # -- reads ------------------------------------------------------------
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], self.schema)
+        # limit(0) makes the plan a known-empty relation, so a join or
+        # union against it folds away instead of costing a shuffle job
+        return self.spark.createDataFrame([], self.schema).limit(0)
 
     def read(self) -> DataFrame:
         """Current table state (S4 batch scan of the merge target): the
         append dir for insert-only tables, the per-bucket-latest assembly
         for upsert tables."""
-        if self._append_dir_has_files():
-            append_dir = f"{self.root}/data/append"
+        append_dir = f"{self.root}/data/append"
+        if os.path.isdir(append_dir) and any(
+            f.endswith(".parquet") for f in os.listdir(append_dir)
+        ):
             return self.spark.read.schema(self.schema).parquet(append_dir)
         return self.read_buckets()
 
@@ -261,10 +253,14 @@ class ParquetUpsertTable:
     ) -> None:
         """J1: append the batch rows whose key is not present yet.
 
-        ``prune_col`` applies the IN-list/semi-join prune (F3) to the
-        existing-keys probe — at scale the anti-join reads only the target
-        buckets the batch touches.  ``prune_col`` must be part of ``keys``
-        (it is the reference's ``minute_timestamp``, part of the MERGE key).
+        ``prune_col`` restricts the existing-keys probe to the batch's
+        values of that column (F3, silver.py:22-28's "Prune IN List"): one
+        collect of the distinct values, spliced into the scan as an IN-list
+        the parquet reader pushes down.  ``prune_col`` must be part of
+        ``keys`` (it is the reference's ``minute_timestamp``, part of the
+        MERGE key).  The same collect is the empty-batch check: a batch
+        with no values commits nothing (watermark eviction under
+        availableNow ends on such a batch).
 
         ``batch_unique=True`` skips the within-batch dropDuplicates — one
         full shuffle of every micro-batch — for callers whose upstream
@@ -273,22 +269,15 @@ class ParquetUpsertTable:
         batch duplicates are still caught by the anti-join).
         """
         deduped = batch if batch_unique else batch.dropDuplicates(self.keys)
-        if self._has_append_data():
-            current = self.read().select(*self.keys)
-            if prune_col is not None:
-                current = prune_in_list(current, batch, prune_col)
-            fresh = (
-                deduped.join(current, on=self.keys, how="left_anti")
-                .select(*[f.name for f in self.schema.fields])
-            )
-        else:
-            # First backfill batch: the probe side is EMPTY, so the
-            # prune-collect job and the anti-join are pure overhead —
-            # every deduped row is fresh by construction.  A driver-side
-            # fs check (no data files yet) replaces two Spark jobs on the
-            # pipeline's dominant first micro-batch; the anti-join path
-            # is unchanged for every subsequent commit.
-            fresh = deduped.select(*[f.name for f in self.schema.fields])
+        current = self.read().select(*self.keys)
+        if prune_col is not None:
+            values = [r[0] for r in batch.select(prune_col).distinct().collect()]
+            if not values:
+                return
+            current = current.filter(F.col(prune_col).isin(values))
+        fresh = deduped.join(current, on=self.keys, how="left_anti").select(
+            *[f.name for f in self.schema.fields]
+        )
         # Stage → rename: never write into a directory the plan is reading
         # (the staged write materializes the anti-join; the rename is the
         # commit, mirroring Delta's write-files-then-commit protocol).
@@ -305,27 +294,42 @@ class ParquetUpsertTable:
         shutil.rmtree(stage, ignore_errors=True)
         self._link_to_cdf(committed, "insert", version)
 
+    def key_buckets(self, df: DataFrame) -> tuple[list, list[int]]:
+        """The key values of ``df`` and the buckets they hash to, in one
+        driver round-trip: ``df`` holds at most one row per key (a per-batch
+        aggregate), so the collect is bounded by the keys it changes.
+        Feeds :meth:`upsert_state`'s ``changed_keys`` and ``bucket_ids``;
+        no keys means an empty batch."""
+        (key,) = self.keys  # upsert tables are keyed on one column
+        rows = df.select(key, self.bucket_of(df)).collect()
+        return [r[0] for r in rows], sorted({r[1] for r in rows})
+
     def upsert_state(
         self,
         new_state: DataFrame,
-        changed_keys: DataFrame,
+        changed_keys: Sequence,
         version: int,
-        bucket_ids: Sequence[int] | None = None,
+        bucket_ids: Sequence[int],
     ) -> bool:
         """J2: commit the changed key-buckets of the new state (versioned
-        dir holding only those buckets) and log the changed keys' pre/post
-        image rows to the change feed.
+        dir holding only those buckets) and log the changed keys' rows to
+        the change feed.  ``changed_keys`` and ``bucket_ids`` come from
+        :meth:`key_buckets`; ``new_state`` needs to hold every row of those
+        buckets (rows of other buckets are dropped).
 
         O(Δ) write (VERDICT r4 item 3): only buckets containing changed
         keys are rewritten — unchanged buckets are inherited from older
         version dirs by the per-bucket-latest read assembly — matching the
         file-granularity the reference gets from Delta MERGE
-        (``gold.py:19-45``).  Callers that already know the changed bucket
-        set pass ``bucket_ids`` with ``new_state`` restricted to those
-        buckets (the O(Δ) read side, see ``read_buckets``); otherwise the
-        bucket set is derived from ``changed_keys`` here (one bounded
-        collect, ≤ n_buckets values) and the full ``new_state`` is filtered
-        down before writing.
+        (``gold.py:19-45``).
+
+        Change feed, as Delta labels it: a changed key present in the
+        prior state emits its previous row as ``update_preimage`` and its
+        new row as ``update_postimage``; a key new to the table emits its
+        row as ``insert``.  All three come from one single-task Spark write
+        job over the changed keys' rows of the prior buckets and of the
+        committed dir (an IN-list over ``changed_keys``, pushed into both
+        scans), one file per change type.
 
         Idempotent under micro-batch replay (same ``version`` re-offered
         after a crash): a fully applied version is a no-op (returns False);
@@ -334,101 +338,50 @@ class ParquetUpsertTable:
         if self.version_applied(version):
             return False
         state_dir = f"{self.root}/data/v_{version}"
-        prior_versions = [v for v in self._versions() if v < version]
         if not os.path.exists(f"{state_dir}/_SUCCESS"):
             shutil.rmtree(state_dir, ignore_errors=True)  # crashed half-write
-            if bucket_ids is None:
-                # bounded collect: at most n_buckets distinct values
-                bucket_ids = [
-                    r[0]
-                    for r in changed_keys.select(
-                        self.bucket_of(changed_keys).alias("__b")
-                    )
-                    .distinct()
-                    .collect()
-                ]
-                new_state = new_state.filter(
-                    self.bucket_of(new_state).isin([int(b) for b in bucket_ids])
-                )
+            bucket = self.bucket_of(new_state)
             (
-                new_state.withColumn("__bucket", self.bucket_of(new_state))
+                new_state.filter(bucket.isin(list(bucket_ids)))
+                .withColumn("__bucket", bucket)
                 .write.mode("overwrite")
                 .partitionBy("__bucket")
                 .parquet(state_dir)
             )
-        if bucket_ids is None:
-            # replay-redo path (_SUCCESS exists, cdf interrupted): the
-            # committed dir itself records which buckets this version wrote
-            bucket_ids = self._buckets_in(version)
-        committed_paths = [
-            f"{state_dir}/{name}"
-            for name in sorted(os.listdir(state_dir))
-            if name.startswith("__bucket=")
-        ]
-        committed = (
-            self.spark.read.schema(self.schema).parquet(*committed_paths)
-            if committed_paths
-            else self._empty()
+        committed = self.spark.read.schema(self.schema).parquet(
+            *[
+                f"{state_dir}/{name}"
+                for name in sorted(os.listdir(state_dir))
+                if name.startswith("__bucket=")
+            ]
         )
-        keyset = changed_keys.dropDuplicates(self.keys)
+        (key,) = self.keys
+        changed = F.col(key).isin(list(changed_keys))
         cols = [f.name for f in self.schema.fields]
-        if not prior_versions:
-            # First commit: every committed row is new BY CONSTRUCTION (the
-            # caller's changed_keys covers the whole initial state), so the
-            # insert cdf rows ARE the committed data files — hard-link them
-            # (Delta's file-action logging) instead of paying a second
-            # Spark write job per first commit.  Prefix with the bucket id:
-            # part file names repeat across bucket dirs.
-            prefix = f"v{version}_insert_"
-            for name in os.listdir(self.cdf_dir):
-                if name.startswith(prefix):
-                    os.remove(f"{self.cdf_dir}/{name}")
-            links: list[tuple[str, str]] = []
-            for bdir in committed_paths:
-                b = os.path.basename(bdir).split("=", 1)[1]
-                for name in sorted(os.listdir(bdir)):
-                    if name.endswith(".parquet"):
-                        links.append(
-                            (f"{bdir}/{name}", f"{self.cdf_dir}/{prefix}b{b}_{name}")
-                        )
-            for src_path, dst in links:
-                try:
-                    os.link(src_path, dst)
-                except OSError:
-                    shutil.copy2(src_path, dst)
-            return True
-        # Delta-faithful CDF: changed keys that existed before also emit
-        # their PREVIOUS row as an update_preimage — downstream T4
-        # routing filters (gold.py:57 / tomongo.py:26 shapes) run
-        # against real preimage rows, not just inserts.  Both state
-        # reads are first PRUNED to the changed keys (IN-list when the
-        # keyset is tiny, semi-join fallback — F3): at scale a commit
-        # touching k of N keys reads ~k rows of prior state via
-        # row-group skipping, not the whole table.
-        key0 = self.keys[0]
-        prior = prune_in_list(
-            self.read_buckets(bucket_ids, before_version=version),
-            keyset,
-            key0,
+        pre = self.read_buckets(bucket_ids, before_version=version).filter(changed)
+        post = committed.filter(changed)
+        # At most two rows per changed key: one task sees both images of
+        # every key, so the label needs no shuffle — a key with a preimage
+        # row is an update, a key without one an insert.
+        had_pre = F.max("__pre").over(Window.partitionBy(key))
+        rows = (
+            pre.select(F.lit(True).alias("__pre"), *cols)
+            .unionByName(post.select(F.lit(False).alias("__pre"), *cols))
+            .coalesce(1)
+            .select(
+                F.when(F.col("__pre"), "update_preimage")
+                .when(had_pre, "update_postimage")
+                .otherwise("insert")
+                .alias("__ctype"),
+                *cols,
+            )
         )
-        post_src = prune_in_list(committed, keyset, key0)
-        if len(self.keys) > 1:
-            prior = prior.join(keyset, self.keys, "left_semi")
-            post_src = post_src.join(keyset, self.keys, "left_semi")
-        pre = prior.select(F.lit("update_preimage").alias("__ctype"), *cols)
-        post = post_src.select(F.lit("update_postimage").alias("__ctype"), *cols)
-        rows = pre.unionByName(post)
-        ctypes = ["update_preimage", "update_postimage"]
-        # ONE Spark job stages every change row, partitioned by change type
-        # (pre+postimage previously cost a write job each — per-micro-batch
-        # job count matters more than anything else for streaming
-        # throughput).  Rename order preserves the crash protocol: preimages
-        # land in cdf/ FIRST, and the postimage/insert files remain the
-        # commit-final marker (see version_applied), so an interrupted
-        # commit redoes both.
+        # Rename order is the crash protocol: preimages land in cdf/ FIRST,
+        # and the postimage/insert files are the commit-final marker (see
+        # version_applied), so an interrupted commit redoes all of them.
         stage = f"{self.root}/stage/cdf_{version}"
         rows.write.mode("overwrite").partitionBy("__ctype").parquet(stage)
-        for ctype in ctypes:
+        for ctype in ("update_preimage", "update_postimage", "insert"):
             prefix = f"v{version}_{ctype}_"
             for name in os.listdir(self.cdf_dir):
                 if name.startswith(prefix):

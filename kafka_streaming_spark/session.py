@@ -25,6 +25,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_memory() -> str:
+    """Half of physical memory, between 1 and 16 GiB: the heap must fit
+    the host it runs on, and 16 GiB is what 32 local executor threads
+    over wide plans need."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // 2 // 2**30))}g"
+
+
 #: Configs that are safe and beneficial at every scale.  Values here are
 #: declarative hints — Catalyst/AQE pick the physical strategy at runtime.
 BASE_CONF: dict[str, str] = {
@@ -33,10 +42,10 @@ BASE_CONF: dict[str, str] = {
     # default driver heap is 1 GiB — far too small for 32 executor
     # threads over wide codegen'd plans (GCLocker allocation failures
     # killed heavy queries and GC thrash dominated measurement variance
-    # before this was pinned).  Overridable per-run via
-    # $SPARK_GRAFT_DRIVER_MEM or extra_conf; ignored on a real cluster
-    # where spark-submit owns the JVM sizing.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    # before this was pinned).  Sized to the host's physical memory;
+    # overridable per-run via $SPARK_GRAFT_DRIVER_MEM or extra_conf;
+    # ignored on a real cluster where spark-submit owns the JVM sizing.
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

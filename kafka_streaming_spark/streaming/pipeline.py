@@ -99,19 +99,22 @@ class MedallionPipeline:
     # -- stage 1: bronze → silver ------------------------------------------
 
     def _silver_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """K1 body (silver.py:10-40): insert-if-absent with bucket pruning.
+        """K1 body (silver.py:10-40): insert-if-absent with bucket pruning;
+        the prune-value collect doubles as the empty-batch check.
         ``batch_unique``: the upstream dropDuplicatesWithinWatermark already
         guarantees one row per id within a micro-batch, so the sink skips
         its own within-batch dedup shuffle (cross-batch/replay duplicates
         are still removed by the anti-join)."""
-        if batch_df.isEmpty():
-            # watermark-dedup state eviction produces a trailing EMPTY
-            # micro-batch under availableNow; the full insert path (probe
-            # read + anti-join + parquet commit) is pure overhead for it
-            return
-        self.silver.insert_if_absent(
-            batch_df, version=batch_id, prune_col="minute_timestamp", batch_unique=True
-        )
+        # Cached: the sink reads the batch twice (prune collect, staged
+        # write), and each uncached read re-runs the stream dedup, which
+        # rolls the RocksDB state store back a version and replays it.
+        batch_df.persist()
+        try:
+            self.silver.insert_if_absent(
+                batch_df, version=batch_id, prune_col="minute_timestamp", batch_unique=True
+            )
+        finally:
+            batch_df.unpersist()
 
     def start_bronze_to_silver(self, events: DataFrame, available_now: bool = True):
         """``events`` must carry the EVENT_SCHEMA columns (id, group_id,
@@ -133,7 +136,13 @@ class MedallionPipeline:
     def _gold_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """K2 body (gold.py:7-46): per-batch aggregate + running-total
         upsert.  ``least/greatest`` maintenance of first/last timestamps
-        (see aggregates.combine_states for the documented deviation)."""
+        (see aggregates.combine_states for the documented deviation).
+
+        One commit path, one driver round-trip: a single collect of the
+        aggregate's (group_id, bucket) pairs — at most |groups| rows — is
+        the empty-batch check and supplies the bucket list the prior read
+        and the state write are restricted to (O(Δ), VERDICT r4 item 3)
+        and the changed-key IN-list of the change feed."""
         if self.gold.version_applied(batch_id):
             # foreachBatch replay after a crash between the gold commit and
             # the checkpoint commit: the running totals already include this
@@ -143,54 +152,32 @@ class MedallionPipeline:
         inserts = batch_df.filter(
             ~F.col("_change_type").isin("update_postimage", "update_preimage", "delete")
         ).drop("_change_type", "_commit_version")
-        # Cached: the per-batch aggregate (≤ |groups| rows) feeds three
-        # consumers — the bucket probe, the state fold, and the cdf keyset
-        # — and must compute once, not once per consumer.
+        # Cached: the per-batch aggregate (≤ |groups| rows) feeds both the
+        # key/bucket collect and the state fold, and must compute once.
         agg = group_agg(
             inserts, keys=("group_id",), score_col="score", ts_col="event_timestamp"
         ).cache()
         try:
-            # O(Δ) commit (VERDICT r4 item 3): one bounded collect
-            # (≤ n_buckets values) learns which key-buckets this
-            # micro-batch touches; the prior-state read AND the state
-            # write are then restricted to those buckets — a batch
-            # touching k of N groups costs ~k/n_buckets of the state, not
-            # a full O(|state|) rewrite.  The collect doubles as the
-            # empty-batch check (replacing the former isEmpty job).
-            buckets = [
-                r[0]
-                for r in agg.select(self.gold.bucket_of(agg).alias("__b"))
-                .distinct()
-                .collect()
-            ]
-            if not buckets:
+            keys, buckets = self.gold.key_buckets(agg)
+            if not keys:
                 return
-            if self.gold.latest_version is None:
-                # First commit: no prior state exists, and group_agg's
-                # output IS combine_states(empty, batch) column for column
-                # (coalesce-with-null arithmetic degenerates to the batch
-                # side) — skip the prior read and the full-outer join on
-                # the pipeline's dominant first micro-batch.
-                new_state = agg
-            else:
-                prior = self.gold.read_buckets(buckets).drop("updated_at")
-                new_state = combine_states(prior, agg, keys=("group_id",))
-            new_state = new_state.withColumn(
+            prior = self.gold.read_buckets(buckets).drop("updated_at")
+            new_state = combine_states(prior, agg, keys=("group_id",)).withColumn(
                 "updated_at", F.unix_timestamp(F.current_timestamp()) * 1000
             )
             self.gold.upsert_state(
-                new_state,
-                changed_keys=agg.select("group_id"),
-                version=batch_id,
-                bucket_ids=buckets,
+                new_state, changed_keys=keys, version=batch_id, bucket_ids=buckets
             )
         finally:
             agg.unpersist()
 
-    def start_silver_to_gold(self, available_now: bool = True, max_files_per_trigger: int = 8):
-        """S2: stream the silver change feed; one upstream commit ≈ one
-        micro-batch (``maxFilesPerTrigger`` bounds batches to ~one commit,
-        the reference's bounded-batch intent at gold.py:65/K6)."""
+    def start_silver_to_gold(self, available_now: bool = True, max_files_per_trigger: int = 50):
+        """S2: stream the silver change feed in bounded batches of at most
+        50 files, the reference's ``MAX_FILES_PER_TRIGGER`` (gold.py:65,
+        config.py:76-77, K6).  A silver commit writes one file per shuffle
+        partition, and a gold commit's fixed cost exceeds a live silver
+        commit's, so a tighter bound leaves gold a commit behind per
+        batch and its backlog, not its work, sets the latency."""
         cdf = _cdf_stream(self.spark, self.silver, SILVER_SCHEMA, max_files_per_trigger)
         return start_foreach_batch(
             cdf,

@@ -51,6 +51,19 @@ def test_clusters_match_union_find(spark):
     assert distributed == got
 
 
+def test_clusters_string_ids_match_union_find(spark):
+    """The driver-side fast path keeps the node type: string doc ids come
+    back as strings, clustered exactly as the union-find oracle does."""
+    pairs = [
+        ("d03", "d07"), ("d11", "d07"), ("d02", "d05"), ("d05", "d05"),
+        ("d20", "d13"), ("d13", "d30"), ("d30", "d03"), ("d40", "d41"),
+    ]
+    pairs_df = spark.createDataFrame(pairs, ["id_a", "id_b"])
+    got = {r["doc_id"]: r["cluster_id"] for r in D.dedup_clusters(pairs_df).collect()}
+    assert got == _union_find(pairs)
+    assert got["d30"] == "d03" and got["d41"] == "d40"
+
+
 def test_arrow_signatures_match_sql(spark):
     """The numpy MinHash kernel must produce bit-identical signatures to the
     pure Column-expression form, for both hash families."""

@@ -202,7 +202,8 @@ def test_gold_invariants_parquet(spark, tmp_path_factory):
         state = combine_states(prior, agg, keys=("group_id",)).withColumn(
             "updated_at", F.lit(0).cast("long")
         )
-        pq.upsert_state(state, changed_keys=agg.select("group_id"), version=version)
+        keys, buckets = pq.key_buckets(agg)
+        pq.upsert_state(state, changed_keys=keys, version=version, bucket_ids=buckets)
 
     _gold_invariants(spark, upsert, pq.read)
 

@@ -16,6 +16,11 @@ from kafka_streaming_spark.schemas import EVENT_SCHEMA, load_table
 from kafka_streaming_spark.streaming.pipeline import MedallionPipeline
 from tests.conftest import SF_SMALL
 
+#: Spark jobs per micro-batch of one silver insert / one gold commit in
+#: ``test_commit_jobs_per_micro_batch`` (measured; lower is better).
+B2S_JOBS = 3.0
+S2G_JOBS = 5.5
+
 
 def _write_event_source(spark, events_df, path, n_files=4):
     """Split events into n event-time-ordered parquet files so availableNow
@@ -365,6 +370,42 @@ def test_gold_batch_replay_same_batch_id_is_noop(spark, tmp_path_factory):
     assert per_group == {"g1": 3, "g2": 1}
 
 
+def test_commit_jobs_per_micro_batch(spark, tmp_path_factory):
+    """One commit path, one driver round-trip per micro-batch: the Spark
+    jobs a silver insert and a gold commit run stay pinned.  Every job of
+    a streaming micro-batch runs under its query's runId job group, so
+    StatusTracker counts them per stage; the count is spread over the
+    batches that carried data, as the benchmark's ``jobs_per_batch``."""
+    from kafka_streaming_spark.io.sources import file_stream
+
+    root = str(tmp_path_factory.mktemp("jobcount"))
+    base_ms = 1_700_000_000_000
+    src = f"{root}/source"
+    for f in range(2):
+        rows = [
+            (f"e{f}_{i}", f"g{i % 5}", float(i), base_ms + (f * 40 + i) * 1_000)
+            for i in range(40)
+        ]
+        spark.createDataFrame(rows, schema=EVENT_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 hour")
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_per_batch(query) -> float:
+        query.awaitTermination()
+        batches = sum(p.numInputRows > 0 for p in query.recentProgress)
+        assert batches >= 1
+        return len(tracker.getJobIdsForGroup(str(query.runId))) / batches
+
+    stream = file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=1)
+    b2s = jobs_per_batch(pipe.start_bronze_to_silver(stream, available_now=True))
+    s2g = jobs_per_batch(pipe.start_silver_to_gold(available_now=True))
+    assert pipe.gold.read().agg(F.sum("event_count")).collect()[0][0] == 80
+    assert b2s <= B2S_JOBS, f"bronze_to_silver ran {b2s} jobs per batch"
+    assert s2g <= S2G_JOBS, f"silver_to_gold ran {s2g} jobs per batch"
+
+
 def test_sql_literal_formats_types_safely():
     """MERGE prune literals: typed formatting, no repr() splicing."""
     import datetime
@@ -508,13 +549,13 @@ def test_cdf_emits_preimages_and_t4_routing(spark, tmp_path_factory):
         return spark.createDataFrame(rows, schema=GOLD_SCHEMA)
 
     s0 = [("g1", 1.0, 1, 1.0, 0, 0, 0), ("g2", 2.0, 1, 2.0, 0, 0, 0)]
-    gold.upsert_state(mk_state(s0), changed_keys=mk_state(s0).select("group_id"), version=0)
-    s1 = [("g1", 4.0, 2, 2.0, 0, 5, 1), ("g2", 2.0, 1, 2.0, 0, 0, 0)]
-    gold.upsert_state(
-        mk_state(s1),
-        changed_keys=spark.createDataFrame([("g1",)], ["group_id"]),
-        version=1,
-    )
+    keys, buckets = gold.key_buckets(mk_state(s0))
+    gold.upsert_state(mk_state(s0), changed_keys=keys, version=0, bucket_ids=buckets)
+    # v1 changes g1 and adds g3, a key the table has never held
+    s1 = [("g1", 4.0, 2, 2.0, 0, 5, 1), ("g2", 2.0, 1, 2.0, 0, 0, 0), ("g3", 7.0, 1, 7.0, 0, 5, 1)]
+    changed = mk_state([r for r in s1 if r[0] != "g2"])
+    keys, buckets = gold.key_buckets(changed)
+    gold.upsert_state(mk_state(s1), changed_keys=keys, version=1, bucket_ids=buckets)
 
     cdf = gold.read_cdf()
     by_type = {
@@ -522,11 +563,17 @@ def test_cdf_emits_preimages_and_t4_routing(spark, tmp_path_factory):
         for r in cdf.groupBy("_change_type").agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
     # v0: 2 inserts; v1: 1 preimage (g1 old row) + 1 postimage (g1 new row)
-    assert by_type == {"insert": 2, "update_preimage": 1, "update_postimage": 1}
+    # + 1 insert (g3, first seen at v1)
+    assert by_type == {"insert": 3, "update_preimage": 1, "update_postimage": 1}
     pre = cdf.filter("_change_type = 'update_preimage'").collect()
     assert len(pre) == 1 and pre[0]["cumulative_score"] == 1.0  # the OLD row
+    assert pre[0]["group_id"] == "g1"
     post = cdf.filter("_change_type = 'update_postimage'").collect()
+    assert len(post) == 1 and post[0]["group_id"] == "g1"
     assert post[0]["cumulative_score"] == 4.0  # the NEW row
+    # Delta labels a key's first write ``insert`` whatever the version
+    g3 = [(r["_change_type"], r["_commit_version"]) for r in cdf.filter("group_id = 'g3'").collect()]
+    assert g3 == [("insert", 1)]
 
     # full four-type matrix through the T4 filters (synthetic delete row)
     delete_rows = cdf.limit(1).withColumn("_change_type", F.lit("delete"))
@@ -597,23 +644,22 @@ def test_upsert_commit_is_bucket_bounded_o_delta(spark, tmp_path_factory):
         return spark.createDataFrame(rows, schema=GOLD_SCHEMA)
 
     s0 = [(f"g{i}", float(i), 1, float(i), 0, 0, 0) for i in range(200)]
-    gold.upsert_state(mk_state(s0), changed_keys=mk_state(s0).select("group_id"), version=0)
+    keys, buckets = gold.key_buckets(mk_state(s0))
+    gold.upsert_state(mk_state(s0), changed_keys=keys, version=0, bucket_ids=buckets)
     assert len(gold._buckets_in(0)) == 8  # 200 keys cover all 8 buckets
 
     s1_changed = [("g7", 99.0, 2, 49.5, 0, 5, 1)]
     # caller passes ONLY the changed key's post-state + its bucket (the
     # O(delta) contract the gold stage uses)
     changed = mk_state(s1_changed)
-    buckets = [
-        r[0] for r in changed.select(gold.bucket_of(changed).alias("b")).distinct().collect()
-    ]
+    keys, buckets = gold.key_buckets(changed)
     assert len(buckets) == 1
     # new bucket state = prior bucket content with g7 replaced
     prior_bucket = gold.read_buckets(buckets)
     new_bucket_state = prior_bucket.filter("group_id != 'g7'").unionByName(changed)
     gold.upsert_state(
         new_bucket_state,
-        changed_keys=changed.select("group_id"),
+        changed_keys=keys,
         version=1,
         bucket_ids=buckets,
     )
@@ -640,9 +686,8 @@ def test_upsert_commit_is_bucket_bounded_o_delta(spark, tmp_path_factory):
 
     # once every bucket is rewritten, vacuum can drop v0
     s_all = [(f"g{i}", float(i) + 0.5, 2, float(i), 0, 0, 0) for i in range(200)]
-    gold.upsert_state(
-        mk_state(s_all), changed_keys=mk_state(s_all).select("group_id"), version=2
-    )
+    keys, buckets = gold.key_buckets(mk_state(s_all))
+    gold.upsert_state(mk_state(s_all), changed_keys=keys, version=2, bucket_ids=buckets)
     gold.vacuum(keep_last=1)
     assert not os.path.exists(f"{root}/gold/data/v_0")
     assert not os.path.exists(f"{root}/gold/data/v_1")
@@ -682,25 +727,20 @@ def test_bucketed_upsert_random_commit_sequences(spark, tmp_path_factory):
         for k, v in new_vals:
             ref[k] = v
         changed_df = mk_state(new_vals)
-        buckets = [
-            r[0]
-            for r in changed_df.select(gold.bucket_of(changed_df).alias("b"))
-            .distinct()
-            .collect()
-        ]
+        changed_keys, buckets = gold.key_buckets(changed_df)
         # new bucket state = prior bucket rows with changed keys replaced
         prior = gold.read_buckets(buckets)
         keep = prior.filter(~F.col("group_id").isin(changed))
         gold.upsert_state(
             keep.unionByName(changed_df),
-            changed_keys=changed_df.select("group_id"),
+            changed_keys=changed_keys,
             version=version,
             bucket_ids=buckets,
         )
         if step == 2:
             # replay: same version re-offered after a "crash" — no-op
             assert gold.upsert_state(
-                changed_df, changed_df.select("group_id"), version=version
+                changed_df, changed_keys, version=version, bucket_ids=buckets
             ) is False
         if step == 3:
             # crash-redo: wipe this version's CDF files (state committed,
@@ -713,8 +753,9 @@ def test_bucketed_upsert_random_commit_sequences(spark, tmp_path_factory):
                 gold.read_buckets(buckets).filter(
                     F.col("group_id").isin([k for k, _ in new_vals])
                 ),
-                changed_df.select("group_id"),
+                changed_keys,
                 version=version,
+                bucket_ids=buckets,
             ) is True
         if step in (2, 4):
             gold.vacuum(keep_last=2)
