@@ -116,10 +116,8 @@ def streaming_main() -> None:
         master=f"local[{CPUS}]",
         shuffle_partitions=int(CPUS),
         streaming=True,
-        # 32g: local mode shares the driver heap across all executor
-        # threads; the 1g Spark default GC-thrashed the whole bench
-        # (see session.BASE_CONF note).
-        extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "32g"},
+        # driver heap: session.BASE_CONF sizes it to the host
+        extra_conf={"spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     # Warm scan/codegen so the pipeline measurement starts from the same
@@ -163,7 +161,6 @@ def main() -> None:
         streaming=True,
         extra_conf={
             "spark.ui.enabled": "false",
-            "spark.driver.memory": "32g",
             # ~340 queries x 2 passes = ~680 retained SQL executions, each
             # holding formatted plan graphs for our very wide plans — with
             # the default retention (1000) ALL of them stay on the heap

@@ -567,13 +567,12 @@ def dedup_clusters(
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    # Convergence detector: labels are monotone non-increasing per node, so
-    # the label sum strictly decreases every round that changes anything and
-    # is exactly unchanged at the fixed point.  Comparing sums replaces a
-    # new-vs-old join per round with a single aggregate; decimal(38,0) keeps
-    # the sum exact (no 64-bit wrap) for up to ~10^19 total label mass.
-    _sum_expr = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    prev_sum = labels.agg(_sum_expr).collect()[0]["s"]
+    # Convergence detector: each round carries every node's previous label
+    # along (``__old``) and counts the nodes whose label moved — zero at the
+    # fixed point.  One aggregate per round, no new-vs-old join, and it only
+    # compares labels, so it holds for any orderable id type (a label sum
+    # would need numeric ids).
+    _moved_expr = F.count_if(F.col("label") != F.col("__old")).alias("moved")
     for rnd in range(max_rounds):
         neighbor_min = (
             edges.join(labels, edges["b"] == labels["node"])
@@ -584,6 +583,7 @@ def dedup_clusters(
             labels.join(neighbor_min, labels["node"] == neighbor_min["a"], "left")
             .select(
                 "node",
+                F.col("label").alias("__old"),
                 F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
                     "label"
                 ),
@@ -605,6 +605,7 @@ def dedup_clusters(
             )
             .select(
                 "node",
+                "x.__old",
                 F.least(F.col("x.label"), F.coalesce(F.col("__ll"), F.col("x.label"))).alias(
                     "label"
                 ),
@@ -613,12 +614,11 @@ def dedup_clusters(
         # Lazy checkpoint: the convergence aggregate below is the action
         # that materializes it — one Spark job per round, not two.
         new_labels = _materialize(new_labels, checkpoint, f"round_{rnd}", eager=False)
-        new_sum = new_labels.agg(_sum_expr).collect()[0]["s"]
+        moved = new_labels.agg(_moved_expr).collect()[0]["moved"]
         propagated.unpersist()  # new_labels is materialized by the agg above
-        labels = new_labels
-        if new_sum == prev_sum:
+        labels = new_labels.drop("__old")
+        if moved == 0:
             break
-        prev_sum = new_sum
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 

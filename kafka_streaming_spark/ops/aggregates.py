@@ -3,7 +3,10 @@
 ``group_agg`` is the per-batch grouped multi-aggregate (gold.py:11-16);
 ``incremental_fold`` is the running-total maintenance the reference performs
 with MERGE update expressions (gold.py:19-45, A2/J2) expressed as a pure
-DataFrame fold so it is oracle-checkable without Delta.
+DataFrame fold so it is oracle-checkable without Delta.  ``combine_states``
+is its reference combine step; ``combine_states_arrow`` is the same combine
+on Arrow tables, the form the gold commit folds each bucket with on the
+driver.
 
 Invariant (tested, FIXTURES.md F3): ``fold(batches) == group_agg(union(batches))``
 for sum/count/min/max — the algebraic property that makes incremental
@@ -22,6 +25,8 @@ from __future__ import annotations
 
 from collections.abc import Iterable, Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -88,6 +93,45 @@ def combine_states(state: DataFrame, batch_agg: DataFrame, keys: Sequence[str]) 
         F.greatest(tc("last_event_timestamp"), sc("last_event_timestamp")).alias(
             "last_event_timestamp"
         ),
+    )
+
+
+def combine_states_arrow(state: pa.Table, batch_agg: pa.Table, keys: Sequence[str]) -> pa.Table:
+    """``combine_states`` on Arrow tables: the same full outer join on the
+    group keys and the same arithmetic in the same order (``state +
+    batch``), so every value matches the DataFrame form bit for bit.
+    Extra columns of either input (``updated_at``, a bucket id) are
+    ignored; the output has the key and ``AGG_COLUMNS`` columns."""
+    keys = list(keys)
+    folded = ["cumulative_score", "event_count", "first_event_timestamp", "last_event_timestamp"]
+    j = state.select(keys + folded).join(
+        batch_agg.select(keys + folded),
+        keys=keys,
+        join_type="full outer",
+        left_suffix="_t",
+        right_suffix="_s",
+        coalesce_keys=True,
+    )
+    t, s = (lambda c: j[f"{c}_t"]), (lambda c: j[f"{c}_s"])
+    cum = pc.add(
+        pc.coalesce(t("cumulative_score"), pa.scalar(0.0)),
+        pc.coalesce(s("cumulative_score"), pa.scalar(0.0)),
+    )
+    zero = pa.scalar(0, pa.int64())
+    cnt = pc.add(pc.coalesce(t("event_count"), zero), pc.coalesce(s("event_count"), zero))
+    return pa.table(
+        {
+            **{k: j[k] for k in keys},
+            "cumulative_score": cum,
+            "event_count": cnt,
+            "avg_score": pc.divide(cum, pc.cast(cnt, pa.float64())),
+            "first_event_timestamp": pc.min_element_wise(
+                t("first_event_timestamp"), s("first_event_timestamp")
+            ),
+            "last_event_timestamp": pc.max_element_wise(
+                t("last_event_timestamp"), s("last_event_timestamp")
+            ),
+        }
     )
 
 

@@ -27,7 +27,9 @@ Delta CDF (per-trigger work ∝ delta, not history).
 from __future__ import annotations
 
 import os
+import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -39,7 +41,7 @@ from kafka_streaming_spark.io.sinks import (
 )
 from kafka_streaming_spark.io.serving import ParquetServingWriter
 from kafka_streaming_spark.io.sources import file_stream
-from kafka_streaming_spark.ops.aggregates import combine_states, group_agg
+from kafka_streaming_spark.ops.aggregates import combine_states_arrow, group_agg
 from kafka_streaming_spark.ops.dedup import latest_per_key
 from kafka_streaming_spark.ops.projections import derive_event_columns
 from kafka_streaming_spark.schemas import EVENT_SCHEMA, GOLD_SCHEMA, SILVER_SCHEMA
@@ -138,11 +140,11 @@ class MedallionPipeline:
         upsert.  ``least/greatest`` maintenance of first/last timestamps
         (see aggregates.combine_states for the documented deviation).
 
-        One commit path, one driver round-trip: a single collect of the
-        aggregate's (group_id, bucket) pairs — at most |groups| rows — is
-        the empty-batch check and supplies the bucket list the prior read
-        and the state write are restricted to (O(Δ), VERDICT r4 item 3)
-        and the changed-key IN-list of the change feed."""
+        One driver round-trip, the micro-batch's only Spark work: the
+        aggregate with each group's bucket, fetched as Arrow — at most
+        |groups| rows, and none for an empty batch.  ``upsert_state``
+        folds it into the touched buckets with ``combine_states_arrow``
+        and commits on the driver (O(Δ), VERDICT r4 item 3)."""
         if self.gold.version_applied(batch_id):
             # foreachBatch replay after a crash between the gold commit and
             # the checkpoint commit: the running totals already include this
@@ -152,24 +154,17 @@ class MedallionPipeline:
         inserts = batch_df.filter(
             ~F.col("_change_type").isin("update_postimage", "update_preimage", "delete")
         ).drop("_change_type", "_commit_version")
-        # Cached: the per-batch aggregate (≤ |groups| rows) feeds both the
-        # key/bucket collect and the state fold, and must compute once.
-        agg = group_agg(
-            inserts, keys=("group_id",), score_col="score", ts_col="event_timestamp"
-        ).cache()
-        try:
-            keys, buckets = self.gold.key_buckets(agg)
-            if not keys:
-                return
-            prior = self.gold.read_buckets(buckets).drop("updated_at")
-            new_state = combine_states(prior, agg, keys=("group_id",)).withColumn(
-                "updated_at", F.unix_timestamp(F.current_timestamp()) * 1000
-            )
-            self.gold.upsert_state(
-                new_state, changed_keys=keys, version=batch_id, bucket_ids=buckets
-            )
-        finally:
-            agg.unpersist()
+        agg = group_agg(inserts, keys=("group_id",), score_col="score", ts_col="event_timestamp")
+        rows, buckets = self.gold.bucketed_batch(agg)
+        if not buckets:
+            return
+        updated_at = pa.scalar(int(time.time()) * 1000, pa.int64())
+
+        def fold(prior: pa.Table, batch: pa.Table) -> pa.Table:
+            new = combine_states_arrow(prior, batch, keys=("group_id",))
+            return new.append_column("updated_at", pa.repeat(updated_at, new.num_rows))
+
+        self.gold.upsert_state(rows, version=batch_id, bucket_ids=buckets, combine=fold)
 
     def start_silver_to_gold(self, available_now: bool = True, max_files_per_trigger: int = 50):
         """S2: stream the silver change feed in bounded batches of at most

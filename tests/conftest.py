@@ -16,6 +16,11 @@ SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 TMP_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
 
 
+def replace_rows(prior, rows):
+    """An ``upsert_state`` combine that replaces each key's row."""
+    return rows
+
+
 @pytest.fixture(scope="session")
 def spark():
     session = build_session(

@@ -64,6 +64,23 @@ def test_clusters_string_ids_match_union_find(spark):
     assert got["d30"] == "d03" and got["d41"] == "d40"
 
 
+def test_clusters_string_ids_distributed_path(spark):
+    """The distributed pointer-jumping path (``small_graph_limit=0``, as a
+    graph over the limit takes) clusters string ids as the union-find
+    oracle does: its convergence check compares labels, never sums them."""
+    pairs = [
+        ("d03", "d07"), ("d11", "d07"), ("d02", "d05"), ("d05", "d05"),
+        ("d20", "d13"), ("d13", "d30"), ("d30", "d03"), ("d40", "d41"),
+    ] + [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(20)]
+    pairs_df = spark.createDataFrame(pairs, ["id_a", "id_b"])
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in D.dedup_clusters(pairs_df, small_graph_limit=0).collect()
+    }
+    assert got == _union_find(pairs)
+    assert got["c20"] == "c00"
+
+
 def test_arrow_signatures_match_sql(spark):
     """The numpy MinHash kernel must produce bit-identical signatures to the
     pure Column-expression form, for both hash families."""

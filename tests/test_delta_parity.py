@@ -17,12 +17,13 @@ suite, not a smoke test.
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from kafka_streaming_spark.delta_utils import DeltaUnavailableError, _delta
 from kafka_streaming_spark.io.sinks import ParquetUpsertTable
-from kafka_streaming_spark.ops.aggregates import combine_states, group_agg
+from kafka_streaming_spark.ops.aggregates import combine_states_arrow, group_agg
 from kafka_streaming_spark.ops.projections import derive_event_columns
 from kafka_streaming_spark.schemas import EVENT_SCHEMA, SILVER_SCHEMA
 
@@ -195,15 +196,15 @@ def test_gold_invariants_parquet(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("pq_gold_inv"))
     pq = ParquetUpsertTable(spark, f"{root}/pq", GOLD_SCHEMA, keys=("group_id",))
 
+    def fold(prior, batch):
+        state = combine_states_arrow(prior, batch, keys=("group_id",))
+        return state.append_column("updated_at", pa.repeat(pa.scalar(0, pa.int64()), state.num_rows))
+
     def upsert(agg, version):
         if pq.version_applied(version):
             return
-        prior = pq.read().drop("updated_at")
-        state = combine_states(prior, agg, keys=("group_id",)).withColumn(
-            "updated_at", F.lit(0).cast("long")
-        )
-        keys, buckets = pq.key_buckets(agg)
-        pq.upsert_state(state, changed_keys=keys, version=version, bucket_ids=buckets)
+        rows, buckets = pq.bucketed_batch(agg)
+        pq.upsert_state(rows, version=version, bucket_ids=buckets, combine=fold)
 
     _gold_invariants(spark, upsert, pq.read)
 

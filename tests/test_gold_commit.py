@@ -1,0 +1,259 @@
+"""The gold commit (``ParquetUpsertTable.upsert_state`` fed by
+``MedallionPipeline._gold_batch``): the Arrow fold it commits with matches
+``combine_states`` bit for bit, and a crash at any step of its commit,
+followed by the same micro-batch re-offered, neither loses nor double-counts
+an event in the table or its change feed.
+"""
+
+from __future__ import annotations
+
+import os
+
+import pyarrow as pa
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
+
+from kafka_streaming_spark.io import sinks
+from kafka_streaming_spark.io.sinks import ParquetUpsertTable
+from kafka_streaming_spark.ops.aggregates import combine_states, combine_states_arrow
+from kafka_streaming_spark.ops.projections import derive_event_columns
+from kafka_streaming_spark.schemas import EVENT_SCHEMA, GOLD_SCHEMA
+from kafka_streaming_spark.streaming.pipeline import MedallionPipeline
+from tests.conftest import replace_rows
+
+FOLDED = ["cumulative_score", "event_count", "first_event_timestamp", "last_event_timestamp"]
+STATE_COLS = ["group_id", *FOLDED[:2], "avg_score", *FOLDED[2:]]
+
+
+def _bits(v):
+    """Floats by their bit pattern (``-0.0 != 0.0``), everything else as is."""
+    return v.hex() if isinstance(v, float) else v
+
+
+def _rows(table_rows, cols=STATE_COLS) -> dict:
+    return {r["group_id"]: tuple(_bits(r[c]) for c in cols) for r in table_rows}
+
+
+# -- the Arrow fold against combine_states -----------------------------------
+
+_score = st.one_of(
+    st.floats(allow_nan=False, allow_infinity=False, width=64, min_value=-1e12, max_value=1e12),
+    st.sampled_from([0.0, -0.0, 0.1, 1e-300, 2.0**53]),
+)
+_state_row = st.tuples(
+    _score,
+    st.integers(min_value=1, max_value=10**6),
+    st.integers(min_value=0, max_value=10**12),
+    st.integers(min_value=0, max_value=10**12),
+)
+# keys g0..g11: the prior state and the batch draw from the same small space,
+# so a batch mixes keys already present with keys new to the table
+_keyed = st.dictionaries(st.sampled_from([f"g{i}" for i in range(12)]), _state_row, max_size=12)
+
+FOLD_SET = settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+
+
+def _state_table(rows: dict, updated_at: int = 7) -> list[tuple]:
+    return [
+        (k, s, n, s / n, lo, max(lo, hi), updated_at) for k, (s, n, lo, hi) in sorted(rows.items())
+    ]
+
+
+@given(prior=_keyed, batch=_keyed.filter(bool))
+@FOLD_SET
+def test_arrow_fold_matches_combine_states_bit_for_bit(spark, tmp_path_factory, prior, batch):
+    """``combine_states_arrow`` ≡ ``combine_states`` on random keys, and the
+    bucketed commit built on it holds exactly that fold for every batch key
+    (new and present, over several buckets) and the prior rows elsewhere."""
+    prior_rows, batch_rows = _state_table(prior), _state_table(batch, updated_at=9)
+    prior_df = spark.createDataFrame(prior_rows, schema=GOLD_SCHEMA)
+    batch_df = spark.createDataFrame(batch_rows, schema=GOLD_SCHEMA)
+    want = _rows(combine_states(prior_df.drop("updated_at"), batch_df, keys=("group_id",)).collect())
+
+    got = combine_states_arrow(prior_df.toArrow(), batch_df.toArrow(), keys=("group_id",))
+    assert got.column_names == STATE_COLS
+    assert _rows(got.to_pylist()) == want
+
+    gold = ParquetUpsertTable(
+        spark, str(tmp_path_factory.mktemp("fold")), GOLD_SCHEMA, keys=("group_id",), n_buckets=4
+    )
+    if prior_rows:
+        rows, buckets = gold.bucketed_batch(prior_df)
+        gold.upsert_state(rows, version=0, bucket_ids=buckets, combine=replace_rows)
+
+    def fold(old, new):
+        out = combine_states_arrow(old, new, keys=("group_id",))
+        return out.append_column("updated_at", pa.repeat(pa.scalar(9, pa.int64()), out.num_rows))
+
+    rows, buckets = gold.bucketed_batch(batch_df)
+    assert gold.upsert_state(rows, version=1, bucket_ids=buckets, combine=fold)
+    table = _rows(gold.read().collect(), STATE_COLS + ["updated_at"])
+    prior_only = _rows(
+        [dict(zip(GOLD_SCHEMA.names, r)) for r in prior_rows if r[0] not in batch],
+        STATE_COLS + ["updated_at"],
+    )
+    assert table == {**prior_only, **{k: v + (9,) for k, v in want.items() if k in batch}}
+    assert gold._buckets_in(1) == buckets
+
+
+# -- crash at each commit step, then the same batch re-offered ---------------
+
+
+class Crash(Exception):
+    pass
+
+
+def _arm(monkeypatch, owner, name, should_crash):
+    """Make ``owner.name`` raise ``Crash`` at the first call whose
+    arguments satisfy ``should_crash(args, calls_so_far)``."""
+    inner = getattr(owner, name)
+    calls: list = []
+
+    def hooked(*args, **kwargs):
+        if should_crash(args, calls):
+            raise Crash(name)
+        calls.append(args)
+        return inner(*args, **kwargs)
+
+    monkeypatch.setattr(owner, name, hooked)
+
+
+def _after_bucket_files(monkeypatch):
+    _arm(monkeypatch, sinks.pq, "write_table",
+         lambda a, calls: "/data/v_" in str(a[1]) and len(calls) >= 2)
+
+
+def _after_success(monkeypatch):
+    _arm(monkeypatch, sinks.pq, "write_table", lambda a, calls: "/stage/" in str(a[1]))
+
+
+def _after_preimage_rename(monkeypatch):
+    _arm(monkeypatch, sinks.os, "rename", lambda a, calls: "_update_postimage_" in str(a[0]))
+
+
+def _after_postimage_rename(monkeypatch):
+    _arm(monkeypatch, sinks.os, "rename", lambda a, calls: "_insert_" in str(a[0]))
+
+
+#: (fault, True when the fault interrupts the commit before it is final)
+FAULTS = [
+    (_after_bucket_files, True),
+    (_after_success, True),
+    (_after_preimage_rename, True),
+    (_after_postimage_rename, True),
+    (None, False),  # after the last rename: the checkpoint commit is lost
+]
+
+
+def _events(v: int) -> list[tuple]:
+    """Batch ``v``: three events for each of groups g0..g(11+4v), so every
+    batch after the first updates groups the table holds and adds new
+    ones, across many buckets.  Scores are multiples of 1/4, so every sum
+    is exact in any order."""
+    base_ms = 1_700_000_000_000 + v * 600_000
+    return [
+        (f"e{v}_{g}_{i}", f"g{g}", ((v + 1) * (g + 1) * (i + 1) % 37) / 4, base_ms + (g * 3 + i) * 1000)
+        for g in range(12 + 4 * v)
+        for i in range(3)
+    ]
+
+
+def _check_cdf(cdf_rows: list, n_versions: int) -> None:
+    """Per version: one postimage or insert per changed key, a preimage
+    exactly for the keys the table held, equal to that key's last
+    committed row — so no key is counted twice."""
+    by_version: dict[int, dict[str, list]] = {}
+    for r in cdf_rows:
+        by_version.setdefault(r["_commit_version"], {}).setdefault(r["_change_type"], []).append(r)
+    assert sorted(by_version) == list(range(n_versions))
+    last: dict[str, tuple] = {}
+    for v in range(n_versions):
+        types = by_version[v]
+        assert set(types) <= {"update_preimage", "update_postimage", "insert"}
+        pre = _rows(types.get("update_preimage", []))
+        post = _rows(types.get("update_postimage", []))
+        ins = _rows(types.get("insert", []))
+        n_rows = {t: len(rs) for t, rs in types.items()}
+        assert n_rows.get("update_preimage", 0) == len(pre), f"v{v}: duplicate preimage"
+        assert n_rows.get("update_postimage", 0) == len(post), f"v{v}: duplicate postimage"
+        assert n_rows.get("insert", 0) == len(ins), f"v{v}: duplicate insert"
+        assert set(pre) == set(post) and not set(post) & set(ins)
+        assert set(pre) == set(post) & set(last) and not set(ins) & set(last)
+        assert pre == {k: last[k] for k in pre}, f"v{v}: preimage is not the prior row"
+        last.update(post)
+        last.update(ins)
+
+
+def test_gold_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, monkeypatch):
+    """Batch v crashes at step v of the gold commit (after some bucket
+    files, after ``_SUCCESS``, after the preimage rename, after the
+    postimage rename, after the last rename) and is re-offered with the
+    same batch id, as a restarted query does.  After each: the table is the
+    pyarrow aggregate of every event so far, and the change feed holds one
+    image set per version with each key once."""
+    root = str(tmp_path_factory.mktemp("goldcrash"))
+    pipe = MedallionPipeline(spark, root)
+    silver_cols = [f.name for f in pipe.silver.schema.fields]
+    events: list[tuple] = []
+    for v, (fault, interrupts) in enumerate(FAULTS):
+        batch = _events(v)
+        events += batch
+        pipe.silver.insert_if_absent(
+            derive_event_columns(spark.createDataFrame(batch, schema=EVENT_SCHEMA)).select(*silver_cols),
+            version=v,
+            prune_col="minute_timestamp",
+        )
+        batch_df = pipe.silver.read_cdf(starting_version=v).filter(F.col("_commit_version") == v)
+
+        with monkeypatch.context() as m:
+            if fault is not None:
+                fault(m)
+                with pytest.raises(Crash):
+                    pipe._gold_batch(batch_df, v)
+            else:
+                pipe._gold_batch(batch_df, v)
+        assert pipe.gold.version_applied(v) is not interrupts
+        pipe._gold_batch(batch_df, v)  # restart: the same batch re-offered
+        assert pipe.gold.version_applied(v)
+        assert not os.path.exists(f"{root}/gold/stage/cdf_{v}")
+
+        want = (
+            pa.Table.from_pylist([dict(zip(EVENT_SCHEMA.names, e)) for e in events])
+            .group_by("group_id")
+            .aggregate([("score", "sum"), ("score", "count"),
+                        ("event_timestamp", "min"), ("event_timestamp", "max")])
+        )
+        want_rows = {
+            r["group_id"]: (r["score_sum"], r["score_count"], r["score_sum"] / r["score_count"],
+                            r["event_timestamp_min"], r["event_timestamp_max"])
+            for r in want.to_pylist()
+        }
+        gold = {
+            r["group_id"]: tuple(r[c] for c in STATE_COLS[1:]) for r in pipe.gold.read().collect()
+        }
+        assert gold == want_rows, f"gold diverged after the fault at v{v}"
+        _check_cdf(pipe.gold.read_cdf().collect(), v + 1)
+        # each key's newest postimage/insert in the feed is its table row
+        assert _last_images(pipe) == {k: tuple(map(_bits, row)) for k, row in gold.items()}
+    # every commit wrote one file per touched bucket and at most three cdf files
+    for v in range(len(FAULTS)):
+        files = [n for n in os.listdir(pipe.gold.cdf_dir) if n.startswith(f"v{v}_")]
+        assert 1 <= len(files) <= 3
+        for b in pipe.gold._buckets_in(v):
+            d = f"{root}/gold/data/v_{v}/__bucket={b}"
+            assert len([n for n in os.listdir(d) if n.endswith(".parquet")]) == 1
+
+
+def _last_images(pipe) -> dict:
+    """group_id → its newest postimage/insert row in the gold change feed."""
+    rows = pipe.gold.read_cdf(change_types=["update_postimage", "insert"]).collect()
+    last: dict = {}
+    for r in sorted(rows, key=lambda r: r["_commit_version"]):
+        last[r["group_id"]] = tuple(_bits(r[c]) for c in STATE_COLS[1:])
+    return last

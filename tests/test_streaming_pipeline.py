@@ -14,12 +14,12 @@ from kafka_streaming_spark.ops.aggregates import group_agg
 from kafka_streaming_spark.ops.projections import derive_event_columns, normalize_events
 from kafka_streaming_spark.schemas import EVENT_SCHEMA, load_table
 from kafka_streaming_spark.streaming.pipeline import MedallionPipeline
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, replace_rows
 
 #: Spark jobs per micro-batch of one silver insert / one gold commit in
 #: ``test_commit_jobs_per_micro_batch`` (measured; lower is better).
 B2S_JOBS = 3.0
-S2G_JOBS = 5.5
+S2G_JOBS = 2.0
 
 
 def _write_event_source(spark, events_df, path, n_files=4):
@@ -549,13 +549,13 @@ def test_cdf_emits_preimages_and_t4_routing(spark, tmp_path_factory):
         return spark.createDataFrame(rows, schema=GOLD_SCHEMA)
 
     s0 = [("g1", 1.0, 1, 1.0, 0, 0, 0), ("g2", 2.0, 1, 2.0, 0, 0, 0)]
-    keys, buckets = gold.key_buckets(mk_state(s0))
-    gold.upsert_state(mk_state(s0), changed_keys=keys, version=0, bucket_ids=buckets)
+    rows, buckets = gold.bucketed_batch(mk_state(s0))
+    gold.upsert_state(rows, version=0, bucket_ids=buckets, combine=replace_rows)
     # v1 changes g1 and adds g3, a key the table has never held
     s1 = [("g1", 4.0, 2, 2.0, 0, 5, 1), ("g2", 2.0, 1, 2.0, 0, 0, 0), ("g3", 7.0, 1, 7.0, 0, 5, 1)]
     changed = mk_state([r for r in s1 if r[0] != "g2"])
-    keys, buckets = gold.key_buckets(changed)
-    gold.upsert_state(mk_state(s1), changed_keys=keys, version=1, bucket_ids=buckets)
+    rows, buckets = gold.bucketed_batch(changed)
+    gold.upsert_state(rows, version=1, bucket_ids=buckets, combine=replace_rows)
 
     cdf = gold.read_cdf()
     by_type = {
@@ -644,25 +644,18 @@ def test_upsert_commit_is_bucket_bounded_o_delta(spark, tmp_path_factory):
         return spark.createDataFrame(rows, schema=GOLD_SCHEMA)
 
     s0 = [(f"g{i}", float(i), 1, float(i), 0, 0, 0) for i in range(200)]
-    keys, buckets = gold.key_buckets(mk_state(s0))
-    gold.upsert_state(mk_state(s0), changed_keys=keys, version=0, bucket_ids=buckets)
+    rows, buckets = gold.bucketed_batch(mk_state(s0))
+    gold.upsert_state(rows, version=0, bucket_ids=buckets, combine=replace_rows)
     assert len(gold._buckets_in(0)) == 8  # 200 keys cover all 8 buckets
 
     s1_changed = [("g7", 99.0, 2, 49.5, 0, 5, 1)]
     # caller passes ONLY the changed key's post-state + its bucket (the
-    # O(delta) contract the gold stage uses)
+    # O(delta) contract the gold stage uses); the commit carries the
+    # bucket's other rows over
     changed = mk_state(s1_changed)
-    keys, buckets = gold.key_buckets(changed)
+    rows, buckets = gold.bucketed_batch(changed)
     assert len(buckets) == 1
-    # new bucket state = prior bucket content with g7 replaced
-    prior_bucket = gold.read_buckets(buckets)
-    new_bucket_state = prior_bucket.filter("group_id != 'g7'").unionByName(changed)
-    gold.upsert_state(
-        new_bucket_state,
-        changed_keys=keys,
-        version=1,
-        bucket_ids=buckets,
-    )
+    gold.upsert_state(rows, version=1, bucket_ids=buckets, combine=replace_rows)
 
     assert gold._buckets_in(1) == buckets  # exactly ONE bucket rewritten
     v0_rows = 200
@@ -686,8 +679,8 @@ def test_upsert_commit_is_bucket_bounded_o_delta(spark, tmp_path_factory):
 
     # once every bucket is rewritten, vacuum can drop v0
     s_all = [(f"g{i}", float(i) + 0.5, 2, float(i), 0, 0, 0) for i in range(200)]
-    keys, buckets = gold.key_buckets(mk_state(s_all))
-    gold.upsert_state(mk_state(s_all), changed_keys=keys, version=2, bucket_ids=buckets)
+    rows, buckets = gold.bucketed_batch(mk_state(s_all))
+    gold.upsert_state(rows, version=2, bucket_ids=buckets, combine=replace_rows)
     gold.vacuum(keep_last=1)
     assert not os.path.exists(f"{root}/gold/data/v_0")
     assert not os.path.exists(f"{root}/gold/data/v_1")
@@ -698,8 +691,9 @@ def test_bucketed_upsert_random_commit_sequences(spark, tmp_path_factory):
     """Property-style torture of the O(Δ) bucketed state store: a
     deterministic pseudo-random sequence of commits (varying key subsets),
     interleaved replays (same version re-offered), a crash-redo (state
-    dir committed, CDF registration lost), and vacuums — after every
-    step, read() must equal a plain dict fold of the same sequence."""
+    dir committed, CDF registration lost: the version is redone in full),
+    and vacuums — after every step, read() must equal a plain dict fold of
+    the same sequence."""
     import os
     import random
     import shutil
@@ -726,36 +720,23 @@ def test_bucketed_upsert_random_commit_sequences(spark, tmp_path_factory):
         new_vals = [(k, float(step * 100 + i)) for i, k in enumerate(changed)]
         for k, v in new_vals:
             ref[k] = v
-        changed_df = mk_state(new_vals)
-        changed_keys, buckets = gold.key_buckets(changed_df)
-        # new bucket state = prior bucket rows with changed keys replaced
-        prior = gold.read_buckets(buckets)
-        keep = prior.filter(~F.col("group_id").isin(changed))
-        gold.upsert_state(
-            keep.unionByName(changed_df),
-            changed_keys=changed_keys,
-            version=version,
-            bucket_ids=buckets,
-        )
+        # the commit replaces the changed keys' rows in their buckets
+        rows, buckets = gold.bucketed_batch(mk_state(new_vals))
+        gold.upsert_state(rows, version=version, bucket_ids=buckets, combine=replace_rows)
         if step == 2:
             # replay: same version re-offered after a "crash" — no-op
             assert gold.upsert_state(
-                changed_df, changed_keys, version=version, bucket_ids=buckets
+                rows, version=version, bucket_ids=buckets, combine=replace_rows
             ) is False
         if step == 3:
             # crash-redo: wipe this version's CDF files (state committed,
-            # registration lost) and re-offer — must redo only the CDF step
+            # registration lost) and re-offer — the version is redone
             for name in os.listdir(gold.cdf_dir):
                 if name.startswith(f"v{version}_"):
                     os.remove(f"{gold.cdf_dir}/{name}")
             assert not gold.version_applied(version)
             assert gold.upsert_state(
-                gold.read_buckets(buckets).filter(
-                    F.col("group_id").isin([k for k, _ in new_vals])
-                ),
-                changed_keys,
-                version=version,
-                bucket_ids=buckets,
+                rows, version=version, bucket_ids=buckets, combine=replace_rows
             ) is True
         if step in (2, 4):
             gold.vacuum(keep_last=2)
