@@ -2,7 +2,8 @@
 
 Every function probes for delta-spark at call time and raises a clear
 ``DeltaUnavailableError`` when it is absent — the rest of the engine runs on
-plain parquet via ``io.sinks.ParquetUpsertTable``, whose method surface
+plain parquet via ``io.sinks.ParquetAppendTable`` (insert-only MERGE) and
+``io.sinks.ParquetUpsertTable`` (keyed upsert MERGE), whose method surface
 mirrors the Delta-backed operations here so pipelines are backend-agnostic.
 
 Reference sites: table builder with liquid clustering + CDF + auto-optimize
@@ -55,8 +56,8 @@ def _delta():
         return DeltaTable
     except ImportError as exc:  # pragma: no cover - environment-dependent
         raise DeltaUnavailableError(
-            "delta-spark is not installed; use io.sinks.ParquetUpsertTable "
-            "for the parquet-backed equivalents"
+            "delta-spark is not installed; use io.sinks.ParquetAppendTable / "
+            "ParquetUpsertTable for the parquet-backed equivalents"
         ) from exc
 
 

@@ -5,12 +5,20 @@ from kafka_streaming_spark.io.sources import (
     kafka_stream,
     rate_stream,
 )
-from kafka_streaming_spark.io.sinks import ParquetUpsertTable, start_foreach_batch
+from kafka_streaming_spark.io.serving import ParquetServingWriter, latest_per_id
+from kafka_streaming_spark.io.sinks import (
+    ParquetAppendTable,
+    ParquetUpsertTable,
+    start_foreach_batch,
+)
 
 __all__ = [
     "file_stream",
     "kafka_stream",
     "rate_stream",
+    "ParquetAppendTable",
     "ParquetUpsertTable",
+    "ParquetServingWriter",
+    "latest_per_id",
     "start_foreach_batch",
 ]

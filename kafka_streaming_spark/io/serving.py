@@ -8,15 +8,33 @@ the same pipeline stage can target parquet (broker-free tests), MongoDB
 any future key-value store.
 
 Contract: ``write(df, batch_id)`` receives the batch WITH the ``_id`` column
-already stamped; writers append — last-writer-wins per ``_id`` is resolved
-at read time (J3) or by the store itself (Mongo ``_id`` replacement).
+already stamped, one row per ``_id``; writers append — last-writer-wins per
+``_id`` is resolved at read time by :func:`latest_per_id` (J3) or by the
+store itself (Mongo ``_id`` replacement).
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 from typing import Protocol
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
+
+from kafka_streaming_spark.ops.dedup import latest_per_key
+from kafka_streaming_spark.schemas import GOLD_SCHEMA
+
+#: A serving row: the gold row plus its ``_id`` (= ``group_id``).
+SERVING_SCHEMA = StructType([*GOLD_SCHEMA.fields, StructField("_id", StringType(), True)])
+
+
+def latest_per_id(spark: SparkSession, *paths: str) -> DataFrame:
+    """The serving read rule (J3) over the serving rows in ``paths``: the
+    latest row per ``_id`` by ``updated_at``, ``event_count`` breaking a tie
+    (two commits in one second; a later fold has counted more events)."""
+    rows = spark.read.schema(SERVING_SCHEMA).parquet(*paths)
+    return latest_per_key(rows, ["_id"], "updated_at", tiebreak="event_count")
 
 
 class ServingWriter(Protocol):
@@ -27,7 +45,7 @@ class ServingWriter(Protocol):
 
 class ParquetServingWriter:
     """Append-to-directory serving store (the broker/DB-free stand-in);
-    pair with ``ops.dedup.latest_per_key`` on ``_id`` at read time.
+    read it with :func:`latest_per_id`.
 
     OPTIMIZE-analog (reference utils.py:111-124): an append-only serving
     dir otherwise grows one file set per micro-batch forever, so reads
@@ -40,23 +58,11 @@ class ParquetServingWriter:
     Single-writer, like every table in this engine.
     """
 
-    def __init__(
-        self,
-        path: str,
-        compact_threshold: int | None = 64,
-        key_col: str = "_id",
-        order_col: str = "updated_at",
-        tiebreak: str = "event_count",
-    ):
+    def __init__(self, path: str, compact_threshold: int | None = 64):
         self.path = path
         self.compact_threshold = compact_threshold
-        self.key_col = key_col
-        self.order_col = order_col
-        self.tiebreak = tiebreak
 
     def _files(self) -> list[str]:
-        import os
-
         if not os.path.isdir(self.path):
             return []
         return [
@@ -68,21 +74,12 @@ class ParquetServingWriter:
         if self.compact_threshold and len(self._files()) > self.compact_threshold:
             self.compact(df.sparkSession)
 
-    def compact(self, spark) -> None:
-        import os
-        import shutil
-
-        from kafka_streaming_spark.ops.dedup import latest_per_key
-
+    def compact(self, spark: SparkSession) -> None:
         old = self._files()
         if not old:
             return
-        state = latest_per_key(
-            spark.read.parquet(*old), [self.key_col], self.order_col,
-            tiebreak=self.tiebreak,
-        )
         stage = f"{self.path}/_compact_stage"
-        state.coalesce(1).write.mode("overwrite").parquet(stage)
+        latest_per_id(spark, *old).coalesce(1).write.mode("overwrite").parquet(stage)
         for name in os.listdir(stage):
             if name.endswith(".parquet"):
                 os.rename(f"{stage}/{name}", f"{self.path}/compacted_{name}")

@@ -1,6 +1,7 @@
-"""Sinks (SURVEY.md §2.2): foreachBatch writers and a parquet-backed
-change-tracked table that emulates the Delta surface the reference relies on
-(MERGE targets + Change Data Feed) when delta-spark is not installed.
+"""Sinks (SURVEY.md §2.2): foreachBatch writers and two parquet-backed
+change-tracked tables that emulate the Delta surface the reference relies
+on (MERGE targets + Change Data Feed) when delta-spark is not installed.
+Each table owns its file layout; the pipeline only calls its methods.
 
 The emulation is **single-writer micro-batch** semantics — exactly the
 reference's usage (one streaming query owns each table; foreachBatch bodies
@@ -9,16 +10,29 @@ the real ACID implementation behind the same method names.
 
 Layout::
 
-    <root>/data/v_<version>/__bucket=<b>/   upsert tables: the CHANGED key
-                               buckets of commit <version> (bucket =
+    ParquetAppendTable (silver, insert-only)
+    <root>/data/append/v<version>_insert_<part>.parquet
+                               the data files; commit <version>'s files
+                               are also its change feed (``cdf_dir``)
+
+    ParquetUpsertTable (gold, keyed upserts)
+    <root>/data/v_<version>/__bucket=<b>/   the CHANGED key buckets of
+                               commit <version> (bucket =
                                pmod(hash(keys), n_buckets)), one file each;
                                the current state of a bucket is its newest
                                finalized version dir
     <root>/data/v_<version>/_SUCCESS        finalizes the version; lists
                                the change-feed files of its commit
-    <root>/data/append/        append-only data files (insert-only tables)
     <root>/cdf/                flat change-feed dir; every file is named
                                ``v<version>_<change_type>_<name>.parquet``
+
+    both: <root>/stage/        staged writes of an open commit
+
+An insert-only commit's change feed is exactly the rows it inserts (the
+reference's silver MERGE, silver.py:22-40), so ``ParquetAppendTable``
+keeps no second copy: a committed file is in the feed the moment its
+rename lands, and a commit interrupted between renames leaves every row
+it committed in both the table and the feed.
 
 Commits are **O(Δ), not O(|state|)**: ``upsert_state`` writes only the
 buckets containing changed keys — the same file-granularity Delta MERGE
@@ -26,7 +40,7 @@ gets from rewriting only the files with matched rows — so a 1-key commit
 rewrites ~|state|/n_buckets, not the whole table (the round-4 full-state
 rewrite was the one flagged scale-killer on the parquet backend).
 
-One commit path per write mode, one driver round-trip per micro-batch:
+One commit path per table, one driver round-trip per micro-batch:
 ``insert_if_absent`` collects the batch's distinct prune values (the
 IN-list of its anti-join probe and its empty-batch check) and commits
 with one Spark write; ``upsert_state`` takes the caller's per-batch
@@ -46,11 +60,10 @@ crash leaves a version the retry deletes and redoes in full.
 
 Change-feed metadata (``_change_type``, ``_commit_version``) is **derived
 from the file name at read time** (``attach_cdf_metadata``) instead of being
-written into the rows: ``insert_if_absent`` commits just hard-link the
-committed data files into ``cdf/`` — zero extra write amplification per
-micro-batch, the same trick Delta plays by logging file-level actions
-rather than row-level copies; ``upsert_state`` commits write one file per
-change type from the rows the fold already holds.
+written into the rows — no extra write per insert-only commit, the same
+trick Delta plays by logging file-level actions rather than row-level
+copies; ``upsert_state`` commits write one file per change type from the
+rows the fold already holds.
 
 CDF coverage vs Delta: an upsert commit labels its change rows as Delta
 does — a changed key that existed before emits ``update_preimage`` (its
@@ -77,6 +90,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
+from kafka_streaming_spark.io.sources import file_stream
+
 #: Regexes over the cdf file name (see module docstring).
 _VERSION_RE = r"/v(\d+)_"
 _CTYPE_RE = r"/v\d+_(insert|update_preimage|update_postimage|delete)_"
@@ -94,19 +109,127 @@ def attach_cdf_metadata(df: DataFrame) -> DataFrame:
     ).withColumn("_commit_version", F.regexp_extract(fname, _VERSION_RE, 1).cast("long"))
 
 
-class ParquetUpsertTable:
-    """A change-tracked table on plain parquet.
+class _ParquetTable:
+    """What both tables share: schema, keys and the change-feed reads over
+    ``cdf_dir``, whose file names carry the change metadata."""
 
-    Two write modes:
+    cdf_dir: str
 
-    - ``insert_if_absent`` (silver pattern, J1): append-only; new rows are
-      the rows whose key is absent from current data (anti-join with bucket
-      pruning, silver.py:22-40);
-    - ``upsert_state`` (gold pattern, J2): versioned commit of the changed
-      key-buckets; the caller's combine (e.g. ``combine_states_arrow``)
-      folds the batch into each bucket on the driver, and the changed
-      keys' rows are logged to the change feed.
-    """
+    def __init__(self, spark: SparkSession, root: str, schema: StructType, keys: Sequence[str]):
+        self.spark = spark
+        self.root = root.rstrip("/")
+        self.schema = schema
+        self.keys = list(keys)
+
+    def _empty(self) -> DataFrame:
+        # limit(0) makes the plan a known-empty relation, so a join or
+        # union against it folds away instead of costing a shuffle job
+        return self.spark.createDataFrame([], self.schema).limit(0)
+
+    def _scan(self, path: str) -> DataFrame:
+        """The parquet files in ``path``, or a known-empty relation."""
+        if not any(f.endswith(".parquet") for f in os.listdir(path)):
+            return self._empty()
+        return self.spark.read.schema(self.schema).parquet(path)
+
+    def read_cdf(
+        self, starting_version: int = 0, change_types: Sequence[str] | None = None
+    ) -> DataFrame:
+        """S2/S3: change rows since ``starting_version`` with ``_change_type``
+        and ``_commit_version`` metadata (T4 routing via ``change_types``)."""
+        df = attach_cdf_metadata(self._scan(self.cdf_dir))
+        df = df.filter(F.col("_commit_version") >= starting_version)
+        if change_types:
+            df = df.filter(F.col("_change_type").isin(list(change_types)))
+        return df
+
+    def stream_cdf(self, max_files_per_trigger: int) -> DataFrame:
+        """S2/S3 as a stream: a file stream over ``cdf_dir`` with the same
+        metadata, so each commit becomes a downstream micro-batch — the
+        incremental-view-maintenance property the reference gets from
+        Delta CDF (per-trigger work ∝ delta, not history)."""
+        raw = file_stream(
+            self.spark, self.cdf_dir, self.schema, max_files_per_trigger=max_files_per_trigger
+        )
+        return attach_cdf_metadata(raw)
+
+
+class ParquetAppendTable(_ParquetTable):
+    """An insert-only table on plain parquet (silver pattern, J1): a commit
+    appends the batch rows whose key is absent from the table (anti-join
+    with IN-list pruning, silver.py:22-40).  Its data files are its change
+    feed: commit ``N`` names them ``v<N>_insert_<part>.parquet``, and
+    ``cdf_dir`` is the data dir itself."""
+
+    def __init__(self, spark: SparkSession, root: str, schema: StructType, keys: Sequence[str]):
+        super().__init__(spark, root, schema, keys)
+        os.makedirs(self.cdf_dir, exist_ok=True)
+
+    @property
+    def cdf_dir(self) -> str:
+        return f"{self.root}/data/append"
+
+    def read(self) -> DataFrame:
+        """Current table state (S4 batch scan of the merge target)."""
+        return self._scan(self.cdf_dir)
+
+    def insert_if_absent(
+        self,
+        batch: DataFrame,
+        version: int,
+        prune_col: str | None = None,
+        batch_unique: bool = False,
+    ) -> None:
+        """J1: append the batch rows whose key is not present yet.
+
+        ``prune_col`` restricts the existing-keys probe to the batch's
+        values of that column (F3, silver.py:22-28's "Prune IN List"): one
+        collect of the distinct values, spliced into the scan as an IN-list
+        the parquet reader pushes down.  ``prune_col`` must be part of
+        ``keys`` (it is the reference's ``minute_timestamp``, part of the
+        MERGE key).  The same collect is the empty-batch check: a batch
+        with no values commits nothing (watermark eviction under
+        availableNow ends on such a batch).
+
+        ``batch_unique=True`` skips the within-batch dropDuplicates — one
+        full shuffle of every micro-batch — for callers whose upstream
+        already guarantees key uniqueness (the medallion pipeline's
+        dropDuplicatesWithinWatermark does exactly this; replayed/cross-
+        batch duplicates are still caught by the anti-join).
+
+        Commit protocol: the anti-join's rows are written to a stage dir,
+        then each file is renamed into the data dir (the rename is the
+        commit, mirroring Delta's write-files-then-commit protocol; the
+        stage keeps the write out of the directory the plan reads).
+        Idempotent under micro-batch replay (same ``version`` re-offered
+        after a crash at any step): the anti-join excludes the rows an
+        earlier attempt already renamed, and the rest land under fresh
+        part names with the same version prefix — each row in one file.
+        """
+        deduped = batch if batch_unique else batch.dropDuplicates(self.keys)
+        current = self.read().select(*self.keys)
+        if prune_col is not None:
+            values = [r[0] for r in batch.select(prune_col).distinct().collect()]
+            if not values:
+                return
+            current = current.filter(F.col(prune_col).isin(values))
+        fresh = deduped.join(current, on=self.keys, how="left_anti").select(
+            *[f.name for f in self.schema.fields]
+        )
+        stage = f"{self.root}/stage/{version}"
+        fresh.write.mode("overwrite").parquet(stage)
+        for name in sorted(os.listdir(stage)):
+            if name.endswith(".parquet"):
+                os.rename(f"{stage}/{name}", f"{self.cdf_dir}/v{version}_insert_{name}")
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+class ParquetUpsertTable(_ParquetTable):
+    """A keyed table on plain parquet (gold pattern, J2): ``upsert_state``
+    commits the changed key-buckets as a new version; the caller's combine
+    (e.g. ``combine_states_arrow``) folds the batch into each bucket on the
+    driver, and the changed keys' rows are logged to the change feed in
+    ``cdf/``."""
 
     def __init__(
         self,
@@ -116,15 +239,12 @@ class ParquetUpsertTable:
         keys: Sequence[str],
         n_buckets: int = 32,
     ):
-        self.spark = spark
-        self.root = root.rstrip("/")
-        self.schema = schema
-        self.keys = list(keys)
+        super().__init__(spark, root, schema, keys)
         self._arrow_schema = pa.schema(
             [f.with_nullable(True) for f in to_arrow_schema(schema)]
         )
         os.makedirs(f"{self.root}/data", exist_ok=True)
-        os.makedirs(f"{self.root}/cdf", exist_ok=True)
+        os.makedirs(self.cdf_dir, exist_ok=True)
         meta = f"{self.root}/_table_meta.json"
         if os.path.exists(meta):
             # bucket count is a physical-layout property: honor the value
@@ -210,19 +330,19 @@ class ParquetUpsertTable:
                 latest[b] = v
         return latest
 
-    def read_buckets(self, bucket_ids: Sequence[int] | None = None) -> DataFrame:
-        """Current state of the given buckets (all buckets when None) —
-        the O(Δ) read side: a reader of k buckets scans those k buckets'
-        files only."""
+    def read_buckets(self) -> DataFrame:
+        """Current table state: each bucket's newest finalized version
+        dir — the parquet-mirror analogue of a Delta log replay."""
         latest = self._latest_buckets()
-        if bucket_ids is not None:
-            wanted = set(bucket_ids)
-            latest = {b: v for b, v in latest.items() if b in wanted}
         if not latest:
             return self._empty()
         return self.spark.read.schema(self.schema).parquet(
             *[f"{self.root}/data/v_{v}/__bucket={b}" for b, v in sorted(latest.items())]
         )
+
+    def read(self) -> DataFrame:
+        """Current table state (S4 batch scan of the merge target)."""
+        return self.read_buckets()
 
     def _read_bucket(self, version: int, bucket: int) -> pa.Table:
         """One bucket dir of one version, read on the driver with pyarrow."""
@@ -241,98 +361,7 @@ class ParquetUpsertTable:
         fields = [f for f in self._arrow_schema if f.name in table.column_names]
         return table.select([f.name for f in fields]).cast(pa.schema(fields))
 
-    # -- reads ------------------------------------------------------------
-
-    def _empty(self) -> DataFrame:
-        # limit(0) makes the plan a known-empty relation, so a join or
-        # union against it folds away instead of costing a shuffle job
-        return self.spark.createDataFrame([], self.schema).limit(0)
-
-    def read(self) -> DataFrame:
-        """Current table state (S4 batch scan of the merge target): the
-        append dir for insert-only tables, the per-bucket-latest assembly
-        for upsert tables."""
-        append_dir = f"{self.root}/data/append"
-        if os.path.isdir(append_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(append_dir)
-        ):
-            return self.spark.read.schema(self.schema).parquet(append_dir)
-        return self.read_buckets()
-
-    def read_cdf(
-        self, starting_version: int = 0, change_types: Sequence[str] | None = None
-    ) -> DataFrame:
-        """S2/S3: change rows since ``starting_version`` with ``_change_type``
-        and ``_commit_version`` metadata (T4 routing via ``change_types``)."""
-        if not any(f.endswith(".parquet") for f in os.listdir(self.cdf_dir)):
-            return attach_cdf_metadata(self._empty())
-        df = attach_cdf_metadata(self.spark.read.schema(self.schema).parquet(self.cdf_dir))
-        df = df.filter(F.col("_commit_version") >= starting_version)
-        if change_types:
-            df = df.filter(F.col("_change_type").isin(list(change_types)))
-        return df
-
     # -- writes -----------------------------------------------------------
-
-    def _link_to_cdf(self, files: list[str], change_type: str, version: int) -> None:
-        """Register committed files in the change feed via hard links (copy
-        fallback) — no row rewrite, file-action-level logging like Delta."""
-        for path in files:
-            dst = f"{self.cdf_dir}/v{version}_{change_type}_{os.path.basename(path)}"
-            try:
-                os.link(path, dst)
-            except OSError:
-                shutil.copy2(path, dst)
-
-    def insert_if_absent(
-        self,
-        batch: DataFrame,
-        version: int,
-        prune_col: str | None = None,
-        batch_unique: bool = False,
-    ) -> None:
-        """J1: append the batch rows whose key is not present yet.
-
-        ``prune_col`` restricts the existing-keys probe to the batch's
-        values of that column (F3, silver.py:22-28's "Prune IN List"): one
-        collect of the distinct values, spliced into the scan as an IN-list
-        the parquet reader pushes down.  ``prune_col`` must be part of
-        ``keys`` (it is the reference's ``minute_timestamp``, part of the
-        MERGE key).  The same collect is the empty-batch check: a batch
-        with no values commits nothing (watermark eviction under
-        availableNow ends on such a batch).
-
-        ``batch_unique=True`` skips the within-batch dropDuplicates — one
-        full shuffle of every micro-batch — for callers whose upstream
-        already guarantees key uniqueness (the medallion pipeline's
-        dropDuplicatesWithinWatermark does exactly this; replayed/cross-
-        batch duplicates are still caught by the anti-join).
-        """
-        deduped = batch if batch_unique else batch.dropDuplicates(self.keys)
-        current = self.read().select(*self.keys)
-        if prune_col is not None:
-            values = [r[0] for r in batch.select(prune_col).distinct().collect()]
-            if not values:
-                return
-            current = current.filter(F.col(prune_col).isin(values))
-        fresh = deduped.join(current, on=self.keys, how="left_anti").select(
-            *[f.name for f in self.schema.fields]
-        )
-        # Stage → rename: never write into a directory the plan is reading
-        # (the staged write materializes the anti-join; the rename is the
-        # commit, mirroring Delta's write-files-then-commit protocol).
-        stage = f"{self.root}/stage/{version}"
-        fresh.write.mode("overwrite").parquet(stage)
-        append_dir = f"{self.root}/data/append"
-        os.makedirs(append_dir, exist_ok=True)
-        committed: list[str] = []
-        for name in sorted(os.listdir(stage)):
-            if name.endswith(".parquet"):
-                dst = f"{append_dir}/v{version}_{name}"
-                os.rename(f"{stage}/{name}", dst)
-                committed.append(dst)
-        shutil.rmtree(stage, ignore_errors=True)
-        self._link_to_cdf(committed, "insert", version)
 
     def bucketed_batch(self, df: DataFrame) -> tuple[pa.Table, list[int]]:
         """The one driver round-trip of an upsert: ``df`` (a per-batch
@@ -453,11 +482,12 @@ def start_foreach_batch(
     checkpoint: str,
     query_name: str,
     available_now: bool = False,
-    processing_time: str = "0 seconds",
 ):
     """K1/K2/K3 writer shape: ``foreachBatch`` + checkpoint + trigger
     (silver.py:69-77, gold.py:61-69, tomongo.py:30-35).  ``available_now``
-    runs the backlog to completion and stops — the finite-test trigger."""
+    runs the backlog to completion and stops — the finite-test trigger;
+    otherwise each batch starts as soon as the last one ends
+    (``processingTime="0 seconds"``, the reference's config.py:21)."""
     writer = (
         df.writeStream.foreachBatch(fn)
         .outputMode("update")
@@ -467,5 +497,5 @@ def start_foreach_batch(
     if available_now:
         writer = writer.trigger(availableNow=True)
     else:
-        writer = writer.trigger(processingTime=processing_time)
+        writer = writer.trigger(processingTime="0 seconds")
     return writer.start()

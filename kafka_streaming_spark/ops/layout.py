@@ -97,8 +97,8 @@ def optimize_parquet(
 ) -> int:
     """OPTIMIZE analog for a parquet directory (reference utils.py:111-124
     semantics on the parquet backend): compact small files and optionally
-    Z-order by ``zorder_by``.  Stage-then-rename, same crash protocol as
-    ``ParquetUpsertTable``: the old files are removed only after the staged
+    Z-order by ``zorder_by``.  Stage-then-rename, the crash protocol of the
+    ``io.sinks`` tables: the old files are removed only after the staged
     replacement is fully written.  Returns the new file count."""
     df = spark.read.parquet(path)
     if target_files is None:

@@ -14,37 +14,36 @@ Topology (reference → engine):
    feed → drop preimages → key-replaced write to a serving table
    (last-writer-wins per ``group_id``, J3).
 
-Backend: ``ParquetUpsertTable`` (plain parquet + emulated CDF) so the whole
-pipeline runs with only pyspark; with delta-spark installed the same stages
-target real Delta tables via ``delta_utils`` (same method shapes).
+Backend: plain parquet, so the whole pipeline runs with only pyspark —
+silver is a ``ParquetAppendTable``, gold a ``ParquetUpsertTable``, serving
+a pluggable writer (``io.serving``); with delta-spark installed the same
+stages target real Delta tables via ``delta_utils`` (same method shapes).
+Each table owns its file layout; this module only calls its methods.
 
-The change feeds between stages are consumed as *file streams over the cdf
-directories* — each upstream commit becomes a downstream micro-batch, which
-is exactly the incremental-view-maintenance property the reference gets from
-Delta CDF (per-trigger work ∝ delta, not history).
+The change feeds between stages are consumed as streams (``stream_cdf``)
+— each upstream commit becomes a downstream micro-batch, which is exactly
+the incremental-view-maintenance property the reference gets from Delta
+CDF (per-trigger work ∝ delta, not history).
 """
 
 from __future__ import annotations
 
-import os
 import time
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
+from kafka_streaming_spark.io.serving import ParquetServingWriter, latest_per_id
 from kafka_streaming_spark.io.sinks import (
+    ParquetAppendTable,
     ParquetUpsertTable,
-    attach_cdf_metadata,
     start_foreach_batch,
 )
-from kafka_streaming_spark.io.serving import ParquetServingWriter
-from kafka_streaming_spark.io.sources import file_stream
 from kafka_streaming_spark.ops.aggregates import combine_states_arrow, group_agg
 from kafka_streaming_spark.ops.dedup import latest_per_key
 from kafka_streaming_spark.ops.projections import derive_event_columns
-from kafka_streaming_spark.schemas import EVENT_SCHEMA, GOLD_SCHEMA, SILVER_SCHEMA
+from kafka_streaming_spark.schemas import GOLD_SCHEMA, SILVER_SCHEMA
 
 
 def watermark_dedup(
@@ -57,14 +56,6 @@ def watermark_dedup(
     (silver.py:63,66).  Keeps the first occurrence of each key within the
     watermark window; state lives in the (RocksDB) state store."""
     return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(list(keys))
-
-
-def _cdf_stream(spark, table: ParquetUpsertTable, base: StructType, max_files: int):
-    """S2/S3: stream a table's change feed — file stream over the flat cdf
-    dir with metadata derived from file names (see io.sinks)."""
-    os.makedirs(table.cdf_dir, exist_ok=True)
-    raw = file_stream(spark, table.cdf_dir, base, max_files_per_trigger=max_files)
-    return attach_cdf_metadata(raw)
 
 
 class MedallionPipeline:
@@ -86,7 +77,7 @@ class MedallionPipeline:
         self.spark = spark
         self.root = root.rstrip("/")
         self.watermark_delay = watermark_delay
-        self.silver = ParquetUpsertTable(
+        self.silver = ParquetAppendTable(
             spark, f"{self.root}/silver", SILVER_SCHEMA, keys=("minute_timestamp", "id")
         )
         self.gold = ParquetUpsertTable(
@@ -173,9 +164,8 @@ class MedallionPipeline:
         partition, and a gold commit's fixed cost exceeds a live silver
         commit's, so a tighter bound leaves gold a commit behind per
         batch and its backlog, not its work, sets the latency."""
-        cdf = _cdf_stream(self.spark, self.silver, SILVER_SCHEMA, max_files_per_trigger)
         return start_foreach_batch(
-            cdf,
+            self.silver.stream_cdf(max_files_per_trigger),
             self._gold_batch,
             checkpoint=f"{self.root}/_checkpoints/silver_to_gold",
             query_name="silver_to_gold",
@@ -187,18 +177,24 @@ class MedallionPipeline:
     def _serving_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """K3 body (tomongo.py:6-17): key-replaced append through the
         pluggable writer — ``_id`` = group_id, last-writer-wins at read
-        time (J3) or by the store's ``_id`` replacement."""
+        time (J3) or by the store's ``_id`` replacement.
+
+        A trigger can span several gold versions, each with its own row
+        for a group; only the newest reaches the writer, so a store that
+        replaces by ``_id`` in write order cannot keep a stale one.  The
+        batch is a few small files: on one partition the window needs no
+        shuffle, and the write stays the batch's one Spark job."""
+        images = batch_df.filter("_change_type != 'update_preimage'").coalesce(1)
         out = (
-            batch_df.filter("_change_type != 'update_preimage'")
+            latest_per_key(images, ["group_id"], "_commit_version")
             .drop("_change_type", "_commit_version")
             .withColumn("_id", F.col("group_id"))
         )
         self.serving_writer.write(out, batch_id)
 
     def start_gold_to_serving(self, available_now: bool = True, max_files_per_trigger: int = 16):
-        cdf = _cdf_stream(self.spark, self.gold, GOLD_SCHEMA, max_files_per_trigger)
         return start_foreach_batch(
-            cdf,
+            self.gold.stream_cdf(max_files_per_trigger),
             self._serving_batch,
             checkpoint=f"{self.root}/_checkpoints/gold_to_serving",
             query_name="gold_to_serving",
@@ -245,9 +241,6 @@ class MedallionPipeline:
             q.awaitTermination()
 
     def serving_view(self) -> DataFrame:
-        """J3 read side: latest row per ``_id`` (deterministic via
-        ``_commit-free`` ordering on updated_at, tie-broken by event_count)."""
-        df = self.spark.read.schema(
-            StructType(list(GOLD_SCHEMA.fields) + [StructField("_id", StringType(), True)])
-        ).parquet(self.serving_dir)
-        return latest_per_key(df, ["_id"], "updated_at", tiebreak="event_count")
+        """J3 read side of the parquet serving store: the latest row per
+        ``_id`` (``io.serving.latest_per_id``)."""
+        return latest_per_id(self.spark, self.serving_dir)

@@ -21,6 +21,25 @@ def replace_rows(prior, rows):
     return rows
 
 
+class Crash(Exception):
+    """The fault :func:`_arm` injects."""
+
+
+def _arm(monkeypatch, owner, name, should_crash):
+    """Make ``owner.name`` raise ``Crash`` at the first call whose
+    arguments satisfy ``should_crash(args, calls_so_far)``."""
+    inner = getattr(owner, name)
+    calls: list = []
+
+    def hooked(*args, **kwargs):
+        if should_crash(args, calls):
+            raise Crash(name)
+        calls.append(args)
+        return inner(*args, **kwargs)
+
+    monkeypatch.setattr(owner, name, hooked)
+
+
 @pytest.fixture(scope="session")
 def spark():
     session = build_session(

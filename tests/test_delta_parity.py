@@ -1,5 +1,5 @@
 """SURVEY.md §7 watch-list item 2: the parquet-backed fallback
-(``io.sinks.ParquetUpsertTable``) and the real Delta path
+(``io.sinks.ParquetAppendTable`` / ``ParquetUpsertTable``) and the real Delta path
 (``delta_utils.merge_*``) must produce identical table states for the same
 batch sequence.
 
@@ -22,7 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_streaming_spark.delta_utils import DeltaUnavailableError, _delta
-from kafka_streaming_spark.io.sinks import ParquetUpsertTable
+from kafka_streaming_spark.io.sinks import ParquetAppendTable, ParquetUpsertTable
 from kafka_streaming_spark.ops.aggregates import combine_states_arrow, group_agg
 from kafka_streaming_spark.ops.projections import derive_event_columns
 from kafka_streaming_spark.schemas import EVENT_SCHEMA, SILVER_SCHEMA
@@ -180,7 +180,7 @@ def _gold_invariants(spark, upsert, read):
 
 def test_silver_invariants_parquet(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("pq_silver_inv"))
-    pq = ParquetUpsertTable(
+    pq = ParquetAppendTable(
         spark, f"{root}/pq", SILVER_SCHEMA, keys=("minute_timestamp", "id")
     )
 

@@ -21,7 +21,7 @@ from kafka_streaming_spark.ops.aggregates import combine_states, combine_states_
 from kafka_streaming_spark.ops.projections import derive_event_columns
 from kafka_streaming_spark.schemas import EVENT_SCHEMA, GOLD_SCHEMA
 from kafka_streaming_spark.streaming.pipeline import MedallionPipeline
-from tests.conftest import replace_rows
+from tests.conftest import Crash, _arm, replace_rows
 
 FOLDED = ["cumulative_score", "event_count", "first_event_timestamp", "last_event_timestamp"]
 STATE_COLS = ["group_id", *FOLDED[:2], "avg_score", *FOLDED[2:]]
@@ -103,25 +103,6 @@ def test_arrow_fold_matches_combine_states_bit_for_bit(spark, tmp_path_factory, 
 
 
 # -- crash at each commit step, then the same batch re-offered ---------------
-
-
-class Crash(Exception):
-    pass
-
-
-def _arm(monkeypatch, owner, name, should_crash):
-    """Make ``owner.name`` raise ``Crash`` at the first call whose
-    arguments satisfy ``should_crash(args, calls_so_far)``."""
-    inner = getattr(owner, name)
-    calls: list = []
-
-    def hooked(*args, **kwargs):
-        if should_crash(args, calls):
-            raise Crash(name)
-        calls.append(args)
-        return inner(*args, **kwargs)
-
-    monkeypatch.setattr(owner, name, hooked)
 
 
 def _after_bucket_files(monkeypatch):

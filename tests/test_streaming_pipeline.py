@@ -96,6 +96,43 @@ def test_gold_cdf_reaches_serving(spark, pipeline_result):
     assert merged.filter("event_count != gc").count() == 0
 
 
+def test_serving_gets_one_row_per_id_when_a_trigger_spans_gold_versions(spark, tmp_path_factory):
+    """K3: a gold→serving trigger that spans two gold versions hands the
+    writer one row per ``_id``, the newest, so a store that replaces by
+    ``_id`` in write order (``MongoServingWriter``) cannot keep a stale
+    row; the batch stays one Spark job (no shuffle)."""
+
+    class RecordingWriter:
+        def __init__(self):
+            self.rows = []
+
+        def write(self, df, batch_id):
+            self.rows += df.collect()
+
+    root = str(tmp_path_factory.mktemp("servingspan"))
+    writer = RecordingWriter()
+    pipe = MedallionPipeline(spark, root, serving_writer=writer)
+    base_ms = 1_700_000_000_000
+    batches = [
+        [("a", "g1", 1.0, base_ms), ("b", "g2", 2.0, base_ms + 1_000)],
+        [("c", "g1", 3.0, base_ms + 2_000)],
+    ]
+    silver_cols = [f.name for f in pipe.silver.schema.fields]
+    for v, rows in enumerate(batches):
+        events = derive_event_columns(spark.createDataFrame(rows, schema=EVENT_SCHEMA))
+        pipe.silver.insert_if_absent(events.select(*silver_cols), version=v, prune_col="minute_timestamp")
+        pipe._gold_batch(pipe.silver.read_cdf(starting_version=v), batch_id=v)
+
+    query = pipe.start_gold_to_serving(available_now=True)
+    query.awaitTermination()
+    assert sum(p.numInputRows > 0 for p in query.recentProgress) == 1  # one trigger, both versions
+    assert sorted((r["_id"], r["event_count"], r["cumulative_score"]) for r in writer.rows) == [
+        ("g1", 2, 4.0), ("g2", 1, 2.0),
+    ]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
+    assert len(jobs) == 1, f"gold_to_serving ran {len(jobs)} jobs for one batch"
+
+
 def test_checkpoint_resume_processes_only_new_files(spark, tmp_path_factory):
     """K4 exactly-once: a second availableNow run over the SAME checkpoint
     must process only files that arrived after the first run — replayed
@@ -592,15 +629,11 @@ def test_serving_compaction_bounds_file_count(spark, tmp_path_factory):
     """OPTIMIZE-analog for the serving dir (VERDICT r01 item 10): after N
     append commits the parquet file count stays bounded by the compaction
     threshold and the last-writer-wins view is unchanged."""
-    from kafka_streaming_spark.io.serving import ParquetServingWriter
-    from kafka_streaming_spark.ops.dedup import latest_per_key
-    from kafka_streaming_spark.schemas import GOLD_SCHEMA
-    from pyspark.sql.types import StringType, StructField, StructType
+    from kafka_streaming_spark.io.serving import SERVING_SCHEMA, ParquetServingWriter, latest_per_id
 
     root = str(tmp_path_factory.mktemp("compaction"))
     path = f"{root}/serving"
     writer = ParquetServingWriter(path, compact_threshold=4)
-    schema = StructType(list(GOLD_SCHEMA.fields) + [StructField("_id", StringType(), True)])
 
     n_commits = 12
     for v in range(n_commits):
@@ -609,16 +642,13 @@ def test_serving_compaction_bounds_file_count(spark, tmp_path_factory):
                 ("g1", float(v + 1), v + 1, 1.0, 0, 0, v, "g1"),
                 ("g2", float(2 * (v + 1)), v + 1, 2.0, 0, 0, v, "g2"),
             ],
-            schema=schema,
+            schema=SERVING_SCHEMA,
         )
         writer.write(batch.coalesce(1), batch_id=v)
 
     n_files = len(writer._files())
     assert n_files <= 4 + 1, f"compaction never ran: {n_files} files after {n_commits} commits"
-    view = latest_per_key(
-        spark.read.schema(schema).parquet(path), ["_id"], "updated_at",
-        tiebreak="event_count",
-    )
+    view = latest_per_id(spark, path)
     state = {r["_id"]: (r["cumulative_score"], r["event_count"]) for r in view.collect()}
     assert state == {
         "g1": (float(n_commits), n_commits),
