@@ -40,17 +40,33 @@ gets from rewriting only the files with matched rows — so a 1-key commit
 rewrites ~|state|/n_buckets, not the whole table (the round-4 full-state
 rewrite was the one flagged scale-killer on the parquet backend).
 
-One commit path per table, one driver round-trip per micro-batch:
-``insert_if_absent`` collects the batch's distinct prune values (the
-IN-list of its anti-join probe and its empty-batch check) and commits
-with one Spark write; ``upsert_state`` takes the caller's per-batch
-aggregate as one Arrow table (≤ one row per changed key, with its bucket)
-and commits on the driver with pyarrow — read each touched bucket, fold
-the batch in, write the bucket, then the change feed — so a gold commit
-runs no Spark job of its own, whose fixed cost would dominate a
-micro-batch this size: the gold table holds one row per group, so a
-bucket and the batch aggregate fit the driver.  First commits and replays
-go through the same path as every other commit.
+One commit path per table, one Spark job per micro-batch: the caller's
+batch is fetched to the driver once as Arrow, and everything after that
+fetch runs on the driver with pyarrow, because a Spark job's fixed
+scheduling cost would dominate a micro-batch this size.
+``insert_if_absent`` fetches the batch rows, probes the table's keys with
+a pyarrow dataset scan pruned to the batch's ``prune_col`` values,
+anti-joins and writes the fresh rows; ``upsert_state`` takes the caller's
+batch as one Arrow table (≤ one row per changed key, with its bucket),
+reads each touched bucket, folds the batch in, writes the bucket, then
+the change feed.  First commits and replays go through the same path as
+every other commit.
+
+Driver-memory premise: the driver holds one micro-batch of rows (plus,
+for gold, one bucket), so the source must cap its micro-batches
+(``maxOffsetsPerTrigger``, ``maxFilesPerTrigger``).  The reference caps a
+Kafka micro-batch at 10,000 events.  A fetched silver row with 36-char
+uuid ids is ~115 bytes of Arrow: a 220k-row batch is ~25 MB, and Spark's
+default ``spark.driver.maxResultSize`` of 1 GiB fails the fetch at about
+9M rows.  Nothing checks the cap; a batch past it fails its commit and
+stops the stream, and needs a tighter cap, not a distributed commit.
+
+Commit protocol of ``insert_if_absent`` (crash at any step, then the same
+version re-offered): ``stage/<version>`` cleared, one file per Spark
+partition of the batch written into it, then each file renamed to
+``data/append/v<version>_insert_<part>.parquet`` — the rename is the
+commit.  The retry's probe sees the rows an earlier attempt renamed, so
+each row lands in one file.
 
 Commit protocol of ``upsert_state`` (crash at any step, then the same
 version re-offered): bucket files → ``_SUCCESS`` → change-feed files
@@ -84,6 +100,7 @@ from collections.abc import Callable, Sequence
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -97,6 +114,16 @@ _VERSION_RE = r"/v(\d+)_"
 _CTYPE_RE = r"/v\d+_(insert|update_preimage|update_postimage|delete)_"
 #: Change types of an upsert commit, in the order they land in ``cdf/``.
 _UPSERT_CDF_TYPES = ("update_preimage", "update_postimage", "insert")
+
+
+def _write_json(path: str, obj) -> None:
+    """Write ``obj`` under a temp name, then rename it to ``path``: a crash
+    mid-write leaves no truncated file that every later open would fail
+    to parse."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
 
 
 def attach_cdf_metadata(df: DataFrame) -> DataFrame:
@@ -120,6 +147,9 @@ class _ParquetTable:
         self.root = root.rstrip("/")
         self.schema = schema
         self.keys = list(keys)
+        self._arrow_schema = pa.schema(
+            [f.with_nullable(True) for f in to_arrow_schema(schema)]
+        )
 
     def _empty(self) -> DataFrame:
         # limit(0) makes the plan a known-empty relation, so a join or
@@ -131,6 +161,12 @@ class _ParquetTable:
         if not any(f.endswith(".parquet") for f in os.listdir(path)):
             return self._empty()
         return self.spark.read.schema(self.schema).parquet(path)
+
+    def _conform(self, table: pa.Table) -> pa.Table:
+        """The table's columns of ``table``, cast to their stored types (a
+        Spark-collected batch may carry large strings, a fold int32s)."""
+        fields = [f for f in self._arrow_schema if f.name in table.column_names]
+        return table.select([f.name for f in fields]).cast(pa.schema(fields))
 
     def read_cdf(
         self, starting_version: int = 0, change_types: Sequence[str] | None = None
@@ -182,14 +218,16 @@ class ParquetAppendTable(_ParquetTable):
     ) -> None:
         """J1: append the batch rows whose key is not present yet.
 
+        The batch's one Spark job fetches its rows as Arrow, each tagged
+        with its Spark partition; the rest runs on the driver.  An empty
+        batch commits nothing (watermark eviction under availableNow ends
+        on such a batch).
+
         ``prune_col`` restricts the existing-keys probe to the batch's
-        values of that column (F3, silver.py:22-28's "Prune IN List"): one
-        collect of the distinct values, spliced into the scan as an IN-list
-        the parquet reader pushes down.  ``prune_col`` must be part of
-        ``keys`` (it is the reference's ``minute_timestamp``, part of the
-        MERGE key).  The same collect is the empty-batch check: a batch
-        with no values commits nothing (watermark eviction under
-        availableNow ends on such a batch).
+        values of that column (F3, silver.py:22-28's "Prune IN List"): the
+        pyarrow scan of the data dir reads only the key columns, filtered
+        to those values.  ``prune_col`` must be part of ``keys`` (it is the
+        reference's ``minute_timestamp``, part of the MERGE key).
 
         ``batch_unique=True`` skips the within-batch dropDuplicates — one
         full shuffle of every micro-batch — for callers whose upstream
@@ -197,30 +235,41 @@ class ParquetAppendTable(_ParquetTable):
         dropDuplicatesWithinWatermark does exactly this; replayed/cross-
         batch duplicates are still caught by the anti-join).
 
-        Commit protocol: the anti-join's rows are written to a stage dir,
-        then each file is renamed into the data dir (the rename is the
-        commit, mirroring Delta's write-files-then-commit protocol; the
-        stage keeps the write out of the directory the plan reads).
-        Idempotent under micro-batch replay (same ``version`` re-offered
-        after a crash at any step): the anti-join excludes the rows an
-        earlier attempt already renamed, and the rest land under fresh
-        part names with the same version prefix — each row in one file.
+        Commit protocol: the anti-join's rows are written to
+        ``stage/<version>``, one file per Spark partition, then each file
+        is renamed into the data dir (the rename is the commit, mirroring
+        Delta's write-files-then-commit protocol).  Idempotent under
+        micro-batch replay (same ``version`` re-offered after a crash at
+        any step): the retry clears the stage, the anti-join excludes the
+        rows an earlier attempt already renamed, and the rest land under
+        fresh part names with the same version prefix — each row in one
+        file.
         """
         deduped = batch if batch_unique else batch.dropDuplicates(self.keys)
-        current = self.read().select(*self.keys)
-        if prune_col is not None:
-            values = [r[0] for r in batch.select(prune_col).distinct().collect()]
-            if not values:
-                return
-            current = current.filter(F.col(prune_col).isin(values))
-        fresh = deduped.join(current, on=self.keys, how="left_anti").select(
-            *[f.name for f in self.schema.fields]
+        fetched = deduped.select(
+            *self.schema.fieldNames(), F.spark_partition_id().alias("__part")
+        ).toArrow()
+        if not fetched.num_rows:
+            return
+        rows = self._conform(fetched).append_column("__part", fetched["__part"])
+        where = None if prune_col is None else pc.field(prune_col).isin(pc.unique(rows[prune_col]))
+        current = ds.dataset(self.cdf_dir, schema=self._arrow_schema, format="parquet").to_table(
+            columns=self.keys, filter=where
         )
+        fresh = rows.join(current, keys=self.keys, join_type="left anti")
+
         stage = f"{self.root}/stage/{version}"
-        fresh.write.mode("overwrite").parquet(stage)
+        if os.path.exists(stage):
+            shutil.rmtree(stage)  # what an interrupted attempt left
+        os.makedirs(stage)
+        attempt = uuid.uuid4().hex
+        for part in sorted(pc.unique(fresh["__part"]).to_pylist()):
+            pq.write_table(
+                fresh.filter(pc.equal(fresh["__part"], part)).drop_columns("__part"),
+                f"{stage}/part-{part:05d}-{attempt}.parquet",
+            )
         for name in sorted(os.listdir(stage)):
-            if name.endswith(".parquet"):
-                os.rename(f"{stage}/{name}", f"{self.cdf_dir}/v{version}_insert_{name}")
+            os.rename(f"{stage}/{name}", f"{self.cdf_dir}/v{version}_insert_{name}")
         shutil.rmtree(stage, ignore_errors=True)
 
 
@@ -240,9 +289,6 @@ class ParquetUpsertTable(_ParquetTable):
         n_buckets: int = 32,
     ):
         super().__init__(spark, root, schema, keys)
-        self._arrow_schema = pa.schema(
-            [f.with_nullable(True) for f in to_arrow_schema(schema)]
-        )
         os.makedirs(f"{self.root}/data", exist_ok=True)
         os.makedirs(self.cdf_dir, exist_ok=True)
         meta = f"{self.root}/_table_meta.json"
@@ -253,15 +299,9 @@ class ParquetUpsertTable(_ParquetTable):
                 self.n_buckets = int(json.load(fh).get("n_buckets", n_buckets))
         else:
             self.n_buckets = n_buckets
-            with open(meta, "w") as fh:
-                json.dump(
-                    {
-                        "keys": self.keys,
-                        "schema": schema.jsonValue(),
-                        "n_buckets": n_buckets,
-                    },
-                    fh,
-                )
+            _write_json(
+                meta, {"keys": self.keys, "schema": schema.jsonValue(), "n_buckets": n_buckets}
+            )
 
     # -- versions ---------------------------------------------------------
 
@@ -355,19 +395,12 @@ class ParquetUpsertTable(_ParquetTable):
             ]
         )
 
-    def _conform(self, table: pa.Table) -> pa.Table:
-        """The table's columns of ``table``, cast to their stored types (a
-        Spark-collected batch may carry large strings, a fold int32s)."""
-        fields = [f for f in self._arrow_schema if f.name in table.column_names]
-        return table.select([f.name for f in fields]).cast(pa.schema(fields))
-
     # -- writes -----------------------------------------------------------
 
     def bucketed_batch(self, df: DataFrame) -> tuple[pa.Table, list[int]]:
-        """The one driver round-trip of an upsert: ``df`` (a per-batch
-        aggregate, ≤ one row per key) with its ``__bucket`` column, fetched
-        as Arrow, and the buckets it touches — the inputs of
-        :meth:`upsert_state`.  No buckets means an empty batch."""
+        """The one Spark job of an upsert: ``df`` with its ``__bucket``
+        column, fetched as Arrow, and the buckets it touches.  No buckets
+        means an empty batch."""
         rows = df.withColumn("__bucket", self.bucket_of(df)).toArrow()
         return rows, sorted(pc.unique(rows["__bucket"]).to_pylist())
 
@@ -383,8 +416,8 @@ class ParquetUpsertTable(_ParquetTable):
         change feed.  Everything after the caller's one Spark round-trip
         runs on the driver with pyarrow, one bucket at a time.
 
-        ``batch`` and ``bucket_ids`` come from :meth:`bucketed_batch`: one
-        row per changed key with its bucket, and the buckets.  For each
+        ``batch`` holds at most one row per changed key, with its
+        ``__bucket``; ``bucket_ids`` are the buckets it touches.  For each
         bucket, ``combine(prior, rows)`` gets the bucket's previous rows of
         the batch's keys (none for keys new to the table) and the batch's
         rows of that bucket, and returns the new rows of those keys (e.g.
@@ -445,8 +478,7 @@ class ParquetUpsertTable(_ParquetTable):
         names = {
             t: f"v{version}_{t}_{uuid.uuid4().hex}.parquet" for t, part in cdf.items() if part.num_rows
         }
-        with open(f"{state_dir}/_SUCCESS", "w") as fh:
-            json.dump(sorted(names.values()), fh)
+        _write_json(f"{state_dir}/_SUCCESS", sorted(names.values()))
         # Rename order: preimages land in cdf/ FIRST, postimage and insert
         # files last; a reader of the feed never sees a postimage before
         # the preimage of its key.

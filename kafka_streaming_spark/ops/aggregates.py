@@ -4,9 +4,10 @@
 ``incremental_fold`` is the running-total maintenance the reference performs
 with MERGE update expressions (gold.py:19-45, A2/J2) expressed as a pure
 DataFrame fold so it is oracle-checkable without Delta.  ``combine_states``
-is its reference combine step; ``combine_states_arrow`` is the same combine
-on Arrow tables, the form the gold commit folds each bucket with on the
-driver.
+is its reference combine step.  ``group_agg_arrow`` and
+``combine_states_arrow`` are the same aggregate and combine on Arrow
+tables, the forms the gold commit runs on the driver: it aggregates a
+micro-batch's fetched rows, then folds each bucket.
 
 Invariant (tested, FIXTURES.md F3): ``fold(batches) == group_agg(union(batches))``
 for sum/count/min/max — the algebraic property that makes incremental
@@ -56,6 +57,29 @@ def group_agg(
         (F.sum(score_col) / F.count(F.lit(1))).alias("avg_score"),
         F.min(ts_col).alias("first_event_timestamp"),
         F.max(ts_col).alias("last_event_timestamp"),
+    )
+
+
+def group_agg_arrow(table: pa.Table, keys: Sequence[str]) -> pa.Table:
+    """``group_agg`` of ``score`` and ``event_timestamp`` on an Arrow table:
+    the same columns with the same types.  Counts, minima and maxima match
+    exactly; a sum may differ from Spark's in the last bits, because the
+    two add in different orders.  Single-threaded, so one input always
+    gives the same output."""
+    keys = list(keys)
+    agg = table.group_by(keys, use_threads=False).aggregate(
+        [("score", "sum"), ([], "count_all"), ("event_timestamp", "min"), ("event_timestamp", "max")]
+    )
+    cum, cnt = agg["score_sum"], agg["count_all"]
+    return pa.table(
+        {
+            **{k: agg[k] for k in keys},
+            "cumulative_score": cum,
+            "event_count": cnt,
+            "avg_score": pc.divide(cum, pc.cast(cnt, pa.float64())),
+            "first_event_timestamp": agg["event_timestamp_min"],
+            "last_event_timestamp": agg["event_timestamp_max"],
+        }
     )
 
 

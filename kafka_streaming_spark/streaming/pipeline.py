@@ -40,7 +40,7 @@ from kafka_streaming_spark.io.sinks import (
     ParquetUpsertTable,
     start_foreach_batch,
 )
-from kafka_streaming_spark.ops.aggregates import combine_states_arrow, group_agg
+from kafka_streaming_spark.ops.aggregates import combine_states_arrow, group_agg_arrow
 from kafka_streaming_spark.ops.dedup import latest_per_key
 from kafka_streaming_spark.ops.projections import derive_event_columns
 from kafka_streaming_spark.schemas import GOLD_SCHEMA, SILVER_SCHEMA
@@ -92,27 +92,28 @@ class MedallionPipeline:
     # -- stage 1: bronze → silver ------------------------------------------
 
     def _silver_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """K1 body (silver.py:10-40): insert-if-absent with bucket pruning;
-        the prune-value collect doubles as the empty-batch check.
-        ``batch_unique``: the upstream dropDuplicatesWithinWatermark already
-        guarantees one row per id within a micro-batch, so the sink skips
-        its own within-batch dedup shuffle (cross-batch/replay duplicates
-        are still removed by the anti-join)."""
-        # Cached: the sink reads the batch twice (prune collect, staged
-        # write), and each uncached read re-runs the stream dedup, which
-        # rolls the RocksDB state store back a version and replays it.
-        batch_df.persist()
-        try:
-            self.silver.insert_if_absent(
-                batch_df, version=batch_id, prune_col="minute_timestamp", batch_unique=True
-            )
-        finally:
-            batch_df.unpersist()
+        """K1 body (silver.py:10-40): insert-if-absent with bucket pruning.
+        The sink reads the micro-batch once, in its one Spark job, so the
+        stream dedup (and its RocksDB state version) runs once per batch
+        without a cache.  ``batch_unique``: the upstream
+        dropDuplicatesWithinWatermark already guarantees one row per id
+        within a micro-batch, so the sink skips its own within-batch dedup
+        shuffle (cross-batch/replay duplicates are still removed by the
+        anti-join)."""
+        self.silver.insert_if_absent(
+            batch_df, version=batch_id, prune_col="minute_timestamp", batch_unique=True
+        )
 
     def start_bronze_to_silver(self, events: DataFrame, available_now: bool = True):
         """``events`` must carry the EVENT_SCHEMA columns (id, group_id,
         score, event_timestamp).  Applies P4-P7 derivations, watermark,
-        stream dedup, then the MERGE sink."""
+        stream dedup, then the MERGE sink.
+
+        ``events`` must be trigger-capped (``maxOffsetsPerTrigger``,
+        ``maxFilesPerTrigger``): each micro-batch is fetched to the driver
+        whole, and one past ``spark.driver.maxResultSize`` (about 9M rows
+        at the 1 GiB default) fails and stops the stream — see the
+        driver-memory premise in ``io.sinks``."""
         parsed = derive_event_columns(events)
         deduped = watermark_dedup(parsed, "timestamp", self.watermark_delay, ("id",))
         silver_cols = deduped.select(*[f.name for f in SILVER_SCHEMA.fields])
@@ -131,11 +132,13 @@ class MedallionPipeline:
         upsert.  ``least/greatest`` maintenance of first/last timestamps
         (see aggregates.combine_states for the documented deviation).
 
-        One driver round-trip, the micro-batch's only Spark work: the
-        aggregate with each group's bucket, fetched as Arrow — at most
-        |groups| rows, and none for an empty batch.  ``upsert_state``
-        folds it into the touched buckets with ``combine_states_arrow``
-        and commits on the driver (O(Δ), VERDICT r4 item 3)."""
+        One Spark job, the micro-batch's only Spark work: the inserted
+        rows' group, score and event time with each group's bucket,
+        fetched as Arrow — a scan with no shuffle, and no rows for an
+        empty batch.  The rest runs on the driver: ``group_agg_arrow``
+        aggregates per group, and ``upsert_state`` folds that into the
+        touched buckets with ``combine_states_arrow`` and commits (O(Δ),
+        VERDICT r4 item 3)."""
         if self.gold.version_applied(batch_id):
             # foreachBatch replay after a crash between the gold commit and
             # the checkpoint commit: the running totals already include this
@@ -144,18 +147,18 @@ class MedallionPipeline:
             return
         inserts = batch_df.filter(
             ~F.col("_change_type").isin("update_postimage", "update_preimage", "delete")
-        ).drop("_change_type", "_commit_version")
-        agg = group_agg(inserts, keys=("group_id",), score_col="score", ts_col="event_timestamp")
-        rows, buckets = self.gold.bucketed_batch(agg)
+        ).select("group_id", "score", "event_timestamp")
+        rows, buckets = self.gold.bucketed_batch(inserts)
         if not buckets:
             return
+        agg = group_agg_arrow(rows, keys=("group_id", "__bucket"))
         updated_at = pa.scalar(int(time.time()) * 1000, pa.int64())
 
         def fold(prior: pa.Table, batch: pa.Table) -> pa.Table:
             new = combine_states_arrow(prior, batch, keys=("group_id",))
             return new.append_column("updated_at", pa.repeat(updated_at, new.num_rows))
 
-        self.gold.upsert_state(rows, version=batch_id, bucket_ids=buckets, combine=fold)
+        self.gold.upsert_state(agg, version=batch_id, bucket_ids=buckets, combine=fold)
 
     def start_silver_to_gold(self, available_now: bool = True, max_files_per_trigger: int = 50):
         """S2: stream the silver change feed in bounded batches of at most
@@ -205,7 +208,9 @@ class MedallionPipeline:
 
     def run_available_now(self, events: DataFrame) -> DataFrame:
         """Drain a finite source through all three stages in sequence — the
-        test/backfill mode.  Returns the gold state."""
+        test/backfill mode.  Returns the gold state.  ``events`` must be
+        trigger-capped as :meth:`start_bronze_to_silver` says: an uncapped
+        backlog drains as one micro-batch, fetched to the driver whole."""
         self.start_bronze_to_silver(events, available_now=True).awaitTermination()
         self.start_silver_to_gold(available_now=True).awaitTermination()
         self.start_gold_to_serving(available_now=True).awaitTermination()

@@ -7,6 +7,7 @@ an event in the table or its change feed.
 
 from __future__ import annotations
 
+import math
 import os
 
 import pyarrow as pa
@@ -17,7 +18,13 @@ from pyspark.sql import functions as F
 
 from kafka_streaming_spark.io import sinks
 from kafka_streaming_spark.io.sinks import ParquetUpsertTable
-from kafka_streaming_spark.ops.aggregates import combine_states, combine_states_arrow
+from kafka_streaming_spark.ops.aggregates import (
+    AGG_COLUMNS,
+    combine_states,
+    combine_states_arrow,
+    group_agg,
+    group_agg_arrow,
+)
 from kafka_streaming_spark.ops.projections import derive_event_columns
 from kafka_streaming_spark.schemas import EVENT_SCHEMA, GOLD_SCHEMA
 from kafka_streaming_spark.streaming.pipeline import MedallionPipeline
@@ -100,6 +107,96 @@ def test_arrow_fold_matches_combine_states_bit_for_bit(spark, tmp_path_factory, 
     )
     assert table == {**prior_only, **{k: v + (9,) for k, v in want.items() if k in batch}}
     assert gold._buckets_in(1) == buckets
+
+
+# -- the Arrow aggregate against group_agg ------------------------------------
+
+_GROUPS = [f"g{i}" for i in range(12)]
+_quarter = st.integers(min_value=-4000, max_value=4000).map(lambda n: n / 4)
+
+
+@st.composite
+def _agg_batch(draw):
+    """(exact, rows): random keys over g0..g11 or a single group, and at
+    times a single row; ``exact`` scores are multiples of 1/4, so their
+    sums are exact in any order."""
+    exact = draw(st.booleans())
+    groups = draw(st.sampled_from([_GROUPS, _GROUPS[:1]]))
+    event = st.tuples(
+        st.sampled_from(groups), _quarter if exact else _score, st.integers(0, 10**12)
+    )
+    size = draw(st.sampled_from([1, 40]))
+    rows = draw(st.lists(event, min_size=1, max_size=size))
+    return exact, [(f"e{i}", g, s, ts) for i, (g, s, ts) in enumerate(rows)]
+
+
+@given(batch=_agg_batch())
+@FOLD_SET
+def test_arrow_group_agg_matches_group_agg(spark, batch):
+    """``group_agg_arrow`` ≡ Spark's ``group_agg``: the same columns and
+    types, counts and first/last timestamps exactly, sums exactly on
+    quarter scores and within the summation-order error bound on other
+    doubles (the two add in different orders)."""
+    exact, rows = batch
+    want = group_agg(spark.createDataFrame(rows, schema=EVENT_SCHEMA)).toArrow()
+    got = group_agg_arrow(
+        pa.Table.from_pylist([dict(zip(EVENT_SCHEMA.names, r)) for r in rows]), keys=("group_id",)
+    )
+    assert got.column_names == want.column_names
+    assert [got.schema.field(c).type for c in AGG_COLUMNS] == [
+        want.schema.field(c).type for c in AGG_COLUMNS
+    ]
+    want_rows = {r["group_id"]: r for r in want.to_pylist()}
+    got_rows = {r["group_id"]: r for r in got.to_pylist()}
+    assert got_rows.keys() == want_rows.keys()
+    for g, w in want_rows.items():
+        r = got_rows[g]
+        assert (r["event_count"], r["first_event_timestamp"], r["last_event_timestamp"]) == (
+            w["event_count"], w["first_event_timestamp"], w["last_event_timestamp"]
+        )
+        if exact:
+            assert (r["cumulative_score"], r["avg_score"]) == (w["cumulative_score"], w["avg_score"])
+        else:
+            # any summation order errs by at most (n-1)·2⁻⁵³·Σ|x|
+            bound = 1e-12 * sum(abs(s) for _, k, s, _ in rows if k == g)
+            assert math.isclose(r["cumulative_score"], w["cumulative_score"], rel_tol=1e-9, abs_tol=bound)
+            assert math.isclose(r["avg_score"], w["avg_score"], rel_tol=1e-9, abs_tol=bound / w["event_count"])
+
+
+def _torn_dump(obj, fh):
+    """``json.dump`` that crashes halfway through the file."""
+    fh.write('{"keys": ["group_id"], "sch')
+    raise Crash("dump")
+
+
+def test_table_meta_survives_a_crash_mid_write(spark, tmp_path_factory, monkeypatch):
+    """A crash while ``_table_meta.json`` is being written leaves no torn
+    file: the table reopens, and the bucket count it was created with
+    still holds once the file is whole."""
+    root = str(tmp_path_factory.mktemp("meta"))
+    with monkeypatch.context() as m:
+        m.setattr(sinks.json, "dump", _torn_dump)
+        with pytest.raises(Crash):
+            ParquetUpsertTable(spark, root, GOLD_SCHEMA, keys=("group_id",), n_buckets=4)
+    assert ParquetUpsertTable(spark, root, GOLD_SCHEMA, keys=("group_id",), n_buckets=4).n_buckets == 4
+    assert ParquetUpsertTable(spark, root, GOLD_SCHEMA, keys=("group_id",), n_buckets=8).n_buckets == 4
+
+
+def test_success_marker_survives_a_crash_mid_write(spark, tmp_path_factory, monkeypatch):
+    """A crash while a version's ``_SUCCESS`` is being written leaves the
+    version unapplied, not unreadable: the re-offered batch commits it."""
+    gold = ParquetUpsertTable(
+        spark, str(tmp_path_factory.mktemp("marker")), GOLD_SCHEMA, keys=("group_id",), n_buckets=4
+    )
+    batch = spark.createDataFrame(_state_table({"g1": (1.0, 1, 5, 6)}), schema=GOLD_SCHEMA)
+    rows, buckets = gold.bucketed_batch(batch)
+    with monkeypatch.context() as m:
+        m.setattr(sinks.json, "dump", _torn_dump)
+        with pytest.raises(Crash):
+            gold.upsert_state(rows, version=0, bucket_ids=buckets, combine=replace_rows)
+    assert not gold.version_applied(0)
+    assert gold.upsert_state(rows, version=0, bucket_ids=buckets, combine=replace_rows)
+    assert [r["group_id"] for r in gold.read().collect()] == ["g1"]
 
 
 # -- crash at each commit step, then the same batch re-offered ---------------
