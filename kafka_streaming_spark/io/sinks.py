@@ -11,18 +11,17 @@ the real ACID implementation behind the same method names.
 Layout::
 
     ParquetAppendTable (silver, insert-only)
-    <root>/data/append/v<version>_insert_<part>.parquet
-                               the data files; commit <version>'s files
-                               are also its change feed (``cdf_dir``)
+    <root>/data/append/v<version>_insert_<uuid>.parquet
+                               the data files, one per commit; commit
+                               <version>'s file is also its change feed
+                               (``cdf_dir``)
 
     ParquetUpsertTable (gold, keyed upserts)
-    <root>/data/v_<version>/__bucket=<b>/   the CHANGED key buckets of
-                               commit <version> (bucket =
-                               pmod(hash(keys), n_buckets)), one file each;
-                               the current state of a bucket is its newest
-                               finalized version dir
+    <root>/data/v_<version>/part-<uuid>.parquet   the full table state
+                               after commit <version>, one file
     <root>/data/v_<version>/_SUCCESS        finalizes the version; lists
-                               the change-feed files of its commit
+                               the change-feed files of its commit; the
+                               current state is the newest finalized version
     <root>/cdf/                flat change-feed dir; every file is named
                                ``v<version>_<change_type>_<name>.parquet``
 
@@ -31,14 +30,16 @@ Layout::
 An insert-only commit's change feed is exactly the rows it inserts (the
 reference's silver MERGE, silver.py:22-40), so ``ParquetAppendTable``
 keeps no second copy: a committed file is in the feed the moment its
-rename lands, and a commit interrupted between renames leaves every row
-it committed in both the table and the feed.
+rename lands.
 
-Commits are **O(Δ), not O(|state|)**: ``upsert_state`` writes only the
-buckets containing changed keys — the same file-granularity Delta MERGE
-gets from rewriting only the files with matched rows — so a 1-key commit
-rewrites ~|state|/n_buckets, not the whole table (the round-4 full-state
-rewrite was the one flagged scale-killer on the parquet backend).
+Every commit writes one data file, so a gold commit rewrites the whole
+state: O(|state|), not O(Δ).  Splitting the state into n key buckets
+would not help the traffic it serves: a batch touching k keys rewrites
+a share 1-(1-1/n)^k of the buckets, which at the benchmark's 200 groups
+per batch and n = 32 is 31.95 of 32 (measured) — 32 file reads and
+writes where one does.  The reference's traffic is as dense (one
+``group_id`` per publisher worker).  Splitting pays only when a batch
+touches far fewer keys than there are files.
 
 One commit path per table, one Spark job per micro-batch: the caller's
 batch is fetched to the driver once as Arrow, and everything after that
@@ -47,13 +48,13 @@ scheduling cost would dominate a micro-batch this size.
 ``insert_if_absent`` fetches the batch rows, probes the table's keys with
 a pyarrow dataset scan pruned to the batch's ``prune_col`` values,
 anti-joins and writes the fresh rows; ``upsert_state`` takes the caller's
-batch as one Arrow table (≤ one row per changed key, with its bucket),
-reads each touched bucket, folds the batch in, writes the bucket, then
-the change feed.  First commits and replays go through the same path as
+batch as one Arrow table (≤ one row per changed key), reads the prior
+state file, folds the batch in, writes the new state file, then the
+change feed.  First commits and replays go through the same path as
 every other commit.
 
 Driver-memory premise: the driver holds one micro-batch of rows (plus,
-for gold, one bucket), so the source must cap its micro-batches
+for gold, the table state), so the source must cap its micro-batches
 (``maxOffsetsPerTrigger``, ``maxFilesPerTrigger``).  The reference caps a
 Kafka micro-batch at 10,000 events.  A fetched silver row with 36-char
 uuid ids is ~115 bytes of Arrow: a 220k-row batch is ~25 MB, and Spark's
@@ -62,14 +63,14 @@ default ``spark.driver.maxResultSize`` of 1 GiB fails the fetch at about
 stops the stream, and needs a tighter cap, not a distributed commit.
 
 Commit protocol of ``insert_if_absent`` (crash at any step, then the same
-version re-offered): ``stage/<version>`` cleared, one file per Spark
-partition of the batch written into it, then each file renamed to
-``data/append/v<version>_insert_<part>.parquet`` — the rename is the
-commit.  The retry's probe sees the rows an earlier attempt renamed, so
-each row lands in one file.
+version re-offered): the fresh rows written to ``stage/<version>.parquet``,
+then renamed to ``data/append/v<version>_insert_<uuid>.parquet`` — the one
+rename is the commit.  The retry overwrites whatever staged file an
+earlier attempt left, and its probe sees the rows an earlier attempt
+renamed, so each row lands in one file.
 
 Commit protocol of ``upsert_state`` (crash at any step, then the same
-version re-offered): bucket files → ``_SUCCESS`` → change-feed files
+version re-offered): state file → ``_SUCCESS`` → change-feed files
 staged, then renamed into ``cdf/`` preimage first.  ``version_applied``
 holds only once every file ``_SUCCESS`` lists is in ``cdf/``; any earlier
 crash leaves a version the retry deletes and redoes in full.
@@ -112,8 +113,6 @@ from kafka_streaming_spark.io.sources import file_stream
 #: Regexes over the cdf file name (see module docstring).
 _VERSION_RE = r"/v(\d+)_"
 _CTYPE_RE = r"/v\d+_(insert|update_preimage|update_postimage|delete)_"
-#: Change types of an upsert commit, in the order they land in ``cdf/``.
-_UPSERT_CDF_TYPES = ("update_preimage", "update_postimage", "insert")
 
 
 def _write_json(path: str, obj) -> None:
@@ -194,12 +193,13 @@ class ParquetAppendTable(_ParquetTable):
     """An insert-only table on plain parquet (silver pattern, J1): a commit
     appends the batch rows whose key is absent from the table (anti-join
     with IN-list pruning, silver.py:22-40).  Its data files are its change
-    feed: commit ``N`` names them ``v<N>_insert_<part>.parquet``, and
-    ``cdf_dir`` is the data dir itself."""
+    feed: commit ``N`` names its one file ``v<N>_insert_<uuid>.parquet``,
+    and ``cdf_dir`` is the data dir itself."""
 
     def __init__(self, spark: SparkSession, root: str, schema: StructType, keys: Sequence[str]):
         super().__init__(spark, root, schema, keys)
         os.makedirs(self.cdf_dir, exist_ok=True)
+        os.makedirs(f"{self.root}/stage", exist_ok=True)
 
     @property
     def cdf_dir(self) -> str:
@@ -218,10 +218,9 @@ class ParquetAppendTable(_ParquetTable):
     ) -> None:
         """J1: append the batch rows whose key is not present yet.
 
-        The batch's one Spark job fetches its rows as Arrow, each tagged
-        with its Spark partition; the rest runs on the driver.  An empty
-        batch commits nothing (watermark eviction under availableNow ends
-        on such a batch).
+        The batch's one Spark job fetches its rows as Arrow; the rest runs
+        on the driver.  A batch with no fresh rows commits nothing
+        (watermark eviction under availableNow ends on such a batch).
 
         ``prune_col`` restricts the existing-keys probe to the batch's
         values of that column (F3, silver.py:22-28's "Prune IN List"): the
@@ -235,73 +234,49 @@ class ParquetAppendTable(_ParquetTable):
         dropDuplicatesWithinWatermark does exactly this; replayed/cross-
         batch duplicates are still caught by the anti-join).
 
-        Commit protocol: the anti-join's rows are written to
-        ``stage/<version>``, one file per Spark partition, then each file
-        is renamed into the data dir (the rename is the commit, mirroring
-        Delta's write-files-then-commit protocol).  Idempotent under
-        micro-batch replay (same ``version`` re-offered after a crash at
-        any step): the retry clears the stage, the anti-join excludes the
-        rows an earlier attempt already renamed, and the rest land under
-        fresh part names with the same version prefix — each row in one
-        file.
+        Commit protocol: the anti-join's rows are written as one file to
+        ``stage/<version>.parquet``, which is renamed into the data dir as
+        ``v<version>_insert_<uuid>.parquet`` (the rename is the commit,
+        mirroring Delta's write-files-then-commit protocol).  Idempotent
+        under micro-batch replay (same ``version`` re-offered after a crash
+        at any step): the retry overwrites a staged file the crash left,
+        and the anti-join excludes the rows an earlier attempt already
+        renamed — each row in one file.
         """
         deduped = batch if batch_unique else batch.dropDuplicates(self.keys)
-        fetched = deduped.select(
-            *self.schema.fieldNames(), F.spark_partition_id().alias("__part")
-        ).toArrow()
-        if not fetched.num_rows:
+        rows = self._conform(deduped.select(*self.schema.fieldNames()).toArrow())
+        if not rows.num_rows:
             return
-        rows = self._conform(fetched).append_column("__part", fetched["__part"])
         where = None if prune_col is None else pc.field(prune_col).isin(pc.unique(rows[prune_col]))
         current = ds.dataset(self.cdf_dir, schema=self._arrow_schema, format="parquet").to_table(
             columns=self.keys, filter=where
         )
         fresh = rows.join(current, keys=self.keys, join_type="left anti")
-
-        stage = f"{self.root}/stage/{version}"
-        if os.path.exists(stage):
-            shutil.rmtree(stage)  # what an interrupted attempt left
-        os.makedirs(stage)
-        attempt = uuid.uuid4().hex
-        for part in sorted(pc.unique(fresh["__part"]).to_pylist()):
-            pq.write_table(
-                fresh.filter(pc.equal(fresh["__part"], part)).drop_columns("__part"),
-                f"{stage}/part-{part:05d}-{attempt}.parquet",
-            )
-        for name in sorted(os.listdir(stage)):
-            os.rename(f"{stage}/{name}", f"{self.cdf_dir}/v{version}_insert_{name}")
-        shutil.rmtree(stage, ignore_errors=True)
+        if not fresh.num_rows:
+            return
+        staged = f"{self.root}/stage/{version}.parquet"
+        pq.write_table(fresh, staged)
+        os.rename(staged, f"{self.cdf_dir}/v{version}_insert_{uuid.uuid4().hex}.parquet")
 
 
 class ParquetUpsertTable(_ParquetTable):
     """A keyed table on plain parquet (gold pattern, J2): ``upsert_state``
-    commits the changed key-buckets as a new version; the caller's combine
-    (e.g. ``combine_states_arrow``) folds the batch into each bucket on the
-    driver, and the changed keys' rows are logged to the change feed in
+    commits the full state as a new version, one file; the caller's combine
+    (e.g. ``combine_states_arrow``) folds the batch into the prior state on
+    the driver, and the changed keys' rows are logged to the change feed in
     ``cdf/``."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        schema: StructType,
-        keys: Sequence[str],
-        n_buckets: int = 32,
-    ):
+    def __init__(self, spark: SparkSession, root: str, schema: StructType, keys: Sequence[str]):
         super().__init__(spark, root, schema, keys)
+        if os.path.exists(f"{self.root}/_table_meta.json"):
+            # the key-bucketed layout: its state is in data/v_*/__bucket=*/,
+            # which this table would read as empty, restarting every total
+            raise ValueError(
+                f"{self.root} holds an upsert table in the key-bucketed layout, "
+                "which is no longer read; rebuild it from its source"
+            )
         os.makedirs(f"{self.root}/data", exist_ok=True)
         os.makedirs(self.cdf_dir, exist_ok=True)
-        meta = f"{self.root}/_table_meta.json"
-        if os.path.exists(meta):
-            # bucket count is a physical-layout property: honor the value
-            # the table was created with, or existing buckets mis-assemble
-            with open(meta) as fh:
-                self.n_buckets = int(json.load(fh).get("n_buckets", n_buckets))
-        else:
-            self.n_buckets = n_buckets
-            _write_json(
-                meta, {"keys": self.keys, "schema": schema.jsonValue(), "n_buckets": n_buckets}
-            )
 
     # -- versions ---------------------------------------------------------
 
@@ -310,15 +285,9 @@ class ParquetUpsertTable(_ParquetTable):
         return f"{self.root}/cdf"
 
     def _versions(self) -> list[int]:
-        """Finalized state versions only: a dir without its ``_SUCCESS``
-        marker is a crashed half-write and must be invisible to readers (and
-        to the replay guard, so the retry rewrites it)."""
-        d = f"{self.root}/data"
-        return sorted(
-            int(name.split("_")[1])
-            for name in os.listdir(d)
-            if name.startswith("v_") and os.path.exists(f"{d}/{name}/_SUCCESS")
-        )
+        """Every version dir's number, oldest first; a dir without its
+        ``_SUCCESS`` marker is a crashed half-write, which readers skip."""
+        return sorted(int(n[2:]) for n in os.listdir(f"{self.root}/data") if n.startswith("v_"))
 
     def version_applied(self, version: int) -> bool:
         """True when commit ``version`` fully ran (state finalized AND its
@@ -338,103 +307,56 @@ class ParquetUpsertTable(_ParquetTable):
             names = json.load(fh)
         return all(os.path.exists(f"{self.cdf_dir}/{name}") for name in names)
 
-    # -- bucketing ---------------------------------------------------------
-
-    def bucket_of(self, df: DataFrame) -> F.Column:
-        """Deterministic key bucket: ``pmod(hash(keys), n_buckets)`` —
-        pmod, never ``abs(hash) % n`` (Int.MinValue hazard, see
-        ``ops.partitioning.salt``)."""
-        return F.pmod(
-            F.hash(*[F.col(k) for k in self.keys]), F.lit(self.n_buckets)
-        ).cast("int")
-
-    def _buckets_in(self, version: int) -> list[int]:
-        d = f"{self.root}/data/v_{version}"
-        return sorted(
-            int(name.split("=", 1)[1])
-            for name in os.listdir(d)
-            if name.startswith("__bucket=")
-        )
-
-    def _latest_buckets(self, before_version: int | None = None) -> dict[int, int]:
-        """bucket → its NEWEST finalized version (optionally among versions
-        < ``before_version``): the dirs assembling the current state.
-        Driver-side metadata walk — the parquet-mirror analogue of a Delta
-        log replay; O(versions × buckets) listdir entries, vacuum keeps
-        versions few."""
-        latest: dict[int, int] = {}
-        for v in self._versions():
-            if before_version is not None and v >= before_version:
-                continue
-            for b in self._buckets_in(v):
-                latest[b] = v
-        return latest
+    def _state_file(self, before_version: int | None = None) -> str | None:
+        """The state file of the newest finalized version (optionally among
+        versions < ``before_version``), or None for an empty table: the
+        version dirs are walked newest first, stopping at the first with
+        its ``_SUCCESS``."""
+        for v in reversed(self._versions()):
+            vd = f"{self.root}/data/v_{v}"
+            if (before_version is None or v < before_version) and os.path.exists(f"{vd}/_SUCCESS"):
+                (name,) = [n for n in os.listdir(vd) if n.endswith(".parquet")]
+                return f"{vd}/{name}"
+        return None
 
     def read_buckets(self) -> DataFrame:
-        """Current table state: each bucket's newest finalized version
-        dir — the parquet-mirror analogue of a Delta log replay."""
-        latest = self._latest_buckets()
-        if not latest:
+        """Current table state: the state file of the newest finalized
+        version — the parquet-mirror analogue of a Delta log replay.  (The
+        name predates the one-file layout; the benchmark's tracer wraps the
+        method by name.)"""
+        path = self._state_file()
+        if path is None:
             return self._empty()
-        return self.spark.read.schema(self.schema).parquet(
-            *[f"{self.root}/data/v_{v}/__bucket={b}" for b, v in sorted(latest.items())]
-        )
+        return self.spark.read.schema(self.schema).parquet(path)
 
     def read(self) -> DataFrame:
         """Current table state (S4 batch scan of the merge target)."""
         return self.read_buckets()
 
-    def _read_bucket(self, version: int, bucket: int) -> pa.Table:
-        """One bucket dir of one version, read on the driver with pyarrow."""
-        d = f"{self.root}/data/v_{version}/__bucket={bucket}"
-        return pa.concat_tables(
-            [
-                pq.read_table(f"{d}/{name}", schema=self._arrow_schema)
-                for name in sorted(os.listdir(d))
-                if name.endswith(".parquet")
-            ]
-        )
-
     # -- writes -----------------------------------------------------------
-
-    def bucketed_batch(self, df: DataFrame) -> tuple[pa.Table, list[int]]:
-        """The one Spark job of an upsert: ``df`` with its ``__bucket``
-        column, fetched as Arrow, and the buckets it touches.  No buckets
-        means an empty batch."""
-        rows = df.withColumn("__bucket", self.bucket_of(df)).toArrow()
-        return rows, sorted(pc.unique(rows["__bucket"]).to_pylist())
 
     def upsert_state(
         self,
         batch: pa.Table,
         version: int,
-        bucket_ids: Sequence[int],
         combine: Callable[[pa.Table, pa.Table], pa.Table],
     ) -> bool:
-        """J2: fold a micro-batch into the changed key-buckets and commit
-        them as version ``version``, logging the changed keys' rows to the
-        change feed.  Everything after the caller's one Spark round-trip
-        runs on the driver with pyarrow, one bucket at a time.
+        """J2: fold a micro-batch into the table state and commit it as
+        version ``version``, logging the changed keys' rows to the change
+        feed.  Everything after the caller's one Spark round-trip runs on
+        the driver with pyarrow.
 
-        ``batch`` holds at most one row per changed key, with its
-        ``__bucket``; ``bucket_ids`` are the buckets it touches.  For each
-        bucket, ``combine(prior, rows)`` gets the bucket's previous rows of
-        the batch's keys (none for keys new to the table) and the batch's
-        rows of that bucket, and returns the new rows of those keys (e.g.
-        ``combine_states_arrow``).  The bucket's other rows are copied
-        unchanged.  Driver memory is one bucket plus the batch.
+        ``batch`` holds at most one row per changed key.  ``combine(prior,
+        rows)`` gets the previous rows of the batch's keys (none for keys
+        new to the table) and the batch, and returns the new rows of those
+        keys (e.g. ``combine_states_arrow``).  The other rows are copied
+        unchanged.  Driver memory is the state plus the batch.
 
-        O(Δ) write (VERDICT r4 item 3): only buckets containing changed
-        keys are rewritten — unchanged buckets are inherited from older
-        version dirs by the per-bucket-latest read assembly — matching the
-        file-granularity the reference gets from Delta MERGE
-        (``gold.py:19-45``).
-
-        Commit protocol: one file per touched bucket into
-        ``data/v_<version>/__bucket=<b>/``; then ``_SUCCESS``, which makes
-        the version visible to readers and lists the change-feed files the
-        commit will register; then the change feed, as Delta labels it — a
-        changed key present in the prior state emits its previous row as
+        Commit protocol: the new state, one file, into
+        ``data/v_<version>/``; then ``_SUCCESS``, which makes the version
+        visible to readers and lists the change-feed files the commit will
+        register; then the change feed, as Delta labels it — a changed key
+        present in the prior state emits its previous row as
         ``update_preimage`` and its new row as ``update_postimage``, a key
         new to the table emits ``insert``.  Each type is one file, staged
         and renamed into ``cdf/`` under a fresh name, preimages first.
@@ -442,7 +364,7 @@ class ParquetUpsertTable(_ParquetTable):
         Idempotent under micro-batch replay (same ``version`` re-offered
         after a crash): a fully applied version is a no-op (returns False);
         any other attempt deletes what an earlier attempt left of this
-        version and redoes it in full from the buckets before it."""
+        version and redoes it in full from the version before it."""
         if self.version_applied(version):
             return False
         state_dir = f"{self.root}/data/v_{version}"
@@ -456,25 +378,23 @@ class ParquetUpsertTable(_ParquetTable):
                 os.remove(f"{self.cdf_dir}/{name}")
 
         (key,) = self.keys  # upsert tables are keyed on one column
-        latest = self._latest_buckets(before_version=version)
-        changes: dict[str, list[pa.Table]] = {t: [] for t in _UPSERT_CDF_TYPES}
-        for b in bucket_ids:
-            rows = self._conform(batch.filter(pc.equal(batch["__bucket"], b)))
-            prior = self._read_bucket(latest[b], b) if b in latest else self._arrow_schema.empty_table()
-            changed = pc.is_in(prior[key], value_set=rows[key])
-            pre = prior.filter(changed)
-            post = self._conform(combine(pre, rows))
-            os.makedirs(f"{state_dir}/__bucket={b}")
-            pq.write_table(
-                pa.concat_tables([prior.filter(pc.invert(changed)), post]),
-                f"{state_dir}/__bucket={b}/part-{uuid.uuid4().hex}.parquet",
-            )
-            updated = pc.is_in(post[key], value_set=pre[key])
-            changes["update_preimage"].append(pre)
-            changes["update_postimage"].append(post.filter(updated))
-            changes["insert"].append(post.filter(pc.invert(updated)))
-
-        cdf = {t: pa.concat_tables(parts) for t, parts in changes.items()}
+        rows = self._conform(batch)
+        path = self._state_file(before_version=version)
+        prior = pq.read_table(path, schema=self._arrow_schema) if path else self._arrow_schema.empty_table()
+        changed = pc.is_in(prior[key], value_set=rows[key])
+        pre = prior.filter(changed)
+        post = self._conform(combine(pre, rows))
+        os.makedirs(state_dir)
+        pq.write_table(
+            pa.concat_tables([prior.filter(pc.invert(changed)), post]),
+            f"{state_dir}/part-{uuid.uuid4().hex}.parquet",
+        )
+        updated = pc.is_in(post[key], value_set=pre[key])
+        cdf = {
+            "update_preimage": pre,
+            "update_postimage": post.filter(updated),
+            "insert": post.filter(pc.invert(updated)),
+        }
         names = {
             t: f"v{version}_{t}_{uuid.uuid4().hex}.parquet" for t, part in cdf.items() if part.num_rows
         }
@@ -491,21 +411,16 @@ class ParquetUpsertTable(_ParquetTable):
         return True
 
     def vacuum(self, keep_last: int = 2) -> None:
-        """D3: drop old state versions — but ONLY those whose every bucket
-        has a newer copy (incremental commits inherit unchanged buckets
-        from older versions, so an old version can still be live for the
-        buckets nothing has rewritten since).  A rarely-touched bucket
-        keeps exactly one live version dir alive; a follow-up commit that
-        rewrites it releases the dir for the next vacuum."""
-        versions = self._versions()
-        newer_buckets: set[int] = set()
-        keep = set(versions[-keep_last:]) if keep_last > 0 else set()
-        for v in reversed(versions):
-            buckets = set(self._buckets_in(v))
-            if v not in keep and buckets <= newer_buckets:
-                shutil.rmtree(f"{self.root}/data/v_{v}", ignore_errors=True)
-            else:
-                newer_buckets |= buckets
+        """D3: drop the applied versions older than the newest ``keep_last``
+        applied ones.  Each version holds the full state, so an older one
+        is never read again; counting applied versions only keeps the state
+        an interrupted newest commit redoes from.  This bounds the versions
+        kept; it does not compact anything."""
+        if keep_last < 1:
+            raise ValueError("vacuum must keep at least the current version")
+        for v in [v for v in self._versions() if self.version_applied(v)][:-keep_last]:
+            os.remove(f"{self.root}/data/v_{v}/_SUCCESS")  # readers drop it before its files go
+            shutil.rmtree(f"{self.root}/data/v_{v}", ignore_errors=True)
 
 
 def start_foreach_batch(

@@ -203,8 +203,7 @@ def test_gold_invariants_parquet(spark, tmp_path_factory):
     def upsert(agg, version):
         if pq.version_applied(version):
             return
-        rows, buckets = pq.bucketed_batch(agg)
-        pq.upsert_state(rows, version=version, bucket_ids=buckets, combine=fold)
+        pq.upsert_state(agg.toArrow(), version=version, combine=fold)
 
     _gold_invariants(spark, upsert, pq.read)
 

@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import math
 import os
+import re
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -66,6 +68,10 @@ FOLD_SET = settings(
 )
 
 
+def _parquet_files(d: str) -> int:
+    return len([n for n in os.listdir(d) if n.endswith(".parquet")])
+
+
 def _state_table(rows: dict, updated_at: int = 7) -> list[tuple]:
     return [
         (k, s, n, s / n, lo, max(lo, hi), updated_at) for k, (s, n, lo, hi) in sorted(rows.items())
@@ -76,8 +82,8 @@ def _state_table(rows: dict, updated_at: int = 7) -> list[tuple]:
 @FOLD_SET
 def test_arrow_fold_matches_combine_states_bit_for_bit(spark, tmp_path_factory, prior, batch):
     """``combine_states_arrow`` ≡ ``combine_states`` on random keys, and the
-    bucketed commit built on it holds exactly that fold for every batch key
-    (new and present, over several buckets) and the prior rows elsewhere."""
+    commit built on it holds exactly that fold for every batch key (new and
+    present) and the prior rows elsewhere, in one state file."""
     prior_rows, batch_rows = _state_table(prior), _state_table(batch, updated_at=9)
     prior_df = spark.createDataFrame(prior_rows, schema=GOLD_SCHEMA)
     batch_df = spark.createDataFrame(batch_rows, schema=GOLD_SCHEMA)
@@ -87,26 +93,23 @@ def test_arrow_fold_matches_combine_states_bit_for_bit(spark, tmp_path_factory, 
     assert got.column_names == STATE_COLS
     assert _rows(got.to_pylist()) == want
 
-    gold = ParquetUpsertTable(
-        spark, str(tmp_path_factory.mktemp("fold")), GOLD_SCHEMA, keys=("group_id",), n_buckets=4
-    )
+    root = str(tmp_path_factory.mktemp("fold"))
+    gold = ParquetUpsertTable(spark, root, GOLD_SCHEMA, keys=("group_id",))
     if prior_rows:
-        rows, buckets = gold.bucketed_batch(prior_df)
-        gold.upsert_state(rows, version=0, bucket_ids=buckets, combine=replace_rows)
+        gold.upsert_state(prior_df.toArrow(), version=0, combine=replace_rows)
 
     def fold(old, new):
         out = combine_states_arrow(old, new, keys=("group_id",))
         return out.append_column("updated_at", pa.repeat(pa.scalar(9, pa.int64()), out.num_rows))
 
-    rows, buckets = gold.bucketed_batch(batch_df)
-    assert gold.upsert_state(rows, version=1, bucket_ids=buckets, combine=fold)
+    assert gold.upsert_state(batch_df.toArrow(), version=1, combine=fold)
     table = _rows(gold.read().collect(), STATE_COLS + ["updated_at"])
     prior_only = _rows(
         [dict(zip(GOLD_SCHEMA.names, r)) for r in prior_rows if r[0] not in batch],
         STATE_COLS + ["updated_at"],
     )
     assert table == {**prior_only, **{k: v + (9,) for k, v in want.items() if k in batch}}
-    assert gold._buckets_in(1) == buckets
+    assert _parquet_files(f"{root}/data/v_1") == 1
 
 
 # -- the Arrow aggregate against group_agg ------------------------------------
@@ -165,46 +168,32 @@ def test_arrow_group_agg_matches_group_agg(spark, batch):
 
 def _torn_dump(obj, fh):
     """``json.dump`` that crashes halfway through the file."""
-    fh.write('{"keys": ["group_id"], "sch')
+    fh.write('["v0_insert_')
     raise Crash("dump")
-
-
-def test_table_meta_survives_a_crash_mid_write(spark, tmp_path_factory, monkeypatch):
-    """A crash while ``_table_meta.json`` is being written leaves no torn
-    file: the table reopens, and the bucket count it was created with
-    still holds once the file is whole."""
-    root = str(tmp_path_factory.mktemp("meta"))
-    with monkeypatch.context() as m:
-        m.setattr(sinks.json, "dump", _torn_dump)
-        with pytest.raises(Crash):
-            ParquetUpsertTable(spark, root, GOLD_SCHEMA, keys=("group_id",), n_buckets=4)
-    assert ParquetUpsertTable(spark, root, GOLD_SCHEMA, keys=("group_id",), n_buckets=4).n_buckets == 4
-    assert ParquetUpsertTable(spark, root, GOLD_SCHEMA, keys=("group_id",), n_buckets=8).n_buckets == 4
 
 
 def test_success_marker_survives_a_crash_mid_write(spark, tmp_path_factory, monkeypatch):
     """A crash while a version's ``_SUCCESS`` is being written leaves the
     version unapplied, not unreadable: the re-offered batch commits it."""
     gold = ParquetUpsertTable(
-        spark, str(tmp_path_factory.mktemp("marker")), GOLD_SCHEMA, keys=("group_id",), n_buckets=4
+        spark, str(tmp_path_factory.mktemp("marker")), GOLD_SCHEMA, keys=("group_id",)
     )
     batch = spark.createDataFrame(_state_table({"g1": (1.0, 1, 5, 6)}), schema=GOLD_SCHEMA)
-    rows, buckets = gold.bucketed_batch(batch)
+    rows = batch.toArrow()
     with monkeypatch.context() as m:
         m.setattr(sinks.json, "dump", _torn_dump)
         with pytest.raises(Crash):
-            gold.upsert_state(rows, version=0, bucket_ids=buckets, combine=replace_rows)
+            gold.upsert_state(rows, version=0, combine=replace_rows)
     assert not gold.version_applied(0)
-    assert gold.upsert_state(rows, version=0, bucket_ids=buckets, combine=replace_rows)
+    assert gold.upsert_state(rows, version=0, combine=replace_rows)
     assert [r["group_id"] for r in gold.read().collect()] == ["g1"]
 
 
 # -- crash at each commit step, then the same batch re-offered ---------------
 
 
-def _after_bucket_files(monkeypatch):
-    _arm(monkeypatch, sinks.pq, "write_table",
-         lambda a, calls: "/data/v_" in str(a[1]) and len(calls) >= 2)
+def _after_state_file(monkeypatch):
+    _arm(monkeypatch, sinks, "_write_json", lambda a, calls: a[0].endswith("/_SUCCESS"))
 
 
 def _after_success(monkeypatch):
@@ -221,7 +210,7 @@ def _after_postimage_rename(monkeypatch):
 
 #: (fault, True when the fault interrupts the commit before it is final)
 FAULTS = [
-    (_after_bucket_files, True),
+    (_after_state_file, True),
     (_after_success, True),
     (_after_preimage_rename, True),
     (_after_postimage_rename, True),
@@ -232,8 +221,8 @@ FAULTS = [
 def _events(v: int) -> list[tuple]:
     """Batch ``v``: three events for each of groups g0..g(11+4v), so every
     batch after the first updates groups the table holds and adds new
-    ones, across many buckets.  Scores are multiples of 1/4, so every sum
-    is exact in any order."""
+    ones.  Scores are multiples of 1/4, so every sum is exact in any
+    order."""
     base_ms = 1_700_000_000_000 + v * 600_000
     return [
         (f"e{v}_{g}_{i}", f"g{g}", ((v + 1) * (g + 1) * (i + 1) % 37) / 4, base_ms + (g * 3 + i) * 1000)
@@ -269,10 +258,10 @@ def _check_cdf(cdf_rows: list, n_versions: int) -> None:
 
 
 def test_gold_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, monkeypatch):
-    """Batch v crashes at step v of the gold commit (after some bucket
-    files, after ``_SUCCESS``, after the preimage rename, after the
-    postimage rename, after the last rename) and is re-offered with the
-    same batch id, as a restarted query does.  After each: the table is the
+    """Batch v crashes at step v of the gold commit (after the state file
+    and before ``_SUCCESS``, after ``_SUCCESS``, after the preimage rename,
+    after the postimage rename, after the last rename) and is re-offered
+    with the same batch id, as a restarted query does.  After each: the table is the
     pyarrow aggregate of every event so far, and the change feed holds one
     image set per version with each key once."""
     root = str(tmp_path_factory.mktemp("goldcrash"))
@@ -319,13 +308,11 @@ def test_gold_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, mon
         _check_cdf(pipe.gold.read_cdf().collect(), v + 1)
         # each key's newest postimage/insert in the feed is its table row
         assert _last_images(pipe) == {k: tuple(map(_bits, row)) for k, row in gold.items()}
-    # every commit wrote one file per touched bucket and at most three cdf files
+    # every commit wrote one state file and at most three cdf files
     for v in range(len(FAULTS)):
         files = [n for n in os.listdir(pipe.gold.cdf_dir) if n.startswith(f"v{v}_")]
         assert 1 <= len(files) <= 3
-        for b in pipe.gold._buckets_in(v):
-            d = f"{root}/gold/data/v_{v}/__bucket={b}"
-            assert len([n for n in os.listdir(d) if n.endswith(".parquet")]) == 1
+        assert _parquet_files(f"{root}/gold/data/v_{v}") == 1
 
 
 def _last_images(pipe) -> dict:
@@ -335,3 +322,22 @@ def _last_images(pipe) -> dict:
     for r in sorted(rows, key=lambda r: r["_commit_version"]):
         last[r["group_id"]] = tuple(_bits(r[c]) for c in STATE_COLS[1:])
     return last
+
+
+def test_bucketed_root_is_refused(spark, tmp_path_factory):
+    """A root in the old key-bucketed layout (``_table_meta.json`` plus
+    ``data/v_<N>/__bucket=<b>/``) holds no state file this table reads;
+    opening it would restart every running total from an empty prior, so
+    it fails and names the root instead."""
+    root = str(tmp_path_factory.mktemp("bucketed"))
+    bucket = f"{root}/data/v_0/__bucket=3"
+    os.makedirs(bucket)
+    rows = spark.createDataFrame(_state_table({"g1": (1.0, 1, 5, 6)}), schema=GOLD_SCHEMA)
+    pq.write_table(rows.toArrow(), f"{bucket}/part-0.parquet")
+    with open(f"{root}/data/v_0/_SUCCESS", "w") as fh:
+        fh.write("[]")
+    with open(f"{root}/_table_meta.json", "w") as fh:
+        fh.write('{"keys": ["group_id"], "n_buckets": 32}')
+    with pytest.raises(ValueError, match=re.escape(root)):
+        ParquetUpsertTable(spark, root, GOLD_SCHEMA, keys=("group_id",))
+    assert not os.path.exists(f"{root}/cdf")  # refused before touching the root

@@ -21,25 +21,44 @@ STATE_COLS = ["cumulative_score", "event_count", "avg_score",
               "first_event_timestamp", "last_event_timestamp"]
 
 
-def _staged(a) -> bool:
-    return "/silver/stage/" in str(a[0])
+def _staged(path) -> bool:
+    return "/silver/stage/" in str(path)
 
 
-def _before_first_rename(monkeypatch):
-    _arm(monkeypatch, sinks.os, "rename", lambda a, calls: _staged(a))
+def _torn_staged_write(monkeypatch):
+    """The staged write dies halfway: a truncated file is left in the stage."""
+    write = sinks.pq.write_table
+
+    def torn(table, where, **kw):
+        if _staged(where):
+            write(table, where, **kw)
+            with open(where, "r+b") as fh:
+                fh.truncate(os.path.getsize(where) // 2)
+            raise Crash("write_table")
+        return write(table, where, **kw)
+
+    monkeypatch.setattr(sinks.pq, "write_table", torn)
 
 
-def _after_first_rename(monkeypatch):
-    _arm(monkeypatch, sinks.os, "rename", lambda a, calls: _staged(a) and len(calls) >= 1)
+def _before_rename(monkeypatch):
+    _arm(monkeypatch, sinks.os, "rename", lambda a, calls: _staged(a[0]))
 
 
-def _before_stage_cleanup(monkeypatch):
-    _arm(monkeypatch, sinks.shutil, "rmtree", lambda a, calls: _staged(a))
+def _after_rename(monkeypatch):
+    """The rename lands, then the attempt dies before it returns."""
+    rename = sinks.os.rename
+
+    def landed(src, dst):
+        rename(src, dst)
+        if _staged(src):
+            raise Crash("rename")
+
+    monkeypatch.setattr(sinks.os, "rename", landed)
 
 
 #: Batch v crashes at step v of the silver commit; the last one completes,
 #: and only its checkpoint commit is lost.
-FAULTS = [_before_first_rename, _after_first_rename, _before_stage_cleanup, None]
+FAULTS = [_torn_staged_write, _before_rename, _after_rename, None]
 
 
 def _fresh(v: int) -> list[tuple]:
@@ -73,14 +92,15 @@ def _gold_of(events: list[tuple]) -> dict:
 
 
 def test_silver_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, monkeypatch):
-    """Batch v crashes at step v of the silver commit (after the staged
-    write, after the first of its renames, after the last rename) or
-    completes with its checkpoint commit lost, and is re-offered with the
-    same batch id, as a restarted query does.  Silver→gold streams the feed
-    both before and after the re-offer, as a live query would.  After each:
-    silver holds every distinct event once, the change feed is exactly the
-    table with each row at the version that first carried it, and gold is
-    the pyarrow aggregate of the distinct events."""
+    """Batch v crashes at step v of the silver commit (mid staged write,
+    before the rename, after the rename) or completes with its checkpoint
+    commit lost, and is re-offered with the same batch id, as a restarted
+    query does.  Each batch spans two Spark partitions and still commits
+    one file.  Silver→gold streams the feed both before and after the
+    re-offer, as a live query would.  After each: silver holds every
+    distinct event once, the change feed is exactly the table with each
+    row at the version that first carried it, and gold is the pyarrow
+    aggregate of the distinct events."""
     root = str(tmp_path_factory.mktemp("silvercrash"))
     pipe = MedallionPipeline(spark, root)
     silver_cols = [f.name for f in pipe.silver.schema.fields]
@@ -100,16 +120,13 @@ def test_silver_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, m
                     pipe._silver_batch(batch_df, v)
             else:
                 pipe._silver_batch(batch_df, v)
-        if fault is _after_first_rename:
-            stage = f"{root}/silver/stage/{v}"
-            renamed = [n for n in os.listdir(f"{root}/silver/data/append") if n.startswith(f"v{v}_")]
-            left = [n for n in os.listdir(stage) if n.endswith(".parquet")]
-            assert len(renamed) == 1 and left, "the staged write made fewer than 2 files"
+        committed = [n for n in os.listdir(f"{root}/silver/data/append") if n.startswith(f"v{v}_")]
+        assert len(committed) == (fault in (_after_rename, None)), f"v{v}: {committed}"
         pipe.start_silver_to_gold(available_now=True).awaitTermination()
         pipe._silver_batch(batch_df, v)  # restart: the same batch re-offered
         pipe.start_silver_to_gold(available_now=True).awaitTermination()
 
-        assert not os.path.exists(f"{root}/silver/stage/{v}")
+        assert not os.listdir(f"{root}/silver/stage")
         ids = [r["id"] for r in pipe.silver.read().select("id").collect()]
         assert sorted(ids) == sorted(first_version), f"silver diverged after the fault at v{v}"
         table = sorted(tuple(r) for r in pipe.silver.read().collect())
@@ -122,3 +139,6 @@ def test_silver_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, m
         gold = {r["group_id"]: tuple(r[c] for c in STATE_COLS) for r in pipe.gold.read().collect()}
         assert gold == _gold_of(events), f"gold diverged after the fault at v{v}"
     assert not os.path.exists(f"{root}/silver/cdf")  # the feed is the data files
+    files = os.listdir(f"{root}/silver/data/append")
+    for v in range(len(FAULTS)):
+        assert len([n for n in files if n.startswith(f"v{v}_insert_")]) == 1, f"v{v}: {files}"

@@ -633,13 +633,11 @@ def test_cdf_emits_preimages_and_t4_routing(spark, tmp_path_factory):
         return spark.createDataFrame(rows, schema=GOLD_SCHEMA)
 
     s0 = [("g1", 1.0, 1, 1.0, 0, 0, 0), ("g2", 2.0, 1, 2.0, 0, 0, 0)]
-    rows, buckets = gold.bucketed_batch(mk_state(s0))
-    gold.upsert_state(rows, version=0, bucket_ids=buckets, combine=replace_rows)
+    gold.upsert_state(mk_state(s0).toArrow(), version=0, combine=replace_rows)
     # v1 changes g1 and adds g3, a key the table has never held
     s1 = [("g1", 4.0, 2, 2.0, 0, 5, 1), ("g2", 2.0, 1, 2.0, 0, 0, 0), ("g3", 7.0, 1, 7.0, 0, 5, 1)]
     changed = mk_state([r for r in s1 if r[0] != "g2"])
-    rows, buckets = gold.bucketed_batch(changed)
-    gold.upsert_state(rows, version=1, bucket_ids=buckets, combine=replace_rows)
+    gold.upsert_state(changed.toArrow(), version=1, combine=replace_rows)
 
     cdf = gold.read_cdf()
     by_type = {
@@ -703,92 +701,54 @@ def test_serving_compaction_bounds_file_count(spark, tmp_path_factory):
     }
 
 
-def test_upsert_commit_is_bucket_bounded_o_delta(spark, tmp_path_factory):
-    """VERDICT r4 item 3: a 1-key commit must rewrite ≪ the full state.
-    With 200 keys over 8 buckets, the v1 commit touching one key writes
-    exactly one bucket dir (~1/8 of the rows), the read() assembly merges
-    it with v0's untouched buckets bit-exactly, and vacuum refuses to drop
-    v0 while its buckets are still live."""
-    from kafka_streaming_spark.io.sinks import ParquetUpsertTable
-    from kafka_streaming_spark.schemas import GOLD_SCHEMA
-
-    root = str(tmp_path_factory.mktemp("odelta"))
-    gold = ParquetUpsertTable(
-        spark, f"{root}/gold", GOLD_SCHEMA, keys=("group_id",), n_buckets=8
-    )
-
-    def mk_state(rows):
-        return spark.createDataFrame(rows, schema=GOLD_SCHEMA)
-
-    s0 = [(f"g{i}", float(i), 1, float(i), 0, 0, 0) for i in range(200)]
-    rows, buckets = gold.bucketed_batch(mk_state(s0))
-    gold.upsert_state(rows, version=0, bucket_ids=buckets, combine=replace_rows)
-    assert len(gold._buckets_in(0)) == 8  # 200 keys cover all 8 buckets
-
-    s1_changed = [("g7", 99.0, 2, 49.5, 0, 5, 1)]
-    # caller passes ONLY the changed key's post-state + its bucket (the
-    # O(delta) contract the gold stage uses); the commit carries the
-    # bucket's other rows over
-    changed = mk_state(s1_changed)
-    rows, buckets = gold.bucketed_batch(changed)
-    assert len(buckets) == 1
-    gold.upsert_state(rows, version=1, bucket_ids=buckets, combine=replace_rows)
-
-    assert gold._buckets_in(1) == buckets  # exactly ONE bucket rewritten
-    v0_rows = 200
-    v1_rows = gold.spark.read.schema(GOLD_SCHEMA).parquet(
-        f"{root}/gold/data/v_1/__bucket={buckets[0]}"
-    ).count()
-    assert v1_rows < v0_rows / 4  # ~1/8 of the state, certainly < 1/4
-
-    # read() = per-bucket-latest assembly: g7 updated, everything else v0
-    state = {r["group_id"]: r["cumulative_score"] for r in gold.read().collect()}
-    assert len(state) == 200
-    assert state["g7"] == 99.0
-    assert state["g3"] == 3.0
-
-    # vacuum keeps v0 alive (7 of its buckets are still current)
-    gold.vacuum(keep_last=1)
-    import os
-    assert os.path.exists(f"{root}/gold/data/v_0/_SUCCESS")
-    state2 = {r["group_id"]: r["cumulative_score"] for r in gold.read().collect()}
-    assert state2 == state
-
-    # once every bucket is rewritten, vacuum can drop v0
-    s_all = [(f"g{i}", float(i) + 0.5, 2, float(i), 0, 0, 0) for i in range(200)]
-    rows, buckets = gold.bucketed_batch(mk_state(s_all))
-    gold.upsert_state(rows, version=2, bucket_ids=buckets, combine=replace_rows)
-    gold.vacuum(keep_last=1)
-    assert not os.path.exists(f"{root}/gold/data/v_0")
-    assert not os.path.exists(f"{root}/gold/data/v_1")
-    assert {r["group_id"] for r in gold.read().collect()} == {f"g{i}" for i in range(200)}
-
-
-def test_bucketed_upsert_random_commit_sequences(spark, tmp_path_factory):
-    """Property-style torture of the O(Δ) bucketed state store: a
+def test_bucketed_upsert_random_commit_sequences(spark, tmp_path_factory, monkeypatch):
+    """Property-style torture of the versioned state store: a
     deterministic pseudo-random sequence of commits (varying key subsets),
     interleaved replays (same version re-offered), a crash-redo (state
-    dir committed, CDF registration lost: the version is redone in full),
-    and vacuums — after every step, read() must equal a plain dict fold of
-    the same sequence."""
+    dir committed, CDF registration lost: the version is redone in full,
+    after a vacuum), and vacuums — after every step, read() must equal a
+    plain dict fold of the same sequence, every commit after the first
+    reads exactly one prior state file, every version is one file, and a
+    vacuum leaves exactly the newest versions."""
     import os
     import random
     import shutil
 
+    from kafka_streaming_spark.io import sinks
     from kafka_streaming_spark.io.sinks import ParquetUpsertTable
     from kafka_streaming_spark.schemas import GOLD_SCHEMA
 
     rng = random.Random(42)
     root = str(tmp_path_factory.mktemp("torture"))
-    gold = ParquetUpsertTable(
-        spark, f"{root}/gold", GOLD_SCHEMA, keys=("group_id",), n_buckets=4
-    )
+    gold = ParquetUpsertTable(spark, f"{root}/gold", GOLD_SCHEMA, keys=("group_id",))
     keys = [f"g{i}" for i in range(30)]
     ref: dict[str, float] = {}
+    reads: list[str] = []
+    read_table = sinks.pq.read_table
+
+    def counted_read(path, **kw):
+        reads.append(path)
+        return read_table(path, **kw)
+
+    monkeypatch.setattr(sinks.pq, "read_table", counted_read)
 
     def mk_state(rows):
         return spark.createDataFrame(
             [(k, v, 1, v, 0, 0, 0) for k, v in rows], schema=GOLD_SCHEMA
+        ).toArrow()
+
+    def upsert(rows, version):
+        reads.clear()
+        applied = gold.upsert_state(rows, version=version, combine=replace_rows)
+        if applied:
+            assert len(reads) == (1 if version else 0), f"v{version} read {reads}"
+            assert all(f"/data/v_{version - 1}/" in p for p in reads)
+        return applied
+
+    def finalized():
+        d = f"{root}/gold/data"
+        return sorted(
+            int(n[2:]) for n in os.listdir(d) if os.path.exists(f"{d}/{n}/_SUCCESS")
         )
 
     version = 0
@@ -797,14 +757,12 @@ def test_bucketed_upsert_random_commit_sequences(spark, tmp_path_factory):
         new_vals = [(k, float(step * 100 + i)) for i, k in enumerate(changed)]
         for k, v in new_vals:
             ref[k] = v
-        # the commit replaces the changed keys' rows in their buckets
-        rows, buckets = gold.bucketed_batch(mk_state(new_vals))
-        gold.upsert_state(rows, version=version, bucket_ids=buckets, combine=replace_rows)
+        # the commit replaces the changed keys' rows in the state
+        rows = mk_state(new_vals)
+        assert upsert(rows, version) is True
         if step == 2:
             # replay: same version re-offered after a "crash" — no-op
-            assert gold.upsert_state(
-                rows, version=version, bucket_ids=buckets, combine=replace_rows
-            ) is False
+            assert upsert(rows, version) is False
         if step == 3:
             # crash-redo: wipe this version's CDF files (state committed,
             # registration lost) and re-offer — the version is redone
@@ -812,13 +770,19 @@ def test_bucketed_upsert_random_commit_sequences(spark, tmp_path_factory):
                 if name.startswith(f"v{version}_"):
                     os.remove(f"{gold.cdf_dir}/{name}")
             assert not gold.version_applied(version)
-            assert gold.upsert_state(
-                rows, version=version, bucket_ids=buckets, combine=replace_rows
-            ) is True
+            # a vacuum before the redo keeps the state it redoes from
+            gold.vacuum(keep_last=1)
+            assert finalized() == [version - 1, version]
+            assert upsert(rows, version) is True
         if step in (2, 4):
             gold.vacuum(keep_last=2)
+            assert finalized() == [version - 1, version]
         got = {r["group_id"]: r["cumulative_score"] for r in gold.read().collect()}
         assert got == ref, f"state diverged at step {step}"
+        assert all(
+            len([n for n in os.listdir(f"{root}/gold/data/v_{v}") if n.endswith(".parquet")]) == 1
+            for v in finalized()
+        )
         version += 1
 
     shutil.rmtree(root, ignore_errors=True)
