@@ -5,7 +5,7 @@ from kafka_streaming_spark.io.sources import (
     kafka_stream,
     rate_stream,
 )
-from kafka_streaming_spark.io.serving import ParquetServingWriter, latest_per_id
+from kafka_streaming_spark.io.serving import ParquetServingWriter
 from kafka_streaming_spark.io.sinks import (
     ParquetAppendTable,
     ParquetUpsertTable,
@@ -19,6 +19,5 @@ __all__ = [
     "ParquetAppendTable",
     "ParquetUpsertTable",
     "ParquetServingWriter",
-    "latest_per_id",
     "start_foreach_batch",
 ]

@@ -1,40 +1,66 @@
 """Pluggable serving sinks (SURVEY.md §2.2 K3, reference tomongo.py:6-17).
 
 The reference's serving stage is a ``foreachBatch`` body that stamps
-``_id = group_id`` and appends to MongoDB (documents replaced by ``_id`` →
-effective upsert).  The engine generalizes that into a writer interface so
+``_id = group_id`` and appends to MongoDB, which replaces each document by
+``_id`` on write.  The engine generalizes that into a writer interface so
 the same pipeline stage can target parquet (broker-free tests), MongoDB
 (the reference's deployment, import-gated on the mongo-spark connector), or
 any future key-value store.
 
 Contract: ``write(df, batch_id)`` receives the batch WITH the ``_id`` column
-already stamped, one row per ``_id``; writers append — last-writer-wins per
-``_id`` is resolved at read time by :func:`latest_per_id` (J3) or by the
-store itself (Mongo ``_id`` replacement).
+already stamped, one row per ``_id``.  Last-writer-wins per ``_id`` (J3) is
+resolved on write, by ``_id`` replacement, in both writers: the store
+keeps only the newest row of each ``_id``, so a read needs no rank.
+Replaying a batch id rewrites the same rows (an idempotent sink).
+
+Parquet layout and commit protocol::
+
+    <serving>/snapshot.parquet      the store: one row per ``_id``
+    <serving>/snapshot.parquet.tmp  the staged next snapshot
+
+A write reads the snapshot, drops the rows whose ``_id`` the batch
+carries, appends the batch, writes the staged file and ``os.replace``\\ s
+it over the snapshot.  The rename is the commit: a crash before it leaves
+the previous snapshot (and a staged file the next write overwrites), a
+crash after it leaves the new one, and the re-offered batch rewrites the
+same rows either way.  A read opens the snapshot once, so a concurrent
+rename cannot tear it.  A write costs O(|store|), which is |groups| rows.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 from typing import Protocol
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType, StructField, StructType
 
-from kafka_streaming_spark.ops.dedup import latest_per_key
 from kafka_streaming_spark.schemas import GOLD_SCHEMA
 
 #: A serving row: the gold row plus its ``_id`` (= ``group_id``).
 SERVING_SCHEMA = StructType([*GOLD_SCHEMA.fields, StructField("_id", StringType(), True)])
+_ARROW_SCHEMA = pa.schema([f.with_nullable(True) for f in to_arrow_schema(SERVING_SCHEMA)])
+SNAPSHOT = "snapshot.parquet"
 
 
-def latest_per_id(spark: SparkSession, *paths: str) -> DataFrame:
-    """The serving read rule (J3) over the serving rows in ``paths``: the
-    latest row per ``_id`` by ``updated_at``, ``event_count`` breaking a tie
-    (two commits in one second; a later fold has counted more events)."""
-    rows = spark.read.schema(SERVING_SCHEMA).parquet(*paths)
-    return latest_per_key(rows, ["_id"], "updated_at", tiebreak="event_count")
+def _snapshot_rows(path: str) -> pa.Table:
+    """The rows of the snapshot in ``path``, or none before the first write."""
+    try:
+        with open(f"{path}/{SNAPSHOT}", "rb") as fh:
+            return pq.read_table(fh)
+    except FileNotFoundError:
+        return _ARROW_SCHEMA.empty_table()
+
+
+def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet serving store in ``path`` as a DataFrame, one row per
+    ``_id``.  The rows are read on the driver when this is called, so the
+    frame never rescans a file a later write replaces."""
+    return spark.createDataFrame(_snapshot_rows(path), SERVING_SCHEMA)
 
 
 class ServingWriter(Protocol):
@@ -44,51 +70,34 @@ class ServingWriter(Protocol):
 
 
 class ParquetServingWriter:
-    """Append-to-directory serving store (the broker/DB-free stand-in);
-    read it with :func:`latest_per_id`.
+    """The broker/DB-free stand-in for the reference's MongoDB collection:
+    one snapshot file replaced by ``_id`` on every write (module docstring);
+    read it with :func:`read_snapshot`.  Single-writer, like every table in
+    this engine."""
 
-    OPTIMIZE-analog (reference utils.py:111-124): an append-only serving
-    dir otherwise grows one file set per micro-batch forever, so reads
-    degrade to O(all appends).  When the parquet file count exceeds
-    ``compact_threshold``, the writer compacts the CURRENT file set to its
-    latest-row-per-key state and removes the old files — reads stay
-    O(state).  Crash-safe without coordination: compacted rows are written
-    before originals are removed, and duplicated rows are harmless under
-    the last-writer-wins read (identical latest row wins either way).
-    Single-writer, like every table in this engine.
-    """
-
-    def __init__(self, path: str, compact_threshold: int | None = 64):
-        self.path = path
-        self.compact_threshold = compact_threshold
-
-    def _files(self) -> list[str]:
-        if not os.path.isdir(self.path):
-            return []
-        return [
-            f"{self.path}/{n}" for n in os.listdir(self.path) if n.endswith(".parquet")
-        ]
+    def __init__(self, path: str):
+        self.path = path.rstrip("/")
+        os.makedirs(self.path, exist_ok=True)
+        if any(n.endswith(".parquet") and n != SNAPSHOT for n in os.listdir(self.path)):
+            # the append layout: its rows are in files this writer never
+            # reads, so it would serve only the groups written from now on
+            raise ValueError(f"{self.path} holds a serving store in the append layout; rebuild it")
 
     def write(self, df: DataFrame, batch_id: int) -> None:
-        df.write.mode("append").parquet(self.path)
-        if self.compact_threshold and len(self._files()) > self.compact_threshold:
-            self.compact(df.sparkSession)
+        """Fetch the batch as Arrow, the batch's one Spark job, and fold it
+        into the snapshot."""
+        self.compact(df.toArrow())
 
-    def compact(self, spark: SparkSession) -> None:
-        old = self._files()
-        if not old:
-            return
-        stage = f"{self.path}/_compact_stage"
-        latest_per_id(spark, *old).coalesce(1).write.mode("overwrite").parquet(stage)
-        for name in os.listdir(stage):
-            if name.endswith(".parquet"):
-                os.rename(f"{stage}/{name}", f"{self.path}/compacted_{name}")
-        shutil.rmtree(stage, ignore_errors=True)
-        for path in old:
-            try:
-                os.remove(path)
-            except OSError:
-                pass
+    def compact(self, rows: pa.Table) -> None:
+        """Replace the snapshot's rows of the ``_id``\\ s in ``rows`` by
+        ``rows`` and commit the result with one rename.  (A compaction on
+        every write; the benchmark's tracer wraps the method by name.)"""
+        rows = rows.select(_ARROW_SCHEMA.names).cast(_ARROW_SCHEMA)
+        prior = _snapshot_rows(self.path)
+        kept = prior.filter(pc.invert(pc.is_in(prior["_id"], value_set=rows["_id"])))
+        staged = f"{self.path}/{SNAPSHOT}.tmp"
+        pq.write_table(pa.concat_tables([kept, rows]), staged)
+        os.replace(staged, f"{self.path}/{SNAPSHOT}")
 
 
 class MongoServingWriter:

@@ -113,6 +113,10 @@ from kafka_streaming_spark.io.sources import file_stream
 #: Regexes over the cdf file name (see module docstring).
 _VERSION_RE = r"/v(\d+)_"
 _CTYPE_RE = r"/v\d+_(insert|update_preimage|update_postimage|delete)_"
+#: Rows per parquet row group of a silver commit: Spark splits a file by
+#: row group, so a large (backfill) commit is read by several tasks, while
+#: a live commit of a few hundred rows stays one group.
+_ROW_GROUP_ROWS = 65_536
 
 
 def _write_json(path: str, obj) -> None:
@@ -255,7 +259,7 @@ class ParquetAppendTable(_ParquetTable):
         if not fresh.num_rows:
             return
         staged = f"{self.root}/stage/{version}.parquet"
-        pq.write_table(fresh, staged)
+        pq.write_table(fresh, staged, row_group_size=_ROW_GROUP_ROWS)
         os.rename(staged, f"{self.cdf_dir}/v{version}_insert_{uuid.uuid4().hex}.parquet")
 
 

@@ -11,8 +11,9 @@ Topology (reference → engine):
    feed → insert-only filter → per-batch groupBy aggregate → running-total
    upsert into the gold table.
 3. ``gold_to_mongo`` (tomongo.py:20-35) → ``gold_to_serving``: gold change
-   feed → drop preimages → key-replaced write to a serving table
-   (last-writer-wins per ``group_id``, J3).
+   feed → drop preimages → newest row per ``group_id`` → a write that
+   replaces the store's row of each ``_id`` (last-writer-wins per
+   ``group_id``, J3, settled on write as MongoDB does).
 
 Backend: plain parquet, so the whole pipeline runs with only pyspark —
 silver is a ``ParquetAppendTable``, gold a ``ParquetUpsertTable``, serving
@@ -34,7 +35,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_streaming_spark.io.serving import ParquetServingWriter, latest_per_id
+from kafka_streaming_spark.io.serving import ParquetServingWriter, read_snapshot
 from kafka_streaming_spark.io.sinks import (
     ParquetAppendTable,
     ParquetUpsertTable,
@@ -86,7 +87,7 @@ class MedallionPipeline:
         self.serving_dir = f"{self.root}/serving"
         # K3 is pluggable (reference tomongo.py → MongoServingWriter); the
         # default parquet writer keeps the pipeline runnable with pyspark
-        # alone, same J3 read semantics.
+        # alone, with the same replace-by-``_id`` semantics.
         self.serving_writer = serving_writer or ParquetServingWriter(self.serving_dir)
 
     # -- stage 1: bronze → silver ------------------------------------------
@@ -178,15 +179,16 @@ class MedallionPipeline:
     # -- stage 3: gold CDF → serving ----------------------------------------
 
     def _serving_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """K3 body (tomongo.py:6-17): key-replaced append through the
-        pluggable writer — ``_id`` = group_id, last-writer-wins at read
-        time (J3) or by the store's ``_id`` replacement.
+        """K3 body (tomongo.py:6-17): key-replaced write through the
+        pluggable writer — ``_id`` = group_id, last-writer-wins (J3) by the
+        store's ``_id`` replacement.
 
         A trigger can span several gold versions, each with its own row
         for a group; only the newest reaches the writer, so a store that
         replaces by ``_id`` in write order cannot keep a stale one.  The
         batch is a few small files: on one partition the window needs no
-        shuffle, and the write stays the batch's one Spark job."""
+        shuffle, and the writer's read of it (the parquet writer's
+        ``toArrow()``) stays the batch's one Spark job."""
         images = batch_df.filter("_change_type != 'update_preimage'").coalesce(1)
         out = (
             latest_per_key(images, ["group_id"], "_commit_version")
@@ -246,6 +248,8 @@ class MedallionPipeline:
             q.awaitTermination()
 
     def serving_view(self) -> DataFrame:
-        """J3 read side of the parquet serving store: the latest row per
-        ``_id`` (``io.serving.latest_per_id``)."""
-        return latest_per_id(self.spark, self.serving_dir)
+        """The parquet serving store, one row per ``_id`` (J3 is settled on
+        write): its snapshot read on the driver at call time
+        (``io.serving.read_snapshot``), so no Spark scan or rank runs and
+        a concurrent write cannot fail the read."""
+        return read_snapshot(self.spark, self.serving_dir)

@@ -9,7 +9,9 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from kafka_streaming_spark.io import sinks
 from kafka_streaming_spark.ops.projections import derive_event_columns
@@ -142,3 +144,27 @@ def test_silver_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, m
     files = os.listdir(f"{root}/silver/data/append")
     for v in range(len(FAULTS)):
         assert len([n for n in files if n.startswith(f"v{v}_insert_")]) == 1, f"v{v}: {files}"
+
+
+def test_large_commit_is_one_file_of_several_row_groups(spark, tmp_path_factory):
+    """A commit larger than ``_ROW_GROUP_ROWS`` (a backfill batch) lands as
+    one file split into row groups, which Spark reads as several tasks;
+    every row is read back once."""
+    root = str(tmp_path_factory.mktemp("silverrowgroups"))
+    pipe = MedallionPipeline(spark, root)
+    n = sinks._ROW_GROUP_ROWS + 1000
+    events = spark.range(n).select(
+        F.concat(F.lit("e"), F.col("id").cast("string")).alias("id"),
+        F.concat(F.lit("g"), (F.col("id") % 7).cast("string")).alias("group_id"),
+        ((F.col("id") % 37) / 4).alias("score"),
+        (F.lit(1_700_000_000_000) + F.col("id") * 10).alias("event_timestamp"),
+    )
+    silver_cols = [f.name for f in pipe.silver.schema.fields]
+    pipe.silver.insert_if_absent(
+        derive_event_columns(events).select(*silver_cols), version=0, prune_col="minute_timestamp"
+    )
+    (name,) = os.listdir(pipe.silver.cdf_dir)
+    assert pq.ParquetFile(f"{pipe.silver.cdf_dir}/{name}").num_row_groups >= 2
+    silver = pipe.silver.read()
+    assert silver.count() == n
+    assert silver.select("id").distinct().count() == n
