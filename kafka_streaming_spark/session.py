@@ -78,6 +78,13 @@ STREAMING_CONF: dict[str, str] = {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     ),
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    # No checkpoint file manager here (``spark.sql.streaming.
+    # checkpointFileManagerClass``): the right one depends on where the
+    # checkpoints live, not on the session.  On HDFS or S3A the FileContext
+    # default and the FileSystem manager differ in rename atomicity and
+    # cost, so a session-wide switch could weaken a cluster deployment's
+    # checkpoints.  ``MedallionPipeline`` sets the FileSystem manager on its
+    # own session because its root is local, where the two are equivalent.
 }
 
 

@@ -25,6 +25,23 @@ The change feeds between stages are consumed as streams (``stream_cdf``)
 — each upstream commit becomes a downstream micro-batch, which is exactly
 the incremental-view-maintenance property the reference gets from Delta
 CDF (per-trigger work ∝ delta, not history).
+
+Checkpoints: the root is a local directory by construction (every table
+commit is an ``os.rename``), so the pipeline writes its streaming
+checkpoints — offset, commit and source logs, and the RocksDB state
+store's changelog files — through Spark's
+``FileSystemBasedCheckpointFileManager`` rather than the default
+FileContext manager.  On ``file:`` the two give the same guarantee: the
+FileContext rename falls through to Hadoop's check-then-rename
+``AbstractFileSystem.renameInternal``, which ``RawLocalFs`` does not
+override.  They differ in cost when Hadoop's native library is missing
+(``NativeIO.isAvailable()`` false): each FileContext write then forks
+about 20 ``stat``/``chmod`` processes and takes 36-93 ms, against about 4
+processes and 10-50 ms through the FileSystem manager (one atomic
+checkpoint write from py4j, 4 vCPU host), and a bronze→silver trigger
+makes 11 such writes.  Integrity checks stay on: Spark's
+``<v>.changelog.crc`` checkpoint checksums and Hadoop's ``.crc`` sidecars
+are written as before.
 """
 
 from __future__ import annotations
@@ -45,6 +62,13 @@ from kafka_streaming_spark.ops.aggregates import combine_states_arrow, group_agg
 from kafka_streaming_spark.ops.dedup import latest_per_key
 from kafka_streaming_spark.ops.projections import derive_event_columns
 from kafka_streaming_spark.schemas import GOLD_SCHEMA, SILVER_SCHEMA
+
+#: Spark's internal SQL conf naming the streaming checkpoint file manager,
+#: and the manager the pipeline's local checkpoints are written through.
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_SYSTEM_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
 
 
 def watermark_dedup(
@@ -75,6 +99,14 @@ class MedallionPipeline:
         watermark_delay: str = "30 seconds",
         serving_writer=None,
     ):
+        """Points the session's checkpoint file manager at Spark's
+        FileSystem manager before any of the pipeline's queries start: the
+        root is local (see the module docstring), and on a host without
+        Hadoop's native library the switch took the benchmark's traced
+        bronze→silver batch p50 from 0.78 to 0.45 s (4 vCPU).  The conf is
+        a session conf: other streaming queries started on ``spark`` use
+        it too, and a ``spark.newSession()`` keeps Spark's default."""
+        spark.conf.set(CHECKPOINT_MANAGER_CONF, FILE_SYSTEM_CHECKPOINT_MANAGER)
         self.spark = spark
         self.root = root.rstrip("/")
         self.watermark_delay = watermark_delay
@@ -138,7 +170,11 @@ class MedallionPipeline:
         no shuffle, and no rows for an empty batch.  The rest runs on the
         driver: ``group_agg_arrow`` aggregates per group, and
         ``upsert_state`` folds that into the prior state with
-        ``combine_states_arrow`` and commits it as one file."""
+        ``combine_states_arrow`` and commits it as one file.  ``vacuum``
+        then drops every applied version but the newest two: a version is
+        the full state, commits fold from the newest, and the one before it
+        stays for a reader that resolved its file (``read()``) before this
+        commit landed."""
         if self.gold.version_applied(batch_id):
             # foreachBatch replay after a crash between the gold commit and
             # the checkpoint commit: the running totals already include this
@@ -159,6 +195,7 @@ class MedallionPipeline:
             return new.append_column("updated_at", pa.repeat(updated_at, new.num_rows))
 
         self.gold.upsert_state(agg, version=batch_id, combine=fold)
+        self.gold.vacuum(keep_last=2)
 
     def start_silver_to_gold(self, available_now: bool = True, max_files_per_trigger: int = 50):
         """S2: stream the silver change feed in bounded batches of at most

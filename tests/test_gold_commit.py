@@ -289,6 +289,7 @@ def test_gold_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, mon
         pipe._gold_batch(batch_df, v)  # restart: the same batch re-offered
         assert pipe.gold.version_applied(v)
         assert not os.path.exists(f"{root}/gold/stage/cdf_{v}")
+        assert _parquet_files(f"{root}/gold/data/v_{v}") == 1  # one state file per commit
 
         want = (
             pa.Table.from_pylist([dict(zip(EVENT_SCHEMA.names, e)) for e in events])
@@ -308,11 +309,13 @@ def test_gold_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, mon
         _check_cdf(pipe.gold.read_cdf().collect(), v + 1)
         # each key's newest postimage/insert in the feed is its table row
         assert _last_images(pipe) == {k: tuple(map(_bits, row)) for k, row in gold.items()}
-    # every commit wrote one state file and at most three cdf files
+    # every commit wrote at most three cdf files; the pipeline's vacuum
+    # keeps only the newest two state versions
     for v in range(len(FAULTS)):
         files = [n for n in os.listdir(pipe.gold.cdf_dir) if n.startswith(f"v{v}_")]
         assert 1 <= len(files) <= 3
-        assert _parquet_files(f"{root}/gold/data/v_{v}") == 1
+    n = len(FAULTS)
+    assert sorted(os.listdir(f"{root}/gold/data")) == [f"v_{n - 2}", f"v_{n - 1}"]
 
 
 def _last_images(pipe) -> dict:

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -167,6 +168,152 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path_factory):
     silver = pipe.silver.read()
     assert silver.count() == len({r[0] for r in all_rows})
     assert silver.groupBy("id").count().filter("count > 1").count() == 0
+
+
+def _checkpoint_manager(session, path: str) -> str:
+    """The class of the checkpoint file manager a streaming query started
+    on ``session`` writes ``path`` through."""
+    jvm = session._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path), session._jsparkSession.sessionState().newHadoopConf()
+    )
+    return manager.getClass().getSimpleName()
+
+
+def _assert_gold_is_fold(pipe, rows) -> None:
+    """Gold equals the pyarrow fold of the events, one per id."""
+    first = {r[0]: r for r in reversed(rows)}
+    want = (
+        pa.Table.from_pylist([dict(zip(EVENT_SCHEMA.names, r)) for r in first.values()])
+        .group_by("group_id")
+        .aggregate([("score", "sum"), ("score", "count"),
+                    ("event_timestamp", "min"), ("event_timestamp", "max")])
+        .to_pylist()
+    )
+    got = {r["group_id"]: r for r in pipe.gold.read().collect()}
+    assert sorted(got) == sorted(r["group_id"] for r in want)
+    for w in want:
+        g = got[w["group_id"]]
+        assert (g["event_count"], g["first_event_timestamp"], g["last_event_timestamp"]) == (
+            w["score_count"], w["event_timestamp_min"], w["event_timestamp_max"]
+        ), w["group_id"]
+        assert g["cumulative_score"] == pytest.approx(w["score_sum"], rel=1e-9), w["group_id"]
+
+
+def test_pipeline_checkpoints_use_file_system_manager_and_keep_checksums(spark, pipeline_result):
+    """The pipeline writes its local checkpoints through Spark's FileSystem
+    manager and keeps every integrity check: the stream-dedup state store
+    still writes Spark's ``<v>.changelog.crc`` checksums, and every
+    changelog, offset and commit file keeps Hadoop's ``.crc`` sidecar.  The
+    switch is the pipeline session's own: a new session keeps Spark's
+    default manager."""
+    pipe, _events = pipeline_result
+    checkpoints = f"{pipe.root}/_checkpoints"
+    assert _checkpoint_manager(pipe.spark, checkpoints) == "FileSystemBasedCheckpointFileManager"
+
+    b2s = f"{checkpoints}/bronze_to_silver"
+    state = f"{b2s}/state/0"
+    partitions = [d for d in os.listdir(state) if d.isdigit()]
+    assert partitions
+    for part in partitions:
+        names = set(os.listdir(f"{state}/{part}"))
+        changelogs = [n for n in names if n.endswith(".changelog")]
+        assert changelogs, f"state partition {part} holds no changelog"
+        for name in changelogs:
+            assert f"{name}.crc" in names, f"no checkpoint checksum for {part}/{name}"
+            assert f".{name}.crc" in names, f"no Hadoop sidecar for {part}/{name}"
+    for log in ("offsets", "commits"):
+        names = set(os.listdir(f"{b2s}/{log}"))
+        batches = [n for n in names if n.isdigit()]
+        assert batches, log
+        assert all(f".{n}.crc" in names for n in batches), f"{log} lost a .crc sidecar"
+
+    assert _checkpoint_manager(spark.newSession(), checkpoints) == "FileContextBasedCheckpointFileManager"
+
+
+def test_gold_vacuum_keeps_two_versions_and_the_prior_state(spark, tmp_path_factory, monkeypatch):
+    """Each gold commit holds the full state, and the pipeline keeps the
+    newest two: a multi-batch drain leaves two version dirs, a replayed
+    batch id still reads as applied, and a commit that crashed before its
+    ``_SUCCESS`` is redone from the version before it.  Gold is the
+    pyarrow fold of every event throughout."""
+    from kafka_streaming_spark.io import sinks
+    from kafka_streaming_spark.io.generator import EventGenerator
+    from kafka_streaming_spark.io.sources import file_stream
+    from tests.conftest import Crash, _arm
+
+    root = str(tmp_path_factory.mktemp("goldvacuum"))
+    rows = EventGenerator(seed=12, workers=2).rows(200)
+    drained, held = rows[:-40], rows[-40:]
+    _write_event_source(spark, spark.createDataFrame(drained, schema=EVENT_SCHEMA), f"{root}/source")
+    pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 hour")
+    stream = file_stream(spark, f"{root}/source", EVENT_SCHEMA, max_files_per_trigger=1)
+    pipe.start_bronze_to_silver(stream, available_now=True).awaitTermination()
+    pipe.start_silver_to_gold(available_now=True, max_files_per_trigger=1).awaitTermination()
+
+    gold_data = f"{root}/tables/gold/data"
+    silver_versions = sorted(
+        int(n[1:].split("_")[0]) for n in os.listdir(pipe.silver.cdf_dir) if n.endswith(".parquet")
+    )
+    assert len(silver_versions) >= 3  # one gold batch per silver commit
+    last = len(silver_versions) - 1
+    assert sorted(os.listdir(gold_data)) == [f"v_{last - 1}", f"v_{last}"]
+    _assert_gold_is_fold(pipe, drained)
+
+    # replay: the last batch id re-offered after a lost checkpoint commit
+    pipe._gold_batch(pipe.silver.read_cdf(starting_version=silver_versions[-1]), last)
+    _assert_gold_is_fold(pipe, drained)
+
+    # redo: the next commit crashes after its state file, then is re-offered
+    version = silver_versions[-1] + 1
+    pipe.silver.insert_if_absent(
+        derive_event_columns(spark.createDataFrame(held, schema=EVENT_SCHEMA)).select(
+            *pipe.silver.schema.fieldNames()
+        ),
+        version=version,
+        prune_col="minute_timestamp",
+    )
+    batch = pipe.silver.read_cdf(starting_version=version)
+    with monkeypatch.context() as m:
+        _arm(m, sinks, "_write_json", lambda a, calls: a[0].endswith("/_SUCCESS"))
+        with pytest.raises(Crash):
+            pipe._gold_batch(batch, last + 1)
+    assert not pipe.gold.version_applied(last + 1)
+    pipe._gold_batch(batch, last + 1)
+    assert sorted(os.listdir(gold_data)) == [f"v_{last}", f"v_{last + 1}"]
+    _assert_gold_is_fold(pipe, rows)
+
+
+def test_resume_from_checkpoints_written_by_the_default_manager(spark, tmp_path_factory):
+    """Upgrade in place: a root whose checkpoints a pipeline wrote through
+    Spark's default FileContext manager resumes under the FileSystem
+    manager.  Each id lands in silver once, and gold and serving are the
+    pyarrow fold of every event."""
+    from kafka_streaming_spark.io.generator import EventGenerator
+    from kafka_streaming_spark.io.sources import file_stream
+    from kafka_streaming_spark.streaming.pipeline import CHECKPOINT_MANAGER_CONF
+
+    root = str(tmp_path_factory.mktemp("managerupgrade"))
+    rows = EventGenerator(seed=11, workers=2).rows(200)
+    first, second = rows[:250], rows[250:]
+    src = f"{root}/source"
+
+    old = spark.newSession()
+    old_pipe = MedallionPipeline(old, f"{root}/tables", watermark_delay="1 hour")
+    old.conf.unset(CHECKPOINT_MANAGER_CONF)  # the checkpoints of a pipeline that set no manager
+    assert _checkpoint_manager(old, root) == "FileContextBasedCheckpointFileManager"
+    old.createDataFrame(first, schema=EVENT_SCHEMA).coalesce(1).write.parquet(src)
+    old_pipe.run_available_now(file_stream(old, src, EVENT_SCHEMA, max_files_per_trigger=4))
+    assert old_pipe.silver.read().count() == len({r[0] for r in first})
+
+    spark.createDataFrame(second, schema=EVENT_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+    pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 hour")
+    pipe.run_available_now(file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=4))
+    ids = [r["id"] for r in pipe.silver.read().select("id").collect()]
+    assert sorted(ids) == sorted({r[0] for r in rows})
+    _assert_gold_is_fold(pipe, rows)
+    serving = {r["_id"]: r["event_count"] for r in pipe.serving_view().collect()}
+    assert serving == {r["group_id"]: r["event_count"] for r in pipe.gold.read().collect()}
 
 
 def test_running_counter_stateful(spark, tmp_path_factory):
