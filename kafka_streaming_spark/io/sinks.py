@@ -61,6 +61,12 @@ uuid ids is ~115 bytes of Arrow: a 220k-row batch is ~25 MB, and Spark's
 default ``spark.driver.maxResultSize`` of 1 GiB fails the fetch at about
 9M rows.  Nothing checks the cap; a batch past it fails its commit and
 stops the stream, and needs a tighter cap, not a distributed commit.
+The bronze→silver stream dedup adds its state to the same heap in local
+mode, where executors run in the driver JVM: its in-memory state store
+(``streaming.pipeline``) reported 96 MiB at 252k keys in the benchmark's
+traced backlog (``memoryUsedBytes``, the versions Spark keeps in memory
+included), about 400 bytes per key.  That state is bounded by rate ×
+watermark delay, not by history.
 
 Commit protocol of ``insert_if_absent`` (crash at any step, then the same
 version re-offered): the fresh rows written to ``stage/<version>.parquet``,

@@ -28,8 +28,8 @@ shuffle join + AQE instead of OOM-ing the executors on a forced broadcast.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +48,12 @@ from kafka_streaming_spark.ops.partitioning import salt, spread, unsalt_agg
 from kafka_streaming_spark.ops.windows import paginate, top_k_per_group
 from kafka_streaming_spark.ops.timeops import sliding_agg, tumbling_agg
 from kafka_streaming_spark.schemas import load_table
+from kafka_streaming_spark.session import (
+    HDFS_STATE_STORE,
+    ROCKSDB_STATE_STORE,
+    STATE_STORE_PROVIDER_CONF,
+    scoped_conf,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
@@ -117,53 +123,38 @@ def _bucket_ms(ts: Column) -> Column:
     return F.floor(F.unix_millis(ts) / 1000 / 180).cast("long")
 
 
-@contextmanager
+def _witness_conf(
+    spark: SparkSession, parts_env: str, partitions: int, provider: str, no_data_batches: bool
+):
+    """The scoped confs of a witness drain (see the two callers)."""
+    conf = {
+        "spark.sql.shuffle.partitions": str(int(os.environ.get(parts_env, partitions))),
+        STATE_STORE_PROVIDER_CONF: provider,
+    }
+    if not no_data_batches:
+        conf["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    return scoped_conf(spark, conf)
+
+
 def _tiny_stream_conf(
     spark: SparkSession, partitions: int = 4, no_data_batches: bool = True
 ):
     """Confine a tiny-state streaming WITNESS drain to cheap settings:
     few shuffle partitions and the in-memory HDFS state store.  The
-    session default is RocksDB (right for the 100M-event medallion
-    path), but per-batch RocksDB maintenance is pure overhead at
-    witness state sizes — measured 2x the whole drain wall-clock on
+    session default is RocksDB (``transformWithState`` needs it), but
+    per-batch RocksDB maintenance is pure overhead at witness state
+    sizes — measured 2x the whole drain wall-clock on
     t_stream_left_outer (12.7s → 6.3s).  State-store choice is an
     execution detail: emitted rows are identical under either provider.
-    Restores both session confs afterward.
+    Restores the session confs afterward.
 
     ``KSS_TINY_PARTS`` overrides ``partitions`` (A/B harness hook, same
     rationale as ``_tws_stream_conf``).  ``no_data_batches=False``
     scopes ``noDataMicroBatches.enabled=false`` to the drain — see the
     ``_tws_stream_conf`` docstring for when that is safe."""
-    import os
-
-    partitions = int(os.environ.get("KSS_TINY_PARTS", partitions))
-    part_key = "spark.sql.shuffle.partitions"
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_parts = spark.conf.get(part_key)
-    prev_prov = spark.conf.get(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider",
-    )
-    prev_nodata = spark.conf.get(nodata_key, "true")
-    spark.conf.set(part_key, str(partitions))
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider",
-    )
-    if not no_data_batches:
-        spark.conf.set(nodata_key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(part_key, prev_parts)
-        spark.conf.set(prov_key, prev_prov)
-        spark.conf.set(nodata_key, prev_nodata)
+    return _witness_conf(spark, "KSS_TINY_PARTS", partitions, HDFS_STATE_STORE, no_data_batches)
 
 
-@contextmanager
 def _tws_stream_conf(
     spark: SparkSession, partitions: int = 4, no_data_batches: bool = True
 ):
@@ -172,7 +163,7 @@ def _tws_stream_conf(
     choice from :func:`_tiny_stream_conf`, because TWS state uses
     multiple column families, which HDFSBackedStateStoreProvider
     rejects outright (``multipleColumnFamiliesNotSupported``, measured
-    r9).  Restores both session confs afterward.
+    r9).  Restores the session confs afterward.
 
     ``KSS_TWS_PARTS`` overrides ``partitions`` (A/B harness hook: state
     partition count is a fixed per-batch cost — one RocksDB instance +
@@ -186,33 +177,7 @@ def _tws_stream_conf(
     r12 interleaved A/B on t_stream_session_tws: 6.5s → 5.3s.  Leave
     True for any witness whose returned rows are emitted BY the
     trailing no-data batch."""
-    import os
-
-    partitions = int(os.environ.get("KSS_TWS_PARTS", partitions))
-    part_key = "spark.sql.shuffle.partitions"
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_parts = spark.conf.get(part_key)
-    prev_prov = spark.conf.get(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider",
-    )
-    prev_nodata = spark.conf.get(nodata_key, "true")
-    spark.conf.set(part_key, str(partitions))
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    if not no_data_batches:
-        spark.conf.set(nodata_key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(part_key, prev_parts)
-        spark.conf.set(prov_key, prev_prov)
-        spark.conf.set(nodata_key, prev_nodata)
+    return _witness_conf(spark, "KSS_TWS_PARTS", partitions, ROCKSDB_STATE_STORE, no_data_batches)
 
 
 #: Poll deadlines (seconds), one per attempt, for the live-trigger

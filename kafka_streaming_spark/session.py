@@ -22,6 +22,8 @@ Design notes for scale:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -71,12 +73,22 @@ BASE_CONF: dict[str, str] = {
     "spark.sql.files.maxPartitionBytes": "128m",
 }
 
-#: Streaming-only configs (reference: utils.py:41-42 — RocksDB state store +
-#: changelog checkpointing keeps dedup state off-heap at 100M-event scale).
+#: The session conf naming the streaming state store provider, and the two
+#: providers Spark ships.
+STATE_STORE_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB_STATE_STORE = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+HDFS_STATE_STORE = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+
+#: Streaming-only configs (reference: utils.py:41-42).  RocksDB with
+#: changelog checkpointing stays the session default because
+#: ``transformWithState`` needs it: its state has several column families,
+#: which the in-memory HDFS-backed provider rejects.  Queries whose state is
+#: small or bounded by a watermark scope the in-memory provider to their own
+#: start with :func:`scoped_conf` (``MedallionPipeline.start_bronze_to_silver``,
+#: the registry's tiny-state witness drains); a query keeps the provider its
+#: checkpoint was created with.
 STREAMING_CONF: dict[str, str] = {
-    "spark.sql.streaming.stateStore.providerClass": (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    ),
+    STATE_STORE_PROVIDER_CONF: ROCKSDB_STATE_STORE,
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
     # No checkpoint file manager here (``spark.sql.streaming.
     # checkpointFileManagerClass``): the right one depends on where the
@@ -86,6 +98,27 @@ STREAMING_CONF: dict[str, str] = {
     # checkpoints.  ``MedallionPipeline`` sets the FileSystem manager on its
     # own session because its root is local, where the two are equivalent.
 }
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set ``conf`` on ``spark`` for the ``with`` body, then give each key
+    back its previous value (or unset it if it had none), also when the
+    body raises.  A streaming query reads its session conf when it starts,
+    so ``start()`` inside the body keeps the scoped values for its life.
+    The values are the session's while the body runs: a query another
+    thread starts on ``spark`` meanwhile sees them too."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def delta_available() -> bool:

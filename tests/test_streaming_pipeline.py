@@ -7,7 +7,9 @@ F1 adversarial variants).
 
 from __future__ import annotations
 
+import json
 import os
+from collections import Counter
 
 import pyarrow as pa
 import pytest
@@ -200,26 +202,36 @@ def _assert_gold_is_fold(pipe, rows) -> None:
         assert g["cumulative_score"] == pytest.approx(w["score_sum"], rel=1e-9), w["group_id"]
 
 
+def _b2s_offset_conf(b2s: str, batch: int) -> dict:
+    """The SQL confs the bronze→silver offset log recorded for ``batch``."""
+    with open(f"{b2s}/offsets/{batch}") as f:
+        return json.loads(f.read().splitlines()[1])["conf"]
+
+
+def _state_files(b2s: str) -> dict[str, set[str]]:
+    """File names in each bronze→silver state partition."""
+    state = f"{b2s}/state/0"
+    return {d: set(os.listdir(f"{state}/{d}")) for d in os.listdir(state) if d.isdigit()}
+
+
 def test_pipeline_checkpoints_use_file_system_manager_and_keep_checksums(spark, pipeline_result):
     """The pipeline writes its local checkpoints through Spark's FileSystem
     manager and keeps every integrity check: the stream-dedup state store
-    still writes Spark's ``<v>.changelog.crc`` checksums, and every
-    changelog, offset and commit file keeps Hadoop's ``.crc`` sidecar.  The
-    switch is the pipeline session's own: a new session keeps Spark's
-    default manager."""
+    still writes Spark's ``<v>.delta.crc`` (and ``.snapshot.crc``)
+    checksums, and every state, offset and commit file keeps Hadoop's
+    ``.crc`` sidecar.  The switch is the pipeline session's own: a new
+    session keeps Spark's default manager."""
     pipe, _events = pipeline_result
     checkpoints = f"{pipe.root}/_checkpoints"
     assert _checkpoint_manager(pipe.spark, checkpoints) == "FileSystemBasedCheckpointFileManager"
 
     b2s = f"{checkpoints}/bronze_to_silver"
-    state = f"{b2s}/state/0"
-    partitions = [d for d in os.listdir(state) if d.isdigit()]
+    partitions = _state_files(b2s)
     assert partitions
-    for part in partitions:
-        names = set(os.listdir(f"{state}/{part}"))
-        changelogs = [n for n in names if n.endswith(".changelog")]
-        assert changelogs, f"state partition {part} holds no changelog"
-        for name in changelogs:
+    for part, names in partitions.items():
+        state_files = [n for n in names if n.endswith((".delta", ".snapshot"))]
+        assert any(n.endswith(".delta") for n in state_files), f"state partition {part} holds no delta"
+        for name in state_files:
             assert f"{name}.crc" in names, f"no checkpoint checksum for {part}/{name}"
             assert f".{name}.crc" in names, f"no Hadoop sidecar for {part}/{name}"
     for log in ("offsets", "commits"):
@@ -314,6 +326,149 @@ def test_resume_from_checkpoints_written_by_the_default_manager(spark, tmp_path_
     _assert_gold_is_fold(pipe, rows)
     serving = {r["_id"]: r["event_count"] for r in pipe.serving_view().collect()}
     assert serving == {r["group_id"]: r["event_count"] for r in pipe.gold.read().collect()}
+
+
+def test_b2s_state_store_provider_is_scoped_to_its_query(spark, tmp_path_factory, monkeypatch):
+    """The bronze→silver query keeps its dedup state in the in-memory
+    HDFS-backed store, and only that query: ``start_bronze_to_silver``
+    leaves the session's provider (RocksDB) as it found it, also when
+    ``start()`` raises, and a transformWithState query, which needs
+    RocksDB, still runs on the same session afterwards."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from kafka_streaming_spark.io.generator import EventGenerator
+    from kafka_streaming_spark.io.sources import file_stream
+    from kafka_streaming_spark.session import (
+        HDFS_STATE_STORE,
+        ROCKSDB_STATE_STORE,
+        STATE_STORE_PROVIDER_CONF,
+    )
+
+    root = str(tmp_path_factory.mktemp("providerscope"))
+    rows = EventGenerator(seed=21, workers=2).rows(100)
+    src = f"{root}/source"
+    spark.createDataFrame(rows, schema=EVENT_SCHEMA).coalesce(1).write.parquet(src)
+    assert spark.conf.get(STATE_STORE_PROVIDER_CONF) == ROCKSDB_STATE_STORE
+
+    pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 hour")
+    query = pipe.start_bronze_to_silver(file_stream(spark, src, EVENT_SCHEMA))
+    assert spark.conf.get(STATE_STORE_PROVIDER_CONF) == ROCKSDB_STATE_STORE
+    query.awaitTermination()
+    b2s = f"{root}/tables/_checkpoints/bronze_to_silver"
+    assert _b2s_offset_conf(b2s, 0)[STATE_STORE_PROVIDER_CONF] == HDFS_STATE_STORE
+    assert all(any(n.endswith(".delta") for n in names) for names in _state_files(b2s).values())
+    assert pipe.silver.read().count() == len({r[0] for r in rows})
+
+    seen = []
+
+    def failing_start(writer, *args, **kwargs):
+        seen.append(spark.conf.get(STATE_STORE_PROVIDER_CONF))
+        raise RuntimeError("start failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataStreamWriter, "start", failing_start)
+        with pytest.raises(RuntimeError, match="start failed"):
+            pipe.start_bronze_to_silver(file_stream(spark, src, EVENT_SCHEMA))
+    assert seen == [HDFS_STATE_STORE]
+    assert spark.conf.get(STATE_STORE_PROVIDER_CONF) == ROCKSDB_STATE_STORE
+
+    from kafka_streaming_spark.streaming.protobuf_compat import ensure_protobuf
+
+    if ensure_protobuf() is None:
+        pytest.skip("no google.protobuf runtime available for the transformWithState check")
+    from kafka_streaming_spark.streaming.stateful import running_counter_tws
+
+    counts: dict[str, int] = {}
+
+    def capture(batch_df, _batch_id):
+        counts.update({r["group_id"]: r["event_count"] for r in batch_df.collect()})
+
+    (
+        running_counter_tws(file_stream(spark, src, EVENT_SCHEMA).select("group_id", "score"))
+        .writeStream.outputMode("update")
+        .foreachBatch(capture)
+        .option("checkpointLocation", f"{root}/tws")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    assert counts == dict(Counter(r[1] for r in rows))
+
+
+def test_resume_b2s_from_a_rocksdb_checkpoint(spark, tmp_path_factory, monkeypatch):
+    """Upgrade in place: a root whose bronze→silver checkpoint was created
+    under the session's RocksDB default resumes on RocksDB, since a query
+    takes its provider from its checkpoint's offset log, and keeps its
+    dedup state.  The second file repeats some ids: each id lands in silver
+    once, gold is the pyarrow fold of every distinct event and serving
+    equals gold."""
+    from contextlib import nullcontext
+
+    from kafka_streaming_spark.io.generator import EventGenerator
+    from kafka_streaming_spark.io.sources import file_stream
+    from kafka_streaming_spark.session import ROCKSDB_STATE_STORE, STATE_STORE_PROVIDER_CONF
+    from kafka_streaming_spark.streaming import pipeline as pipeline_mod
+
+    root = str(tmp_path_factory.mktemp("rocksdbupgrade"))
+    rows = EventGenerator(seed=31, workers=2).rows(200)
+    first, second = rows[:250], rows[250:] + rows[200:250]
+    src = f"{root}/source"
+    b2s = f"{root}/tables/_checkpoints/bronze_to_silver"
+
+    with monkeypatch.context() as m:  # a pipeline that scoped no provider
+        m.setattr(pipeline_mod, "scoped_conf", lambda _spark, _conf: nullcontext())
+        old_pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 hour")
+        spark.createDataFrame(first, schema=EVENT_SCHEMA).coalesce(1).write.parquet(src)
+        old_pipe.run_available_now(file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=4))
+    assert _b2s_offset_conf(b2s, 0)[STATE_STORE_PROVIDER_CONF] == ROCKSDB_STATE_STORE
+
+    spark.createDataFrame(second, schema=EVENT_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+    pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 hour")
+    query = pipe.start_bronze_to_silver(file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=4))
+    query.awaitTermination()
+    pipe.start_silver_to_gold().awaitTermination()
+    pipe.start_gold_to_serving().awaitTermination()
+
+    last = max(int(n) for n in os.listdir(f"{b2s}/offsets") if n.isdigit())
+    assert last > 0
+    assert _b2s_offset_conf(b2s, last)[STATE_STORE_PROVIDER_CONF] == ROCKSDB_STATE_STORE
+    for names in _state_files(b2s).values():
+        assert not any(n.endswith(".delta") for n in names)
+    # the resumed batch started from the first drain's state: every id so far
+    assert query.recentProgress[0]["stateOperators"][0]["numRowsTotal"] == len({r[0] for r in rows})
+
+    ids = [r["id"] for r in pipe.silver.read().select("id").collect()]
+    assert sorted(ids) == sorted({r[0] for r in rows})
+    _assert_gold_is_fold(pipe, rows)
+    serving = {r["_id"]: r["event_count"] for r in pipe.serving_view().collect()}
+    assert serving == {r["group_id"]: r["event_count"] for r in pipe.gold.read().collect()}
+
+
+def test_b2s_dedup_state_is_bounded_by_the_watermark(spark, tmp_path_factory):
+    """The premise that lets the stream-dedup state live on the heap: it
+    holds the keys of the last ``watermark_delay`` of event time, not of
+    history.  After a later file whose event times are an hour past the
+    first file's, with a one-minute delay, the state falls to the later
+    file's keys."""
+    from kafka_streaming_spark.io.generator import EventGenerator
+    from kafka_streaming_spark.io.sources import file_stream
+
+    root = str(tmp_path_factory.mktemp("dedupbound"))
+    early = EventGenerator(seed=41, workers=2).rows(100)
+    late = EventGenerator(seed=141, workers=2, start_ms=EventGenerator.start_ms + 3_600_000).rows(50)
+    src = f"{root}/source"
+    spark.createDataFrame(early, schema=EVENT_SCHEMA).coalesce(1).write.parquet(src)
+    spark.createDataFrame(late, schema=EVENT_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+
+    pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 minute")
+    query = pipe.start_bronze_to_silver(file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=1))
+    query.awaitTermination()
+    totals = [p["stateOperators"][0]["numRowsTotal"] for p in query.recentProgress]
+    early_ids, late_ids = {r[0] for r in early}, {r[0] for r in late}
+    assert not early_ids & late_ids
+    assert max(totals) == len(early_ids) + len(late_ids)
+    assert totals[-1] == len(late_ids)
+    assert pipe.silver.read().count() == len(early_ids) + len(late_ids)
 
 
 def test_running_counter_stateful(spark, tmp_path_factory):
