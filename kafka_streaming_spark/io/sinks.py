@@ -5,8 +5,8 @@ Each table owns its file layout; the pipeline only calls its methods.
 
 The emulation is **single-writer micro-batch** semantics — exactly the
 reference's usage (one streaming query owns each table; foreachBatch bodies
-are serial per query).  With delta-spark present, ``delta_utils`` provides
-the real ACID implementation behind the same method names.
+are serial per query).  ``delta_utils`` holds the Delta versions of the two
+commits (real ACID MERGE), as functions the pipeline does not call.
 
 Layout::
 
@@ -17,13 +17,11 @@ Layout::
                                (``cdf_dir``)
 
     ParquetUpsertTable (gold, keyed upserts)
-    <root>/data/v_<version>/part-<uuid>.parquet   the full table state
-                               after commit <version>, one file
-    <root>/data/v_<version>/_SUCCESS        finalizes the version; lists
-                               the change-feed files of its commit; the
-                               current state is the newest finalized version
+    <root>/data/v_<version>.parquet   the full table state after commit
+                               <version>, one file; the current state is
+                               the newest; the newest two are kept
     <root>/cdf/                flat change-feed dir; every file is named
-                               ``v<version>_<change_type>_<name>.parquet``
+                               ``v<version>_<change_type>_<uuid>.parquet``
 
     both: <root>/stage/        staged writes of an open commit
 
@@ -46,11 +44,11 @@ batch is fetched to the driver once as Arrow, and everything after that
 fetch runs on the driver with pyarrow, because a Spark job's fixed
 scheduling cost would dominate a micro-batch this size.
 ``insert_if_absent`` fetches the batch rows, probes the table's keys with
-a pyarrow dataset scan pruned to the batch's ``prune_col`` values,
+a pyarrow dataset scan pruned to the batch's values of the leading key,
 anti-joins and writes the fresh rows; ``upsert_state`` takes the caller's
 batch as one Arrow table (≤ one row per changed key), reads the prior
-state file, folds the batch in, writes the new state file, then the
-change feed.  First commits and replays go through the same path as
+state file, folds the batch in, and stages the change feed and the new
+state file.  First commits and replays go through the same path as
 every other commit.
 
 Driver-memory premise: the driver holds one micro-batch of rows (plus,
@@ -76,10 +74,17 @@ earlier attempt left, and its probe sees the rows an earlier attempt
 renamed, so each row lands in one file.
 
 Commit protocol of ``upsert_state`` (crash at any step, then the same
-version re-offered): state file → ``_SUCCESS`` → change-feed files
-staged, then renamed into ``cdf/`` preimage first.  ``version_applied``
-holds only once every file ``_SUCCESS`` lists is in ``cdf/``; any earlier
-crash leaves a version the retry deletes and redoes in full.
+version re-offered): change-feed files staged as
+``stage/v<version>_<type>_<uuid>.parquet``, then the state file staged
+and renamed to ``data/v_<version>.parquet`` — that rename is the commit
+— then the feed files renamed into ``cdf/`` under the same names,
+preimage first, then the state files older than the previous one
+deleted.  ``version_applied`` holds once the state file is in ``data/``
+and no feed file of the version is left in ``stage/``.  A retry after
+the state rename rolls forward, renaming the feed files left; a retry
+before it deletes the version's staged feed files and redoes the
+version from the newest state below it.  A feed file that reached
+``cdf/`` is never deleted or rewritten.
 
 Change-feed metadata (``_change_type``, ``_commit_version``) is **derived
 from the file name at read time** (``attach_cdf_metadata``) instead of being
@@ -99,9 +104,7 @@ synthetic delete rows in tests.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import uuid
 from collections.abc import Callable, Sequence
 
@@ -116,23 +119,17 @@ from pyspark.sql.types import StructType
 
 from kafka_streaming_spark.io.sources import file_stream
 
-#: Regexes over the cdf file name (see module docstring).
-_VERSION_RE = r"/v(\d+)_"
-_CTYPE_RE = r"/v\d+_(insert|update_preimage|update_postimage|delete)_"
+#: Regexes over a change-feed file's path, anchored on its file name
+#: (see module docstring): a directory named like ``v1_run`` in the root's
+#: path must not be read as the version.
+_VERSION_RE = r"/v(\d+)_[^/]*$"
+_CTYPE_RE = r"/v\d+_(insert|update_preimage|update_postimage|delete)_[^/]*$"
+#: The change types of a gold commit in the order its feed files land.
+_FEED_TYPES = ("update_preimage", "update_postimage", "insert")
 #: Rows per parquet row group of a silver commit: Spark splits a file by
 #: row group, so a large (backfill) commit is read by several tasks, while
 #: a live commit of a few hundred rows stays one group.
 _ROW_GROUP_ROWS = 65_536
-
-
-def _write_json(path: str, obj) -> None:
-    """Write ``obj`` under a temp name, then rename it to ``path``: a crash
-    mid-write leaves no truncated file that every later open would fail
-    to parse."""
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(obj, fh)
-    os.replace(tmp, path)
 
 
 def attach_cdf_metadata(df: DataFrame) -> DataFrame:
@@ -219,24 +216,19 @@ class ParquetAppendTable(_ParquetTable):
         """Current table state (S4 batch scan of the merge target)."""
         return self._scan(self.cdf_dir)
 
-    def insert_if_absent(
-        self,
-        batch: DataFrame,
-        version: int,
-        prune_col: str | None = None,
-        batch_unique: bool = False,
-    ) -> None:
+    def insert_if_absent(self, batch: DataFrame, version: int, batch_unique: bool = False) -> None:
         """J1: append the batch rows whose key is not present yet.
 
         The batch's one Spark job fetches its rows as Arrow; the rest runs
         on the driver.  A batch with no fresh rows commits nothing
         (watermark eviction under availableNow ends on such a batch).
 
-        ``prune_col`` restricts the existing-keys probe to the batch's
-        values of that column (F3, silver.py:22-28's "Prune IN List"): the
-        pyarrow scan of the data dir reads only the key columns, filtered
-        to those values.  ``prune_col`` must be part of ``keys`` (it is the
-        reference's ``minute_timestamp``, part of the MERGE key).
+        The existing-keys probe is restricted to the batch's values of the
+        leading key (F3, silver.py:22-28's "Prune IN List"): the pyarrow
+        scan of the data dir reads only the key columns, filtered to those
+        values.  A row matching a batch row shares its leading key, so the
+        filter drops no match (for silver the leading key is the
+        reference's ``minute_timestamp``).
 
         ``batch_unique=True`` skips the within-batch dropDuplicates — one
         full shuffle of every micro-batch — for callers whose upstream
@@ -257,9 +249,9 @@ class ParquetAppendTable(_ParquetTable):
         rows = self._conform(deduped.select(*self.schema.fieldNames()).toArrow())
         if not rows.num_rows:
             return
-        where = None if prune_col is None else pc.field(prune_col).isin(pc.unique(rows[prune_col]))
+        lead = self.keys[0]
         current = ds.dataset(self.cdf_dir, schema=self._arrow_schema, format="parquet").to_table(
-            columns=self.keys, filter=where
+            columns=self.keys, filter=pc.field(lead).isin(pc.unique(rows[lead]))
         )
         fresh = rows.join(current, keys=self.keys, join_type="left anti")
         if not fresh.num_rows:
@@ -271,22 +263,25 @@ class ParquetAppendTable(_ParquetTable):
 
 class ParquetUpsertTable(_ParquetTable):
     """A keyed table on plain parquet (gold pattern, J2): ``upsert_state``
-    commits the full state as a new version, one file; the caller's combine
-    (e.g. ``combine_states_arrow``) folds the batch into the prior state on
-    the driver, and the changed keys' rows are logged to the change feed in
+    commits the full state as a new version, one file
+    ``data/v_<version>.parquet``; the caller's combine (e.g.
+    ``combine_states_arrow``) folds the batch into the prior state on the
+    driver, and the changed keys' rows are logged to the change feed in
     ``cdf/``."""
 
     def __init__(self, spark: SparkSession, root: str, schema: StructType, keys: Sequence[str]):
         super().__init__(spark, root, schema, keys)
-        if os.path.exists(f"{self.root}/_table_meta.json"):
-            # the key-bucketed layout: its state is in data/v_*/__bucket=*/,
-            # which this table would read as empty, restarting every total
+        data = f"{self.root}/data"
+        if os.path.isdir(data) and any(e.is_dir() for e in os.scandir(data)):
+            # an old layout (version dirs, key-bucketed or not): its state is
+            # in data/v_<N>/, which this table would read as empty,
+            # restarting every running total
             raise ValueError(
-                f"{self.root} holds an upsert table in the key-bucketed layout, "
-                "which is no longer read; rebuild it from its source"
+                f"{self.root} holds an upsert table in an old layout (a directory "
+                "under data/), which is no longer read; rebuild it from its source"
             )
-        os.makedirs(f"{self.root}/data", exist_ok=True)
-        os.makedirs(self.cdf_dir, exist_ok=True)
+        for d in (data, self.cdf_dir, f"{self.root}/stage"):
+            os.makedirs(d, exist_ok=True)
 
     # -- versions ---------------------------------------------------------
 
@@ -294,50 +289,37 @@ class ParquetUpsertTable(_ParquetTable):
     def cdf_dir(self) -> str:
         return f"{self.root}/cdf"
 
+    def _state(self, version: int) -> str:
+        return f"{self.root}/data/v_{version}.parquet"
+
     def _versions(self) -> list[int]:
-        """Every version dir's number, oldest first; a dir without its
-        ``_SUCCESS`` marker is a crashed half-write, which readers skip."""
-        return sorted(int(n[2:]) for n in os.listdir(f"{self.root}/data") if n.startswith("v_"))
+        """Every committed version's number, oldest first."""
+        return sorted(int(n[2:].split(".")[0]) for n in os.listdir(f"{self.root}/data"))
+
+    def _staged(self, version: int) -> list[str]:
+        """The change-feed files of commit ``version`` still in ``stage/``,
+        in the order they land in ``cdf/``: preimages first, so a reader of
+        the feed never sees a postimage before the preimage of its key."""
+        names = os.listdir(f"{self.root}/stage")
+        return [n for t in _FEED_TYPES for n in names if n.startswith(f"v{version}_{t}_")]
 
     def version_applied(self, version: int) -> bool:
-        """True when commit ``version`` fully ran (state finalized AND its
-        change-feed files registered).  foreachBatch replays re-run with the
-        same batch_id after a crash between the table commit and the
-        checkpoint commit — callers use this to no-op instead of folding the
-        same micro-batch into running state twice.
-
-        ``_SUCCESS`` lists the change-feed files of the commit
-        (:meth:`upsert_state`); the commit is final when every one of them
-        is in ``cdf/``, so a crash between any two renames reads as
-        interrupted and the retry redoes the whole version."""
-        marker = f"{self.root}/data/v_{version}/_SUCCESS"
-        if not os.path.exists(marker):
-            return False
-        with open(marker) as fh:
-            names = json.load(fh)
-        return all(os.path.exists(f"{self.cdf_dir}/{name}") for name in names)
-
-    def _state_file(self, before_version: int | None = None) -> str | None:
-        """The state file of the newest finalized version (optionally among
-        versions < ``before_version``), or None for an empty table: the
-        version dirs are walked newest first, stopping at the first with
-        its ``_SUCCESS``."""
-        for v in reversed(self._versions()):
-            vd = f"{self.root}/data/v_{v}"
-            if (before_version is None or v < before_version) and os.path.exists(f"{vd}/_SUCCESS"):
-                (name,) = [n for n in os.listdir(vd) if n.endswith(".parquet")]
-                return f"{vd}/{name}"
-        return None
+        """True when commit ``version`` fully ran: its state file is in
+        ``data/`` and none of its change-feed files is left in ``stage/``.
+        foreachBatch replays re-run with the same batch_id after a crash
+        between the table commit and the checkpoint commit — callers use
+        this to no-op instead of folding the same micro-batch into running
+        state twice."""
+        return os.path.exists(self._state(version)) and not self._staged(version)
 
     def read_buckets(self) -> DataFrame:
-        """Current table state: the state file of the newest finalized
-        version — the parquet-mirror analogue of a Delta log replay.  (The
-        name predates the one-file layout; the benchmark's tracer wraps the
-        method by name.)"""
-        path = self._state_file()
-        if path is None:
+        """Current table state: the newest state file — the parquet-mirror
+        analogue of a Delta log replay.  (The name predates the one-file
+        layout; the benchmark's tracer wraps the method by name.)"""
+        versions = self._versions()
+        if not versions:
             return self._empty()
-        return self.spark.read.schema(self.schema).parquet(path)
+        return self.spark.read.schema(self.schema).parquet(self._state(versions[-1]))
 
     def read(self) -> DataFrame:
         """Current table state (S4 batch scan of the merge target)."""
@@ -362,75 +344,60 @@ class ParquetUpsertTable(_ParquetTable):
         keys (e.g. ``combine_states_arrow``).  The other rows are copied
         unchanged.  Driver memory is the state plus the batch.
 
-        Commit protocol: the new state, one file, into
-        ``data/v_<version>/``; then ``_SUCCESS``, which makes the version
-        visible to readers and lists the change-feed files the commit will
-        register; then the change feed, as Delta labels it — a changed key
-        present in the prior state emits its previous row as
-        ``update_preimage`` and its new row as ``update_postimage``, a key
-        new to the table emits ``insert``.  Each type is one file, staged
-        and renamed into ``cdf/`` under a fresh name, preimages first.
+        Commit protocol: the change feed is staged first, as Delta labels
+        it — a changed key present in the prior state emits its previous
+        row as ``update_preimage`` and its new row as ``update_postimage``,
+        a key new to the table emits ``insert``; each type is one file,
+        ``stage/v<version>_<type>_<uuid>.parquet``.  Then the new state,
+        one file, is staged and renamed to ``data/v_<version>.parquet``:
+        that rename is the commit.  Then the feed files are renamed into
+        ``cdf/`` under the same names, preimages first.  Last, the state
+        files older than the previous one are deleted; the previous one
+        stays for a reader that resolved it (``read()``) before this
+        commit landed.
 
         Idempotent under micro-batch replay (same ``version`` re-offered
-        after a crash): a fully applied version is a no-op (returns False);
-        any other attempt deletes what an earlier attempt left of this
-        version and redoes it in full from the version before it."""
-        if self.version_applied(version):
-            return False
-        state_dir = f"{self.root}/data/v_{version}"
-        stage = f"{self.root}/stage/cdf_{version}"
-        if os.path.exists(f"{state_dir}/_SUCCESS"):
-            os.remove(f"{state_dir}/_SUCCESS")  # readers drop it before its files go
-        shutil.rmtree(state_dir, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-        for name in os.listdir(self.cdf_dir):
-            if name.startswith(f"v{version}_"):
-                os.remove(f"{self.cdf_dir}/{name}")
-
-        (key,) = self.keys  # upsert tables are keyed on one column
-        rows = self._conform(batch)
-        path = self._state_file(before_version=version)
-        prior = pq.read_table(path, schema=self._arrow_schema) if path else self._arrow_schema.empty_table()
-        changed = pc.is_in(prior[key], value_set=rows[key])
-        pre = prior.filter(changed)
-        post = self._conform(combine(pre, rows))
-        os.makedirs(state_dir)
-        pq.write_table(
-            pa.concat_tables([prior.filter(pc.invert(changed)), post]),
-            f"{state_dir}/part-{uuid.uuid4().hex}.parquet",
-        )
-        updated = pc.is_in(post[key], value_set=pre[key])
-        cdf = {
-            "update_preimage": pre,
-            "update_postimage": post.filter(updated),
-            "insert": post.filter(pc.invert(updated)),
-        }
-        names = {
-            t: f"v{version}_{t}_{uuid.uuid4().hex}.parquet" for t, part in cdf.items() if part.num_rows
-        }
-        _write_json(f"{state_dir}/_SUCCESS", sorted(names.values()))
-        # Rename order: preimages land in cdf/ FIRST, postimage and insert
-        # files last; a reader of the feed never sees a postimage before
-        # the preimage of its key.
-        os.makedirs(stage)
-        for t, name in names.items():
-            pq.write_table(cdf[t], f"{stage}/{name}")
-        for name in names.values():
-            os.rename(f"{stage}/{name}", f"{self.cdf_dir}/{name}")
-        shutil.rmtree(stage, ignore_errors=True)
-        return True
-
-    def vacuum(self, keep_last: int = 2) -> None:
-        """D3: drop the applied versions older than the newest ``keep_last``
-        applied ones.  Each version holds the full state, so an older one
-        is never read again; counting applied versions only keeps the state
-        an interrupted newest commit redoes from.  This bounds the versions
-        kept; it does not compact anything."""
-        if keep_last < 1:
-            raise ValueError("vacuum must keep at least the current version")
-        for v in [v for v in self._versions() if self.version_applied(v)][:-keep_last]:
-            os.remove(f"{self.root}/data/v_{v}/_SUCCESS")  # readers drop it before its files go
-            shutil.rmtree(f"{self.root}/data/v_{v}", ignore_errors=True)
+        after a crash): a fully applied version is a no-op (returns False).
+        A version whose state file landed rolls forward, renaming the feed
+        files left in ``stage/``, so a feed file a reader may have consumed
+        is never rewritten.  A version whose state file did not land clears
+        its staged feed and is redone from the newest state below it."""
+        state = self._state(version)
+        committed = not os.path.exists(state)
+        if committed:
+            stage = f"{self.root}/stage"
+            for name in self._staged(version):
+                os.remove(f"{stage}/{name}")
+            (key,) = self.keys  # upsert tables are keyed on one column
+            rows = self._conform(batch)
+            below = [v for v in self._versions() if v < version]
+            prior = (
+                pq.read_table(self._state(below[-1]), schema=self._arrow_schema)
+                if below
+                else self._arrow_schema.empty_table()
+            )
+            changed = pc.is_in(prior[key], value_set=rows[key])
+            pre = prior.filter(changed)
+            post = self._conform(combine(pre, rows))
+            updated = pc.is_in(post[key], value_set=pre[key])
+            feed = {
+                "update_preimage": pre,
+                "update_postimage": post.filter(updated),
+                "insert": post.filter(pc.invert(updated)),
+            }
+            for t, part in feed.items():
+                if part.num_rows:
+                    pq.write_table(part, f"{stage}/v{version}_{t}_{uuid.uuid4().hex}.parquet")
+            pq.write_table(
+                pa.concat_tables([prior.filter(pc.invert(changed)), post]), f"{stage}/v_{version}.parquet"
+            )
+            os.rename(f"{stage}/v_{version}.parquet", state)
+        staged = self._staged(version)
+        for name in staged:
+            os.rename(f"{self.root}/stage/{name}", f"{self.cdf_dir}/{name}")
+        for v in self._versions()[:-2]:
+            os.remove(self._state(v))
+        return committed or bool(staged)
 
 
 def start_foreach_batch(

@@ -17,9 +17,11 @@ Topology (reference → engine):
 
 Backend: plain parquet, so the whole pipeline runs with only pyspark —
 silver is a ``ParquetAppendTable``, gold a ``ParquetUpsertTable``, serving
-a pluggable writer (``io.serving``); with delta-spark installed the same
-stages target real Delta tables via ``delta_utils`` (same method shapes).
-Each table owns its file layout; this module only calls its methods.
+a pluggable writer (``io.serving``).  ``MedallionPipeline`` always builds
+the parquet tables, delta-spark installed or not; ``delta_utils`` offers
+the Delta versions of the two commits as functions (tested for parity in
+``tests/test_delta_parity.py``) but no stage calls them.  Each table owns
+its file layout; this module only calls its methods.
 
 The change feeds between stages are consumed as streams (``stream_cdf``)
 — each upstream commit becomes a downstream micro-batch, which is exactly
@@ -150,9 +152,7 @@ class MedallionPipeline:
         within a micro-batch, so the sink skips its own within-batch dedup
         shuffle (cross-batch/replay duplicates are still removed by the
         anti-join)."""
-        self.silver.insert_if_absent(
-            batch_df, version=batch_id, prune_col="minute_timestamp", batch_unique=True
-        )
+        self.silver.insert_if_absent(batch_df, version=batch_id, batch_unique=True)
 
     def start_bronze_to_silver(self, events: DataFrame, available_now: bool = True):
         """``events`` must carry the EVENT_SCHEMA columns (id, group_id,
@@ -191,11 +191,11 @@ class MedallionPipeline:
         no shuffle, and no rows for an empty batch.  The rest runs on the
         driver: ``group_agg_arrow`` aggregates per group, and
         ``upsert_state`` folds that into the prior state with
-        ``combine_states_arrow`` and commits it as one file.  ``vacuum``
-        then drops every applied version but the newest two: a version is
-        the full state, commits fold from the newest, and the one before it
-        stays for a reader that resolved its file (``read()``) before this
-        commit landed."""
+        ``combine_states_arrow`` and commits it as one state file, renamed
+        into place.  The commit keeps the newest two state files: each
+        holds the full state, the next commit folds from the newest, and
+        the one before it stays for a reader that resolved its file
+        (``read()``) before this commit landed."""
         if self.gold.version_applied(batch_id):
             # foreachBatch replay after a crash between the gold commit and
             # the checkpoint commit: the running totals already include this
@@ -216,7 +216,6 @@ class MedallionPipeline:
             return new.append_column("updated_at", pa.repeat(updated_at, new.num_rows))
 
         self.gold.upsert_state(agg, version=batch_id, combine=fold)
-        self.gold.vacuum(keep_last=2)
 
     def start_silver_to_gold(self, available_now: bool = True, max_files_per_trigger: int = 50):
         """S2: stream the silver change feed in bounded batches of at most

@@ -14,10 +14,12 @@ re-aggregation of everything that reached silver — so a soak that "keeps up"
 but corrupts the fold cannot pass.
 
 Scale shape: the rate source partitions its row range (``numPartitions``);
-every downstream stage is the same O(Δ) bucket-pruned commit path the
-backfill mode uses, so per-batch work is bounded by batch size, not by
-accumulated state — the property that lets the same topology hold at
-1000-executor scale.
+every downstream stage runs the same commit path the backfill mode uses,
+one Spark job per micro-batch with the rest on the driver (``io.sinks``).
+Per-batch work is not bounded by batch size alone: a gold commit rewrites
+the whole state, O(|state|) in the number of groups, serving rewrites its
+one snapshot per batch, and silver's key probe, though pruned to the
+batch's minutes, opens every silver file.
 """
 
 from __future__ import annotations

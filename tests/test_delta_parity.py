@@ -185,7 +185,7 @@ def test_silver_invariants_parquet(spark, tmp_path_factory):
     )
 
     def insert(batch, version):
-        pq.insert_if_absent(batch, version=version, prune_col="minute_timestamp")
+        pq.insert_if_absent(batch, version=version)
 
     _silver_invariants(spark, insert, pq.read)
 

@@ -68,10 +68,6 @@ FOLD_SET = settings(
 )
 
 
-def _parquet_files(d: str) -> int:
-    return len([n for n in os.listdir(d) if n.endswith(".parquet")])
-
-
 def _state_table(rows: dict, updated_at: int = 7) -> list[tuple]:
     return [
         (k, s, n, s / n, lo, max(lo, hi), updated_at) for k, (s, n, lo, hi) in sorted(rows.items())
@@ -109,7 +105,7 @@ def test_arrow_fold_matches_combine_states_bit_for_bit(spark, tmp_path_factory, 
         STATE_COLS + ["updated_at"],
     )
     assert table == {**prior_only, **{k: v + (9,) for k, v in want.items() if k in batch}}
-    assert _parquet_files(f"{root}/data/v_1") == 1
+    assert os.path.isfile(f"{root}/data/v_1.parquet")
 
 
 # -- the Arrow aggregate against group_agg ------------------------------------
@@ -166,38 +162,61 @@ def test_arrow_group_agg_matches_group_agg(spark, batch):
             assert math.isclose(r["avg_score"], w["avg_score"], rel_tol=1e-9, abs_tol=bound / w["event_count"])
 
 
-def _torn_dump(obj, fh):
-    """``json.dump`` that crashes halfway through the file."""
-    fh.write('["v0_insert_')
-    raise Crash("dump")
+def _tear(monkeypatch, should_tear):
+    """Make ``pq.write_table`` write only the first half of the first file
+    whose path satisfies ``should_tear(path)``, then raise ``Crash``: a
+    crash mid-write."""
+    write = sinks.pq.write_table
+
+    def torn(table, where, *args, **kwargs):
+        write(table, where, *args, **kwargs)
+        if should_tear(str(where)):
+            with open(where, "r+b") as fh:
+                fh.truncate(os.path.getsize(where) // 2)
+            raise Crash("torn write")
+
+    monkeypatch.setattr(sinks.pq, "write_table", torn)
 
 
-def test_success_marker_survives_a_crash_mid_write(spark, tmp_path_factory, monkeypatch):
-    """A crash while a version's ``_SUCCESS`` is being written leaves the
-    version unapplied, not unreadable: the re-offered batch commits it."""
+def test_torn_state_write_leaves_the_version_unapplied(spark, tmp_path_factory, monkeypatch):
+    """A crash while a version's state file is being written leaves the
+    version unapplied, not unreadable: the table still reads the version
+    before it, and the re-offered batch commits it."""
     gold = ParquetUpsertTable(
-        spark, str(tmp_path_factory.mktemp("marker")), GOLD_SCHEMA, keys=("group_id",)
+        spark, str(tmp_path_factory.mktemp("torn")), GOLD_SCHEMA, keys=("group_id",)
     )
-    batch = spark.createDataFrame(_state_table({"g1": (1.0, 1, 5, 6)}), schema=GOLD_SCHEMA)
-    rows = batch.toArrow()
+
+    def rows(group):
+        return spark.createDataFrame(_state_table({group: (1.0, 1, 5, 6)}), schema=GOLD_SCHEMA).toArrow()
+
+    assert gold.upsert_state(rows("g1"), version=0, combine=replace_rows)
     with monkeypatch.context() as m:
-        m.setattr(sinks.json, "dump", _torn_dump)
+        _tear(m, lambda path: path.endswith("/stage/v_1.parquet"))
         with pytest.raises(Crash):
-            gold.upsert_state(rows, version=0, combine=replace_rows)
-    assert not gold.version_applied(0)
-    assert gold.upsert_state(rows, version=0, combine=replace_rows)
+            gold.upsert_state(rows("g2"), version=1, combine=replace_rows)
+    assert not gold.version_applied(1)
     assert [r["group_id"] for r in gold.read().collect()] == ["g1"]
+    assert gold.upsert_state(rows("g2"), version=1, combine=replace_rows)
+    assert sorted(r["group_id"] for r in gold.read().collect()) == ["g1", "g2"]
 
 
 # -- crash at each commit step, then the same batch re-offered ---------------
 
 
-def _after_state_file(monkeypatch):
-    _arm(monkeypatch, sinks, "_write_json", lambda a, calls: a[0].endswith("/_SUCCESS"))
+def _torn_feed_write(monkeypatch):
+    _tear(monkeypatch, lambda path: "/stage/" in path)
 
 
-def _after_success(monkeypatch):
-    _arm(monkeypatch, sinks.pq, "write_table", lambda a, calls: "/stage/" in str(a[1]))
+def _after_feed_staged(monkeypatch):
+    _arm(monkeypatch, sinks.pq, "write_table", lambda a, calls: "/stage/v_" in str(a[1]))
+
+
+def _after_state_staged(monkeypatch):
+    _arm(monkeypatch, sinks.os, "rename", lambda a, calls: "/data/v_" in str(a[1]))
+
+
+def _after_state_rename(monkeypatch):
+    _arm(monkeypatch, sinks.os, "rename", lambda a, calls: "/cdf/" in str(a[1]))
 
 
 def _after_preimage_rename(monkeypatch):
@@ -210,8 +229,10 @@ def _after_postimage_rename(monkeypatch):
 
 #: (fault, True when the fault interrupts the commit before it is final)
 FAULTS = [
-    (_after_state_file, True),
-    (_after_success, True),
+    (_torn_feed_write, True),
+    (_after_feed_staged, True),
+    (_after_state_staged, True),
+    (_after_state_rename, True),
     (_after_preimage_rename, True),
     (_after_postimage_rename, True),
     (None, False),  # after the last rename: the checkpoint commit is lost
@@ -258,12 +279,15 @@ def _check_cdf(cdf_rows: list, n_versions: int) -> None:
 
 
 def test_gold_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, monkeypatch):
-    """Batch v crashes at step v of the gold commit (after the state file
-    and before ``_SUCCESS``, after ``_SUCCESS``, after the preimage rename,
-    after the postimage rename, after the last rename) and is re-offered
-    with the same batch id, as a restarted query does.  After each: the table is the
-    pyarrow aggregate of every event so far, and the change feed holds one
-    image set per version with each key once."""
+    """Batch v crashes at step v of the gold commit (a torn staged feed
+    write, after the feed is staged, after the state file is staged, after
+    the state rename, after the preimage rename, after the postimage
+    rename, after the last rename) and is re-offered with the same batch
+    id, as a restarted query does.  After each: the table is the pyarrow
+    aggregate of every event so far, the change feed holds one image set
+    per version with each key once, every feed file that landed before the
+    crash is still there under its name (the retry rolls forward), and
+    ``data/`` holds the newest two state files."""
     root = str(tmp_path_factory.mktemp("goldcrash"))
     pipe = MedallionPipeline(spark, root)
     silver_cols = [f.name for f in pipe.silver.schema.fields]
@@ -274,7 +298,6 @@ def test_gold_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, mon
         pipe.silver.insert_if_absent(
             derive_event_columns(spark.createDataFrame(batch, schema=EVENT_SCHEMA)).select(*silver_cols),
             version=v,
-            prune_col="minute_timestamp",
         )
         batch_df = pipe.silver.read_cdf(starting_version=v).filter(F.col("_commit_version") == v)
 
@@ -286,10 +309,12 @@ def test_gold_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, mon
             else:
                 pipe._gold_batch(batch_df, v)
         assert pipe.gold.version_applied(v) is not interrupts
+        landed = set(os.listdir(pipe.gold.cdf_dir))
         pipe._gold_batch(batch_df, v)  # restart: the same batch re-offered
         assert pipe.gold.version_applied(v)
-        assert not os.path.exists(f"{root}/gold/stage/cdf_{v}")
-        assert _parquet_files(f"{root}/gold/data/v_{v}") == 1  # one state file per commit
+        assert landed <= set(os.listdir(pipe.gold.cdf_dir)), f"v{v}: a landed feed file was rewritten"
+        assert not os.listdir(f"{root}/gold/stage")
+        assert sorted(os.listdir(f"{root}/gold/data")) == [f"v_{u}.parquet" for u in range(max(v - 1, 0), v + 1)]
 
         want = (
             pa.Table.from_pylist([dict(zip(EVENT_SCHEMA.names, e)) for e in events])
@@ -309,13 +334,10 @@ def test_gold_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, mon
         _check_cdf(pipe.gold.read_cdf().collect(), v + 1)
         # each key's newest postimage/insert in the feed is its table row
         assert _last_images(pipe) == {k: tuple(map(_bits, row)) for k, row in gold.items()}
-    # every commit wrote at most three cdf files; the pipeline's vacuum
-    # keeps only the newest two state versions
+    # every commit wrote at most three cdf files
     for v in range(len(FAULTS)):
         files = [n for n in os.listdir(pipe.gold.cdf_dir) if n.startswith(f"v{v}_")]
         assert 1 <= len(files) <= 3
-    n = len(FAULTS)
-    assert sorted(os.listdir(f"{root}/gold/data")) == [f"v_{n - 2}", f"v_{n - 1}"]
 
 
 def _last_images(pipe) -> dict:
@@ -327,20 +349,44 @@ def _last_images(pipe) -> dict:
     return last
 
 
+def _assert_refused(spark, root: str) -> None:
+    """Opening ``root`` fails, names the root, and touches nothing in it."""
+    before = sorted(os.walk(root))
+    with pytest.raises(ValueError, match=re.escape(root)):
+        ParquetUpsertTable(spark, root, GOLD_SCHEMA, keys=("group_id",))
+    assert sorted(os.walk(root)) == before
+
+
+def _old_version_dir(spark, root: str, bucket: int | None = None) -> None:
+    """Version 0 of an old layout: ``data/v_0/`` finalized by its
+    ``_SUCCESS`` manifest, with the state file in it or, key-bucketed, in
+    ``__bucket=<bucket>/`` below it."""
+    vd = f"{root}/data/v_0"
+    files = vd if bucket is None else f"{vd}/__bucket={bucket}"
+    os.makedirs(files)
+    rows = spark.createDataFrame(_state_table({"g1": (1.0, 1, 5, 6)}), schema=GOLD_SCHEMA)
+    pq.write_table(rows.toArrow(), f"{files}/part-0.parquet")
+    with open(f"{vd}/_SUCCESS", "w") as fh:
+        fh.write("[]")
+
+
 def test_bucketed_root_is_refused(spark, tmp_path_factory):
     """A root in the old key-bucketed layout (``_table_meta.json`` plus
     ``data/v_<N>/__bucket=<b>/``) holds no state file this table reads;
     opening it would restart every running total from an empty prior, so
     it fails and names the root instead."""
     root = str(tmp_path_factory.mktemp("bucketed"))
-    bucket = f"{root}/data/v_0/__bucket=3"
-    os.makedirs(bucket)
-    rows = spark.createDataFrame(_state_table({"g1": (1.0, 1, 5, 6)}), schema=GOLD_SCHEMA)
-    pq.write_table(rows.toArrow(), f"{bucket}/part-0.parquet")
-    with open(f"{root}/data/v_0/_SUCCESS", "w") as fh:
-        fh.write("[]")
+    _old_version_dir(spark, root, bucket=3)
     with open(f"{root}/_table_meta.json", "w") as fh:
         fh.write('{"keys": ["group_id"], "n_buckets": 32}')
-    with pytest.raises(ValueError, match=re.escape(root)):
-        ParquetUpsertTable(spark, root, GOLD_SCHEMA, keys=("group_id",))
-    assert not os.path.exists(f"{root}/cdf")  # refused before touching the root
+    _assert_refused(spark, root)
+
+
+def test_version_dir_root_is_refused(spark, tmp_path_factory):
+    """A root in the old version-dir layout (``data/v_<N>/part-<uuid>.parquet``
+    finalized by ``_SUCCESS``) is refused the same way: its state is in a
+    directory this table no longer reads."""
+    root = str(tmp_path_factory.mktemp("versiondirs"))
+    _old_version_dir(spark, root)
+    os.makedirs(f"{root}/cdf")
+    _assert_refused(spark, root)

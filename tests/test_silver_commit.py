@@ -160,9 +160,7 @@ def test_large_commit_is_one_file_of_several_row_groups(spark, tmp_path_factory)
         (F.lit(1_700_000_000_000) + F.col("id") * 10).alias("event_timestamp"),
     )
     silver_cols = [f.name for f in pipe.silver.schema.fields]
-    pipe.silver.insert_if_absent(
-        derive_event_columns(events).select(*silver_cols), version=0, prune_col="minute_timestamp"
-    )
+    pipe.silver.insert_if_absent(derive_event_columns(events).select(*silver_cols), version=0)
     (name,) = os.listdir(pipe.silver.cdf_dir)
     assert pq.ParquetFile(f"{pipe.silver.cdf_dir}/{name}").num_row_groups >= 2
     silver = pipe.silver.read()

@@ -125,7 +125,7 @@ def test_serving_gets_one_row_per_id_when_a_trigger_spans_gold_versions(spark, t
     silver_cols = [f.name for f in pipe.silver.schema.fields]
     for v, rows in enumerate(batches):
         events = derive_event_columns(spark.createDataFrame(rows, schema=EVENT_SCHEMA))
-        pipe.silver.insert_if_absent(events.select(*silver_cols), version=v, prune_col="minute_timestamp")
+        pipe.silver.insert_if_absent(events.select(*silver_cols), version=v)
         pipe._gold_batch(pipe.silver.read_cdf(starting_version=v), batch_id=v)
 
     query = pipe.start_gold_to_serving(available_now=True)
@@ -243,18 +243,18 @@ def test_pipeline_checkpoints_use_file_system_manager_and_keep_checksums(spark, 
     assert _checkpoint_manager(spark.newSession(), checkpoints) == "FileContextBasedCheckpointFileManager"
 
 
-def test_gold_vacuum_keeps_two_versions_and_the_prior_state(spark, tmp_path_factory, monkeypatch):
+def test_gold_keeps_two_state_files_and_redoes_from_the_prior_state(spark, tmp_path_factory, monkeypatch):
     """Each gold commit holds the full state, and the pipeline keeps the
-    newest two: a multi-batch drain leaves two version dirs, a replayed
+    newest two: a multi-batch drain leaves two state files, a replayed
     batch id still reads as applied, and a commit that crashed before its
-    ``_SUCCESS`` is redone from the version before it.  Gold is the
+    state rename is redone from the state file before it.  Gold is the
     pyarrow fold of every event throughout."""
     from kafka_streaming_spark.io import sinks
     from kafka_streaming_spark.io.generator import EventGenerator
     from kafka_streaming_spark.io.sources import file_stream
     from tests.conftest import Crash, _arm
 
-    root = str(tmp_path_factory.mktemp("goldvacuum"))
+    root = str(tmp_path_factory.mktemp("goldkeeps"))
     rows = EventGenerator(seed=12, workers=2).rows(200)
     drained, held = rows[:-40], rows[-40:]
     _write_event_source(spark, spark.createDataFrame(drained, schema=EVENT_SCHEMA), f"{root}/source")
@@ -269,31 +269,65 @@ def test_gold_vacuum_keeps_two_versions_and_the_prior_state(spark, tmp_path_fact
     )
     assert len(silver_versions) >= 3  # one gold batch per silver commit
     last = len(silver_versions) - 1
-    assert sorted(os.listdir(gold_data)) == [f"v_{last - 1}", f"v_{last}"]
+    assert sorted(os.listdir(gold_data)) == [f"v_{last - 1}.parquet", f"v_{last}.parquet"]
     _assert_gold_is_fold(pipe, drained)
 
     # replay: the last batch id re-offered after a lost checkpoint commit
     pipe._gold_batch(pipe.silver.read_cdf(starting_version=silver_versions[-1]), last)
     _assert_gold_is_fold(pipe, drained)
 
-    # redo: the next commit crashes after its state file, then is re-offered
+    # redo: the next commit crashes before its state rename, then is re-offered
     version = silver_versions[-1] + 1
     pipe.silver.insert_if_absent(
         derive_event_columns(spark.createDataFrame(held, schema=EVENT_SCHEMA)).select(
             *pipe.silver.schema.fieldNames()
         ),
         version=version,
-        prune_col="minute_timestamp",
     )
     batch = pipe.silver.read_cdf(starting_version=version)
     with monkeypatch.context() as m:
-        _arm(m, sinks, "_write_json", lambda a, calls: a[0].endswith("/_SUCCESS"))
+        _arm(m, sinks.os, "rename", lambda a, calls: "/gold/data/" in str(a[1]))
         with pytest.raises(Crash):
             pipe._gold_batch(batch, last + 1)
     assert not pipe.gold.version_applied(last + 1)
+    assert sorted(os.listdir(gold_data)) == [f"v_{last - 1}.parquet", f"v_{last}.parquet"]
     pipe._gold_batch(batch, last + 1)
-    assert sorted(os.listdir(gold_data)) == [f"v_{last}", f"v_{last + 1}"]
+    assert sorted(os.listdir(gold_data)) == [f"v_{last}.parquet", f"v_{last + 1}.parquet"]
     _assert_gold_is_fold(pipe, rows)
+
+
+def test_table_file_metrics_read_the_drained_layout(spark, tmp_path_factory, monkeypatch):
+    """The benchmark's file counts (``perfbench/streaming.py::
+    table_file_metrics``) glob the tables' layouts; a layout change that
+    slipped past its glob would report 0 instead of failing.  After a
+    small drain each count equals what the tables hold: two gold state
+    files, one serving snapshot, one silver file per silver commit and
+    one gold change-feed file per commit and change type."""
+    perfbench = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+    monkeypatch.syspath_prepend(perfbench)
+    from streaming import table_file_metrics
+
+    from kafka_streaming_spark.io.generator import EventGenerator
+    from kafka_streaming_spark.io.sources import file_stream
+
+    root = str(tmp_path_factory.mktemp("filemetrics"))
+    events = spark.createDataFrame(EventGenerator(seed=13, workers=2).rows(100), schema=EVENT_SCHEMA)
+    _write_event_source(spark, events, f"{root}/source")
+    pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 hour")
+    stream = file_stream(spark, f"{root}/source", EVENT_SCHEMA, max_files_per_trigger=1)
+    pipe.start_bronze_to_silver(stream, available_now=True).awaitTermination()
+    pipe.start_silver_to_gold(available_now=True, max_files_per_trigger=1).awaitTermination()
+    pipe.start_gold_to_serving(available_now=True).awaitTermination()
+
+    silver_commits = {r[0] for r in pipe.silver.read_cdf().select("_commit_version").distinct().collect()}
+    gold_feed = pipe.gold.read_cdf().select("_commit_version", "_change_type").distinct().count()
+    assert len(silver_commits) >= 3
+    assert table_file_metrics(f"{root}/tables") == {
+        "silver.files": len(silver_commits),
+        "gold.versions": 2,
+        "gold.cdf_files": gold_feed,
+        "serving.files": 1,
+    }
 
 
 def test_resume_from_checkpoints_written_by_the_default_manager(spark, tmp_path_factory):
@@ -679,7 +713,7 @@ def test_gold_batch_replay_same_batch_id_is_noop(spark, tmp_path_factory):
     silver_rows = derive_event_columns(events).select(
         *[f.name for f in pipe.silver.schema.fields]
     )
-    pipe.silver.insert_if_absent(silver_rows, version=0, prune_col="minute_timestamp")
+    pipe.silver.insert_if_absent(silver_rows, version=0)
     cdf_batch = pipe.silver.read_cdf()
 
     pipe._gold_batch(cdf_batch, batch_id=0)
@@ -703,7 +737,6 @@ def test_gold_batch_replay_same_batch_id_is_noop(spark, tmp_path_factory):
     pipe.silver.insert_if_absent(
         derive_event_columns(more).select(*[f.name for f in pipe.silver.schema.fields]),
         version=1,
-        prune_col="minute_timestamp",
     )
     new_cdf = pipe.silver.read_cdf(starting_version=1)
     pipe._gold_batch(new_cdf, batch_id=1)
@@ -745,7 +778,6 @@ def test_silver_upgrade_in_place_from_spark_written_files(spark, tmp_path_factor
     silver.insert_if_absent(
         derive_event_columns(spark.createDataFrame(batch, schema=EVENT_SCHEMA)).select(*cols),
         version=1,
-        prune_col="minute_timestamp",
     )
     table = silver.read().collect()
     keys = [(r["minute_timestamp"], r["id"]) for r in table]
@@ -1008,15 +1040,48 @@ def test_cdf_emits_preimages_and_t4_routing(spark, tmp_path_factory):
     }
 
 
-def test_bucketed_upsert_random_commit_sequences(spark, tmp_path_factory, monkeypatch):
+def test_cdf_metadata_reads_the_file_name_not_the_root(spark, tmp_path_factory):
+    """``_commit_version`` and ``_change_type`` come from a change-feed
+    file's own name: under a root whose path holds a directory named like
+    a feed file (``v1_run``), silver's and gold's feeds still read each
+    row's own version and type."""
+    root = f"{tmp_path_factory.mktemp('cdfroot')}/v1_run/v2_insert_tables"
+    pipe = MedallionPipeline(spark, root)
+    silver_cols = pipe.silver.schema.fieldNames()
+    base_ms = 1_700_000_000_000
+    for v in range(3):
+        events = [(f"e{v}_{g}", f"g{g}", 1.0, base_ms + v * 60_000 + g) for g in range(v + 1)]
+        pipe.silver.insert_if_absent(
+            derive_event_columns(spark.createDataFrame(events, schema=EVENT_SCHEMA)).select(*silver_cols),
+            version=v,
+        )
+        pipe._gold_batch(pipe.silver.read_cdf(starting_version=v), v)
+
+    silver = pipe.silver.read_cdf().collect()
+    assert sorted((r["_commit_version"], r["id"]) for r in silver) == [
+        (v, f"e{v}_{g}") for v in range(3) for g in range(v + 1)
+    ]
+    assert {r["_change_type"] for r in silver} == {"insert"}
+    gold = pipe.gold.read_cdf().collect()
+    assert sorted((r["_commit_version"], r["_change_type"], r["group_id"]) for r in gold) == [
+        (0, "insert", "g0"),
+        (1, "insert", "g1"), (1, "update_postimage", "g0"), (1, "update_preimage", "g0"),
+        (2, "insert", "g2"),
+        (2, "update_postimage", "g0"), (2, "update_postimage", "g1"),
+        (2, "update_preimage", "g0"), (2, "update_preimage", "g1"),
+    ]
+
+
+def test_upsert_random_commit_sequences(spark, tmp_path_factory, monkeypatch):
     """Property-style torture of the versioned state store: a
     deterministic pseudo-random sequence of commits (varying key subsets),
-    interleaved replays (same version re-offered), a crash-redo (state
-    dir committed, CDF registration lost: the version is redone in full,
-    after a vacuum), and vacuums — after every step, read() must equal a
-    plain dict fold of the same sequence, every commit after the first
-    reads exactly one prior state file, every version is one file, and a
-    vacuum leaves exactly the newest versions."""
+    interleaved replays (same version re-offered), a crash-redo (crash
+    before the state rename: the version is redone from the state below
+    it) and a crash-roll-forward (crash after the state rename: the
+    re-offer only lands the staged change feed) — after every step, read()
+    must equal a plain dict fold of the same sequence, every commit after
+    the first reads exactly one prior state file, the one below it, and
+    ``data/`` holds exactly the newest two state files."""
     import os
     import random
     import shutil
@@ -1024,6 +1089,7 @@ def test_bucketed_upsert_random_commit_sequences(spark, tmp_path_factory, monkey
     from kafka_streaming_spark.io import sinks
     from kafka_streaming_spark.io.sinks import ParquetUpsertTable
     from kafka_streaming_spark.schemas import GOLD_SCHEMA
+    from tests.conftest import Crash, _arm
 
     rng = random.Random(42)
     root = str(tmp_path_factory.mktemp("torture"))
@@ -1044,19 +1110,22 @@ def test_bucketed_upsert_random_commit_sequences(spark, tmp_path_factory, monkey
             [(k, v, 1, v, 0, 0, 0) for k, v in rows], schema=GOLD_SCHEMA
         ).toArrow()
 
-    def upsert(rows, version):
+    def upsert(rows, version, prior_read=True):
         reads.clear()
         applied = gold.upsert_state(rows, version=version, combine=replace_rows)
-        if applied:
-            assert len(reads) == (1 if version else 0), f"v{version} read {reads}"
-            assert all(f"/data/v_{version - 1}/" in p for p in reads)
+        want = [f"{root}/gold/data/v_{version - 1}.parquet"] if version and prior_read else []
+        assert reads == (want if applied else []), f"v{version} read {reads}"
         return applied
 
-    def finalized():
-        d = f"{root}/gold/data"
-        return sorted(
-            int(n[2:]) for n in os.listdir(d) if os.path.exists(f"{d}/{n}/_SUCCESS")
-        )
+    def crash(rows, version, should_crash):
+        with monkeypatch.context() as m:
+            _arm(m, sinks.os, "rename", should_crash)
+            with pytest.raises(Crash):
+                gold.upsert_state(rows, version=version, combine=replace_rows)
+        assert not gold.version_applied(version)
+
+    def kept():
+        return sorted(int(n[2:].split(".")[0]) for n in os.listdir(f"{root}/gold/data"))
 
     version = 0
     for step in range(6):
@@ -1066,30 +1135,25 @@ def test_bucketed_upsert_random_commit_sequences(spark, tmp_path_factory, monkey
             ref[k] = v
         # the commit replaces the changed keys' rows in the state
         rows = mk_state(new_vals)
-        assert upsert(rows, version) is True
+        if step == 3:
+            # crash-redo: the state file never landed; the two kept state
+            # files are untouched and the redo folds from the one below
+            crash(rows, version, lambda a, calls: "/gold/data/" in str(a[1]))
+            assert kept() == [version - 2, version - 1]
+        if step == 4:
+            # crash-roll-forward: the state file landed, the feed did not;
+            # the re-offer reads no state and lands the staged feed
+            crash(rows, version, lambda a, calls: "/gold/cdf/" in str(a[1]))
+            assert kept() == [version - 2, version - 1, version]
+        assert upsert(rows, version, prior_read=step != 4) is True
+        assert gold.version_applied(version)
         if step == 2:
             # replay: same version re-offered after a "crash" — no-op
             assert upsert(rows, version) is False
-        if step == 3:
-            # crash-redo: wipe this version's CDF files (state committed,
-            # registration lost) and re-offer — the version is redone
-            for name in os.listdir(gold.cdf_dir):
-                if name.startswith(f"v{version}_"):
-                    os.remove(f"{gold.cdf_dir}/{name}")
-            assert not gold.version_applied(version)
-            # a vacuum before the redo keeps the state it redoes from
-            gold.vacuum(keep_last=1)
-            assert finalized() == [version - 1, version]
-            assert upsert(rows, version) is True
-        if step in (2, 4):
-            gold.vacuum(keep_last=2)
-            assert finalized() == [version - 1, version]
         got = {r["group_id"]: r["cumulative_score"] for r in gold.read().collect()}
         assert got == ref, f"state diverged at step {step}"
-        assert all(
-            len([n for n in os.listdir(f"{root}/gold/data/v_{v}") if n.endswith(".parquet")]) == 1
-            for v in finalized()
-        )
+        assert kept() == list(range(max(version - 1, 0), version + 1))
+        assert not os.listdir(f"{root}/gold/stage")
         version += 1
 
     shutil.rmtree(root, ignore_errors=True)
