@@ -11,10 +11,11 @@ commits (real ACID MERGE), as functions the pipeline does not call.
 Layout::
 
     ParquetAppendTable (silver, insert-only)
-    <root>/data/append/v<version>_insert_<uuid>.parquet
-                               the data files, one per commit; commit
-                               <version>'s file is also its change feed
-                               (``cdf_dir``)
+    <root>/data/append/v<version>_insert_<min>_<max>_<uuid>.parquet
+                               the data files, one per commit, named with
+                               the commit's event-time range (epoch ms);
+                               commit <version>'s file is also its change
+                               feed (``cdf_dir``)
 
     ParquetUpsertTable (gold, keyed upserts)
     <root>/data/v_<version>.parquet   the full table state after commit
@@ -43,9 +44,10 @@ One commit path per table, one Spark job per micro-batch: the caller's
 batch is fetched to the driver once as Arrow, and everything after that
 fetch runs on the driver with pyarrow, because a Spark job's fixed
 scheduling cost would dominate a micro-batch this size.
-``insert_if_absent`` fetches the batch rows, probes the table's keys with
-a pyarrow dataset scan pruned to the batch's values of the leading key,
-anti-joins and writes the fresh rows; ``upsert_state`` takes the caller's
+``insert_if_absent`` fetches the batch rows, keeps the first row of each
+id, drops the rows older than the table's watermark, probes the table's
+keys with a pyarrow scan of the files whose event-time range reaches the
+batch, anti-joins and writes the fresh rows; ``upsert_state`` takes the caller's
 batch as one Arrow table (≤ one row per changed key), reads the prior
 state file, folds the batch in, and stages the change feed and the new
 state file.  First commits and replays go through the same path as
@@ -59,19 +61,17 @@ uuid ids is ~115 bytes of Arrow: a 220k-row batch is ~25 MB, and Spark's
 default ``spark.driver.maxResultSize`` of 1 GiB fails the fetch at about
 9M rows.  Nothing checks the cap; a batch past it fails its commit and
 stops the stream, and needs a tighter cap, not a distributed commit.
-The bronze→silver stream dedup adds its state to the same heap in local
-mode, where executors run in the driver JVM: its in-memory state store
-(``streaming.pipeline``) reported 96 MiB at 252k keys in the benchmark's
-traced backlog (``memoryUsedBytes``, the versions Spark keeps in memory
-included), about 400 bytes per key.  That state is bounded by rate ×
-watermark delay, not by history.
+Silver keeps no dedup state besides its own files: the probe reads the
+key columns of the files whose event-time range reaches the batch, so
+its cost is set by the watermark, not by history.
 
 Commit protocol of ``insert_if_absent`` (crash at any step, then the same
 version re-offered): the fresh rows written to ``stage/<version>.parquet``,
-then renamed to ``data/append/v<version>_insert_<uuid>.parquet`` — the one
-rename is the commit.  The retry overwrites whatever staged file an
-earlier attempt left, and its probe sees the rows an earlier attempt
-renamed, so each row lands in one file.
+then renamed to ``data/append/v<version>_insert_<min>_<max>_<uuid>.parquet``
+— the one rename is the commit.  The retry overwrites whatever staged file
+an earlier attempt left, its watermark is read from the versions below
+its own, as the first attempt's was, and its probe sees the rows an
+earlier attempt renamed, so each row lands in one file.
 
 Commit protocol of ``upsert_state`` (crash at any step, then the same
 version re-offered): change-feed files staged as
@@ -105,6 +105,7 @@ synthetic delete rows in tests.
 from __future__ import annotations
 
 import os
+import re
 import uuid
 from collections.abc import Callable, Sequence
 
@@ -118,6 +119,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from kafka_streaming_spark.io.sources import file_stream
+from kafka_streaming_spark.schemas import BUCKET_SECONDS
 
 #: Regexes over a change-feed file's path, anchored on its file name
 #: (see module docstring): a directory named like ``v1_run`` in the root's
@@ -130,6 +132,9 @@ _FEED_TYPES = ("update_preimage", "update_postimage", "insert")
 #: row group, so a large (backfill) commit is read by several tasks, while
 #: a live commit of a few hundred rows stays one group.
 _ROW_GROUP_ROWS = 65_536
+#: A silver data file's name: its commit version, then the commit's
+#: event-time range, the min and max ``event_timestamp`` of its rows.
+_SILVER_FILE_RE = re.compile(r"v(\d+)_insert_(-?\d+)_(-?\d+)_[0-9a-f]+\.parquet")
 
 
 def attach_cdf_metadata(df: DataFrame) -> DataFrame:
@@ -200,11 +205,21 @@ class ParquetAppendTable(_ParquetTable):
     """An insert-only table on plain parquet (silver pattern, J1): a commit
     appends the batch rows whose key is absent from the table (anti-join
     with IN-list pruning, silver.py:22-40).  Its data files are its change
-    feed: commit ``N`` names its one file ``v<N>_insert_<uuid>.parquet``,
-    and ``cdf_dir`` is the data dir itself."""
+    feed: commit ``N`` names its one file
+    ``v<N>_insert_<min>_<max>_<uuid>.parquet`` (its rows' event-time
+    range), and ``cdf_dir`` is the data dir itself.  The keys are
+    silver's ``(minute_timestamp, id)``."""
 
     def __init__(self, spark: SparkSession, root: str, schema: StructType, keys: Sequence[str]):
         super().__init__(spark, root, schema, keys)
+        names = os.listdir(self.cdf_dir) if os.path.isdir(self.cdf_dir) else []
+        old = [n for n in names if n.endswith(".parquet") and not _SILVER_FILE_RE.fullmatch(n)]
+        if old:
+            # the probe and the watermark read the range from the name
+            raise ValueError(
+                f"{self.cdf_dir} holds a silver file named without its event-time range "
+                f"({old[0]}), which the probe would skip; rebuild the table from its source"
+            )
         os.makedirs(self.cdf_dir, exist_ok=True)
         os.makedirs(f"{self.root}/stage", exist_ok=True)
 
@@ -216,49 +231,53 @@ class ParquetAppendTable(_ParquetTable):
         """Current table state (S4 batch scan of the merge target)."""
         return self._scan(self.cdf_dir)
 
-    def insert_if_absent(self, batch: DataFrame, version: int, batch_unique: bool = False) -> None:
-        """J1: append the batch rows whose key is not present yet.
+    def insert_if_absent(self, batch: DataFrame, version: int, delay_ms: int | None = None) -> int:
+        """J1: append the batch rows whose key is not present yet; returns
+        how many rows were dropped as late.
 
-        The batch's one Spark job fetches its rows as Arrow; the rest runs
-        on the driver.  A batch with no fresh rows commits nothing
-        (watermark eviction under availableNow ends on such a batch).
+        The batch's one Spark job fetches its rows as Arrow.  Then, on the
+        driver: (1) the first row of each id is kept, whatever its bucket
+        (the reference's stream dedup, silver.py:66); (2) with
+        ``delay_ms``, the rows older than the table's watermark are dropped
+        as late: the newest event time of the versions below ``version``,
+        less ``delay_ms``, so a replay drops the same rows; (3) the rows
+        whose ``(minute_timestamp, id)`` is in the table are dropped (the
+        anti-join, silver.py:22-40).  So an id already in silver lands
+        again only in another 180 s bucket and within the watermark.  (1)
+        comes before (2): a replay of ``a`` next to a newer ``a`` in the
+        next bucket would otherwise insert the newer one as a second row.
 
-        The existing-keys probe is restricted to the batch's values of the
-        leading key (F3, silver.py:22-28's "Prune IN List"): the pyarrow
-        scan of the data dir reads only the key columns, filtered to those
-        values.  A row matching a batch row shares its leading key, so the
-        filter drops no match (for silver the leading key is the
-        reference's ``minute_timestamp``).
-
-        ``batch_unique=True`` skips the within-batch dropDuplicates — one
-        full shuffle of every micro-batch — for callers whose upstream
-        already guarantees key uniqueness (the medallion pipeline's
-        dropDuplicatesWithinWatermark does exactly this; replayed/cross-
-        batch duplicates are still caught by the anti-join).
-
-        Commit protocol: the anti-join's rows are written as one file to
-        ``stage/<version>.parquet``, which is renamed into the data dir as
-        ``v<version>_insert_<uuid>.parquet`` (the rename is the commit,
-        mirroring Delta's write-files-then-commit protocol).  Idempotent
-        under micro-batch replay (same ``version`` re-offered after a crash
-        at any step): the retry overwrites a staged file the crash left,
-        and the anti-join excludes the rows an earlier attempt already
-        renamed — each row in one file.
+        The probe reads the key columns of the files whose newest event
+        time reaches the batch's oldest bucket, filtered to the batch's
+        buckets (F3, silver.py:22-28's "Prune IN List").  The commit is
+        the rename of one staged file; see the module docstring for its
+        replay protocol.
         """
-        deduped = batch if batch_unique else batch.dropDuplicates(self.keys)
-        rows = self._conform(deduped.select(*self.schema.fieldNames()).toArrow())
+        rows = self._conform(batch.select(*self.schema.fieldNames()).toArrow())
+        lead, ident = self.keys
+        rows = rows.take(pc.unique(pc.index_in(rows[ident], rows[ident])))
+        # (version, newest event time, path) of each committed file, from its name
+        names = map(_SILVER_FILE_RE.fullmatch, os.listdir(self.cdf_dir))
+        files = [(int(m[1]), int(m[3]), f"{self.cdf_dir}/{m[0]}") for m in names if m]
+        below = [newest for v, newest, _path in files if v < version]
+        unique = rows.num_rows
+        if delay_ms is not None and below:
+            rows = rows.filter(pc.field("event_timestamp") >= max(below) - delay_ms)
         if not rows.num_rows:
-            return
-        lead = self.keys[0]
-        current = ds.dataset(self.cdf_dir, schema=self._arrow_schema, format="parquet").to_table(
+            return unique
+        oldest = pc.min(rows[lead]).as_py() * BUCKET_SECONDS * 1000
+        probe = [path for _v, newest, path in files if newest >= oldest]
+        current = ds.dataset(probe, schema=self._arrow_schema, format="parquet").to_table(
             columns=self.keys, filter=pc.field(lead).isin(pc.unique(rows[lead]))
         )
         fresh = rows.join(current, keys=self.keys, join_type="left anti")
-        if not fresh.num_rows:
-            return
-        staged = f"{self.root}/stage/{version}.parquet"
-        pq.write_table(fresh, staged, row_group_size=_ROW_GROUP_ROWS)
-        os.rename(staged, f"{self.cdf_dir}/v{version}_insert_{uuid.uuid4().hex}.parquet")
+        if fresh.num_rows:
+            staged = f"{self.root}/stage/{version}.parquet"
+            pq.write_table(fresh, staged, row_group_size=_ROW_GROUP_ROWS)
+            lo, hi = pc.min_max(fresh["event_timestamp"]).values()
+            name = f"v{version}_insert_{lo.as_py()}_{hi.as_py()}_{uuid.uuid4().hex}.parquet"
+            os.rename(staged, f"{self.cdf_dir}/{name}")
+        return unique - rows.num_rows
 
 
 class ParquetUpsertTable(_ParquetTable):

@@ -2,8 +2,8 @@
 
 The reference deduplicates twice:
 
-- in-stream: ``dropDuplicatesWithinWatermark(["id"])`` (silver.py:66) bounds
-  state to the 30 s watermark window;
+- in-stream: ``dropDuplicatesWithinWatermark(["id"])`` (silver.py:66), here
+  done statelessly by ``io.sinks.ParquetAppendTable.insert_if_absent``;
 - cross-history: MERGE ``whenNotMatchedInsertAll`` on ``(minute_timestamp,
   id)`` with an IN-list prune predicate (silver.py:22-40) — semantically a
   left-anti join followed by append.
@@ -50,9 +50,9 @@ def latest_per_key(
 def first_seen(
     df: DataFrame, keys: Sequence[str], order_col: str, tiebreak: str | None = None
 ) -> DataFrame:
-    """Keep the oldest row per key — the batch analogue of streaming
-    ``dropDuplicatesWithinWatermark`` (T2, silver.py:66), which keeps the
-    first occurrence of each key."""
+    """Keep the oldest row per key — the batch analogue of the reference's
+    stream dedup (T2, silver.py:66), which keeps the first occurrence of
+    each key, as the silver commit does."""
     order = [F.col(order_col).asc()]
     if tiebreak:
         order.append(F.col(tiebreak).asc())

@@ -84,9 +84,8 @@ HDFS_STATE_STORE = "org.apache.spark.sql.execution.streaming.state.HDFSBackedSta
 #: ``transformWithState`` needs it: its state has several column families,
 #: which the in-memory HDFS-backed provider rejects.  Queries whose state is
 #: small or bounded by a watermark scope the in-memory provider to their own
-#: start with :func:`scoped_conf` (``MedallionPipeline.start_bronze_to_silver``,
-#: the registry's tiny-state witness drains); a query keeps the provider its
-#: checkpoint was created with.
+#: start with :func:`scoped_conf` (the registry's tiny-state witness
+#: drains); a query keeps the provider its checkpoint was created with.
 STREAMING_CONF: dict[str, str] = {
     STATE_STORE_PROVIDER_CONF: ROCKSDB_STATE_STORE,
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",

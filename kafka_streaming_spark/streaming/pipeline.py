@@ -5,8 +5,11 @@ source, runnable broker-free with ``availableNow`` triggers.
 Topology (reference → engine):
 
 1. ``kafka_to_silver`` (silver.py:43-77) → ``bronze_to_silver``: source →
-   parse/derive → watermark → dropDuplicatesWithinWatermark → foreachBatch
-   insert-if-absent MERGE into the silver table.
+   parse/derive → foreachBatch insert-if-absent MERGE into the silver
+   table, which also keeps the first row of each id and drops the rows
+   older than silver's watermark (the reference's watermark and
+   dropDuplicatesWithinWatermark, silver.py:63,66).  The query is
+   stateless: silver's own files are the dedup state.
 2. ``silver_to_gold`` (gold.py:49-69) → ``silver_to_gold``: silver change
    feed → insert-only filter → per-batch groupBy aggregate → running-total
    upsert into the gold table.
@@ -30,8 +33,7 @@ CDF (per-trigger work ∝ delta, not history).
 
 Checkpoints: the root is a local directory by construction (every table
 commit is an ``os.rename``), so the pipeline writes its streaming
-checkpoints — offset, commit and source logs, and the state store's
-delta files — through Spark's
+checkpoints — offset, commit and source logs — through Spark's
 ``FileSystemBasedCheckpointFileManager`` rather than the default
 FileContext manager.  On ``file:`` the two give the same guarantee: the
 FileContext rename falls through to Hadoop's check-then-rename
@@ -40,30 +42,20 @@ override.  They differ in cost when Hadoop's native library is missing
 (``NativeIO.isAvailable()`` false): each FileContext write then forks
 about 20 ``stat``/``chmod`` processes and takes 36-93 ms, against about 4
 processes and 10-50 ms through the FileSystem manager (one atomic
-checkpoint write from py4j, 4 vCPU host), and a bronze→silver trigger
-makes 11 such writes.  Integrity checks stay on: Spark's
-``<v>.delta.crc`` checkpoint checksums and Hadoop's ``.crc`` sidecars
-are written as before.
+checkpoint write from py4j, 4 vCPU host).  Integrity checks stay on:
+Hadoop's ``.crc`` sidecars are written as before.
 
-State store: the bronze→silver stream dedup keeps its state in Spark's
-in-memory ``HDFSBackedStateStoreProvider``, scoped to that query's start
-(:meth:`MedallionPipeline.start_bronze_to_silver`); the session default
-stays RocksDB, which ``transformWithState`` queries on the same session
-need.  ``dropDuplicatesWithinWatermark`` keeps an id until the watermark
-passes its event time plus ``watermark_delay``, so its state is bounded
-by rate × delay, not by history, and fits on the heap (about 400 bytes a
-key, see the driver-memory premise in ``io.sinks``).  On the benchmark's
-traced 252k-row backlog the bronze→silver stage's busy time fell from
-2.58 s on RocksDB to 1.27 s on the in-memory store (4 vCPU).  A
-checkpoint keeps the provider it was created with (Spark reads it back
-from the offset log), so a root whose checkpoint was made under RocksDB
-resumes on RocksDB.
+Exactly-once without a state store: the file source is replayable and
+silver's commit is idempotent (``ParquetAppendTable.insert_if_absent``),
+so a replayed bronze→silver batch lands nothing twice.
 """
 
 from __future__ import annotations
 
+import os
 import time
 
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,7 +70,6 @@ from kafka_streaming_spark.ops.aggregates import combine_states_arrow, group_agg
 from kafka_streaming_spark.ops.dedup import latest_per_key
 from kafka_streaming_spark.ops.projections import derive_event_columns
 from kafka_streaming_spark.schemas import GOLD_SCHEMA, SILVER_SCHEMA
-from kafka_streaming_spark.session import HDFS_STATE_STORE, STATE_STORE_PROVIDER_CONF, scoped_conf
 
 #: Spark's internal SQL conf naming the streaming checkpoint file manager,
 #: and the manager the pipeline's local checkpoints are written through.
@@ -86,21 +77,6 @@ CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 FILE_SYSTEM_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 )
-
-
-def watermark_dedup(
-    df: DataFrame,
-    ts_col: str = "timestamp",
-    delay: str = "30 seconds",
-    keys: tuple[str, ...] = ("id",),
-) -> DataFrame:
-    """T1 + T2: event-time watermark + stateful streaming dedup
-    (silver.py:63,66).  Keeps the first occurrence of each key within the
-    watermark window; state lives in the state store the query starts
-    with, and a key leaves it once the watermark passes its event time
-    plus ``delay``."""
-    return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(list(keys))
-
 
 class MedallionPipeline:
     """Bronze → silver → gold → serving over a local table root.
@@ -128,7 +104,8 @@ class MedallionPipeline:
         spark.conf.set(CHECKPOINT_MANAGER_CONF, FILE_SYSTEM_CHECKPOINT_MANAGER)
         self.spark = spark
         self.root = root.rstrip("/")
-        self.watermark_delay = watermark_delay
+        # withWatermark's "<n> <unit>" delays, days to milliseconds, read by pandas
+        self._delay_ms = pd.Timedelta(watermark_delay) // pd.Timedelta(milliseconds=1)
         self.silver = ParquetAppendTable(
             spark, f"{self.root}/silver", SILVER_SCHEMA, keys=("minute_timestamp", "id")
         )
@@ -143,41 +120,38 @@ class MedallionPipeline:
 
     # -- stage 1: bronze → silver ------------------------------------------
 
-    def _silver_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """K1 body (silver.py:10-40): insert-if-absent, probe pruned by minute.
-        The sink reads the micro-batch once, in its one Spark job, so the
-        stream dedup (and its state store version) runs once per batch
-        without a cache.  ``batch_unique``: the upstream
-        dropDuplicatesWithinWatermark already guarantees one row per id
-        within a micro-batch, so the sink skips its own within-batch dedup
-        shuffle (cross-batch/replay duplicates are still removed by the
-        anti-join)."""
-        self.silver.insert_if_absent(batch_df, version=batch_id, batch_unique=True)
+    def _silver_batch(self, batch_df: DataFrame, batch_id: int) -> int:
+        """K1 body (silver.py:10-40): dedup, late drop and insert-if-absent
+        in one silver commit; returns the number of rows dropped as late."""
+        return self.silver.insert_if_absent(batch_df, version=batch_id, delay_ms=self._delay_ms)
 
     def start_bronze_to_silver(self, events: DataFrame, available_now: bool = True):
         """``events`` must carry the EVENT_SCHEMA columns (id, group_id,
-        score, event_timestamp).  Applies P4-P7 derivations, watermark,
-        stream dedup, then the MERGE sink.  The query starts on the
-        in-memory HDFS-backed state store (module docstring); the provider
-        conf of ``events``' session is set for ``start()`` only and given
-        back as it was, also when ``start()`` raises.
+        score, event_timestamp).  Applies P4-P7 derivations, then the MERGE
+        sink, which also does the dedup and the late drop; the query keeps
+        no state.  A checkpoint from the stateful query this replaced (one
+        holding a ``state/`` dir) is refused with a ``ValueError`` before
+        the query starts.
 
         ``events`` must be trigger-capped (``maxOffsetsPerTrigger``,
         ``maxFilesPerTrigger``): each micro-batch is fetched to the driver
         whole, and one past ``spark.driver.maxResultSize`` (about 9M rows
         at the 1 GiB default) fails and stops the stream — see the
         driver-memory premise in ``io.sinks``."""
-        parsed = derive_event_columns(events)
-        deduped = watermark_dedup(parsed, "timestamp", self.watermark_delay, ("id",))
-        silver_cols = deduped.select(*[f.name for f in SILVER_SCHEMA.fields])
-        with scoped_conf(events.sparkSession, {STATE_STORE_PROVIDER_CONF: HDFS_STATE_STORE}):
-            return start_foreach_batch(
-                silver_cols,
-                self._silver_batch,
-                checkpoint=f"{self.root}/_checkpoints/bronze_to_silver",
-                query_name="bronze_to_silver",
-                available_now=available_now,
+        checkpoint = f"{self.root}/_checkpoints/bronze_to_silver"
+        if os.path.isdir(f"{checkpoint}/state"):
+            raise ValueError(
+                f"{checkpoint} holds stream-dedup state (a state/ dir) of a stateful "
+                "bronze→silver query, which is no longer run; rebuild the tables from their source"
             )
+        silver_cols = derive_event_columns(events).select(*[f.name for f in SILVER_SCHEMA.fields])
+        return start_foreach_batch(
+            silver_cols,
+            self._silver_batch,
+            checkpoint=checkpoint,
+            query_name="bronze_to_silver",
+            available_now=available_now,
+        )
 
     # -- stage 2: silver CDF → gold ----------------------------------------
 

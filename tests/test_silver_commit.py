@@ -102,32 +102,27 @@ def test_silver_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, m
     re-offer, as a live query would.  After each: silver holds every
     distinct event once, the change feed is exactly the table with each
     row at the version that first carried it, and gold is the pyarrow
-    aggregate of the distinct events."""
+    aggregate of the distinct events.
+
+    A last batch also carries a new id older than silver's watermark
+    (the newest event time of the versions below it, less the 30 s
+    default delay).  It crashes at each step in turn, the last after its
+    rename landed, and is then re-offered: the re-offer drops that one row
+    as late again, which it would not if the watermark read the batch's
+    own file, and leaves silver and gold as above."""
     root = str(tmp_path_factory.mktemp("silvercrash"))
     pipe = MedallionPipeline(spark, root)
     silver_cols = [f.name for f in pipe.silver.schema.fields]
     first_version: dict[str, int] = {}
-    for v, fault in enumerate(FAULTS):
-        for e in _batch(v):
-            first_version.setdefault(e[0], v)
-        batch_df = (
-            derive_event_columns(spark.createDataFrame(_batch(v), schema=EVENT_SCHEMA))
+
+    def batch_of(rows):
+        return (
+            derive_event_columns(spark.createDataFrame(rows, schema=EVENT_SCHEMA))
             .select(*silver_cols)
             .repartition(2)
         )
-        with monkeypatch.context() as m:
-            if fault is not None:
-                fault(m)
-                with pytest.raises(Crash):
-                    pipe._silver_batch(batch_df, v)
-            else:
-                pipe._silver_batch(batch_df, v)
-        committed = [n for n in os.listdir(f"{root}/silver/data/append") if n.startswith(f"v{v}_")]
-        assert len(committed) == (fault in (_after_rename, None)), f"v{v}: {committed}"
-        pipe.start_silver_to_gold(available_now=True).awaitTermination()
-        pipe._silver_batch(batch_df, v)  # restart: the same batch re-offered
-        pipe.start_silver_to_gold(available_now=True).awaitTermination()
 
+    def check(v: int) -> None:
         assert not os.listdir(f"{root}/silver/stage")
         ids = [r["id"] for r in pipe.silver.read().select("id").collect()]
         assert sorted(ids) == sorted(first_version), f"silver diverged after the fault at v{v}"
@@ -140,9 +135,43 @@ def test_silver_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, m
         events = [e for u in range(v + 1) for e in _fresh(u)]
         gold = {r["group_id"]: tuple(r[c] for c in STATE_COLS) for r in pipe.gold.read().collect()}
         assert gold == _gold_of(events), f"gold diverged after the fault at v{v}"
+
+    for v, fault in enumerate(FAULTS):
+        for e in _batch(v):
+            first_version.setdefault(e[0], v)
+        batch_df = batch_of(_batch(v))
+        with monkeypatch.context() as m:
+            if fault is not None:
+                fault(m)
+                with pytest.raises(Crash):
+                    pipe._silver_batch(batch_df, v)
+            else:
+                pipe._silver_batch(batch_df, v)
+        committed = [n for n in os.listdir(f"{root}/silver/data/append") if n.startswith(f"v{v}_")]
+        assert len(committed) == (fault in (_after_rename, None)), f"v{v}: {committed}"
+        pipe.start_silver_to_gold(available_now=True).awaitTermination()
+        pipe._silver_batch(batch_df, v)  # restart: the same batch re-offered
+        pipe.start_silver_to_gold(available_now=True).awaitTermination()
+        check(v)
+
+    v = len(FAULTS)
+    late = ("late", "g0", 1.0, _fresh(v - 1)[-1][3] - 60_000)
+    for e in _batch(v):
+        first_version.setdefault(e[0], v)
+    batch_df = batch_of(_batch(v) + [late])
+    for fault in FAULTS[:-1]:
+        with monkeypatch.context() as m:
+            fault(m)
+            with pytest.raises(Crash):
+                pipe._silver_batch(batch_df, v)
+    pipe.start_silver_to_gold(available_now=True).awaitTermination()
+    assert pipe._silver_batch(batch_df, v) == 1  # the re-offer after the rename landed
+    pipe.start_silver_to_gold(available_now=True).awaitTermination()
+    check(v)
+
     assert not os.path.exists(f"{root}/silver/cdf")  # the feed is the data files
     files = os.listdir(f"{root}/silver/data/append")
-    for v in range(len(FAULTS)):
+    for v in range(len(FAULTS) + 1):
         assert len([n for n in files if n.startswith(f"v{v}_insert_")]) == 1, f"v{v}: {files}"
 
 

@@ -7,7 +7,6 @@ F1 adversarial variants).
 
 from __future__ import annotations
 
-import json
 import os
 from collections import Counter
 
@@ -23,7 +22,7 @@ from tests.conftest import SF_SMALL, replace_rows
 
 #: Spark jobs per micro-batch of one silver insert / one gold commit in
 #: ``test_commit_jobs_per_micro_batch`` (measured; lower is better).
-B2S_JOBS = 1.5
+B2S_JOBS = 1.0
 S2G_JOBS = 1.0
 
 
@@ -202,38 +201,18 @@ def _assert_gold_is_fold(pipe, rows) -> None:
         assert g["cumulative_score"] == pytest.approx(w["score_sum"], rel=1e-9), w["group_id"]
 
 
-def _b2s_offset_conf(b2s: str, batch: int) -> dict:
-    """The SQL confs the bronze→silver offset log recorded for ``batch``."""
-    with open(f"{b2s}/offsets/{batch}") as f:
-        return json.loads(f.read().splitlines()[1])["conf"]
-
-
-def _state_files(b2s: str) -> dict[str, set[str]]:
-    """File names in each bronze→silver state partition."""
-    state = f"{b2s}/state/0"
-    return {d: set(os.listdir(f"{state}/{d}")) for d in os.listdir(state) if d.isdigit()}
-
-
 def test_pipeline_checkpoints_use_file_system_manager_and_keep_checksums(spark, pipeline_result):
     """The pipeline writes its local checkpoints through Spark's FileSystem
-    manager and keeps every integrity check: the stream-dedup state store
-    still writes Spark's ``<v>.delta.crc`` (and ``.snapshot.crc``)
-    checksums, and every state, offset and commit file keeps Hadoop's
-    ``.crc`` sidecar.  The switch is the pipeline session's own: a new
-    session keeps Spark's default manager."""
+    manager and keeps every integrity check: every offset and commit file
+    keeps Hadoop's ``.crc`` sidecar.  Bronze→silver keeps no state store,
+    so its checkpoint has no ``state/`` dir.  The switch is the pipeline
+    session's own: a new session keeps Spark's default manager."""
     pipe, _events = pipeline_result
     checkpoints = f"{pipe.root}/_checkpoints"
     assert _checkpoint_manager(pipe.spark, checkpoints) == "FileSystemBasedCheckpointFileManager"
 
     b2s = f"{checkpoints}/bronze_to_silver"
-    partitions = _state_files(b2s)
-    assert partitions
-    for part, names in partitions.items():
-        state_files = [n for n in names if n.endswith((".delta", ".snapshot"))]
-        assert any(n.endswith(".delta") for n in state_files), f"state partition {part} holds no delta"
-        for name in state_files:
-            assert f"{name}.crc" in names, f"no checkpoint checksum for {part}/{name}"
-            assert f".{name}.crc" in names, f"no Hadoop sidecar for {part}/{name}"
+    assert not os.path.exists(f"{b2s}/state")
     for log in ("offsets", "commits"):
         names = set(os.listdir(f"{b2s}/{log}"))
         batches = [n for n in names if n.isdigit()]
@@ -362,147 +341,151 @@ def test_resume_from_checkpoints_written_by_the_default_manager(spark, tmp_path_
     assert serving == {r["group_id"]: r["event_count"] for r in pipe.gold.read().collect()}
 
 
-def test_b2s_state_store_provider_is_scoped_to_its_query(spark, tmp_path_factory, monkeypatch):
-    """The bronze→silver query keeps its dedup state in the in-memory
-    HDFS-backed store, and only that query: ``start_bronze_to_silver``
-    leaves the session's provider (RocksDB) as it found it, also when
-    ``start()`` raises, and a transformWithState query, which needs
-    RocksDB, still runs on the same session afterwards."""
-    from pyspark.sql.streaming import DataStreamWriter
-
-    from kafka_streaming_spark.io.generator import EventGenerator
-    from kafka_streaming_spark.io.sources import file_stream
+def test_scoped_conf_gives_back_each_value_also_when_the_body_raises(spark):
+    """``session.scoped_conf`` (the registry's witness drains pin their
+    state store with it) sets its confs for the ``with`` body only: a key
+    that had a value gets it back and one that had none is unset, also
+    when the body raises."""
     from kafka_streaming_spark.session import (
         HDFS_STATE_STORE,
         ROCKSDB_STATE_STORE,
         STATE_STORE_PROVIDER_CONF,
+        scoped_conf,
     )
 
-    root = str(tmp_path_factory.mktemp("providerscope"))
-    rows = EventGenerator(seed=21, workers=2).rows(100)
-    src = f"{root}/source"
-    spark.createDataFrame(rows, schema=EVENT_SCHEMA).coalesce(1).write.parquet(src)
+    unset = "spark.kss.test.scoped"
     assert spark.conf.get(STATE_STORE_PROVIDER_CONF) == ROCKSDB_STATE_STORE
-
-    pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 hour")
-    query = pipe.start_bronze_to_silver(file_stream(spark, src, EVENT_SCHEMA))
+    with pytest.raises(RuntimeError, match="body failed"):
+        with scoped_conf(spark, {STATE_STORE_PROVIDER_CONF: HDFS_STATE_STORE, unset: "1"}):
+            assert spark.conf.get(STATE_STORE_PROVIDER_CONF) == HDFS_STATE_STORE
+            assert spark.conf.get(unset) == "1"
+            raise RuntimeError("body failed")
     assert spark.conf.get(STATE_STORE_PROVIDER_CONF) == ROCKSDB_STATE_STORE
-    query.awaitTermination()
-    b2s = f"{root}/tables/_checkpoints/bronze_to_silver"
-    assert _b2s_offset_conf(b2s, 0)[STATE_STORE_PROVIDER_CONF] == HDFS_STATE_STORE
-    assert all(any(n.endswith(".delta") for n in names) for names in _state_files(b2s).values())
-    assert pipe.silver.read().count() == len({r[0] for r in rows})
+    assert spark.conf.get(unset, None) is None
 
-    seen = []
 
-    def failing_start(writer, *args, **kwargs):
-        seen.append(spark.conf.get(STATE_STORE_PROVIDER_CONF))
-        raise RuntimeError("start failed")
+def _tree(path: str) -> list[str]:
+    return sorted(os.path.join(d, n) for d, dirs, names in os.walk(path) for n in dirs + names)
 
-    with monkeypatch.context() as m:
-        m.setattr(DataStreamWriter, "start", failing_start)
-        with pytest.raises(RuntimeError, match="start failed"):
-            pipe.start_bronze_to_silver(file_stream(spark, src, EVENT_SCHEMA))
-    assert seen == [HDFS_STATE_STORE]
-    assert spark.conf.get(STATE_STORE_PROVIDER_CONF) == ROCKSDB_STATE_STORE
 
-    from kafka_streaming_spark.streaming.protobuf_compat import ensure_protobuf
+_OLD_ROWS = [("a", "g1", 1.0, 1_700_000_000_000), ("b", "g2", 2.0, 1_700_000_060_000)]
 
-    if ensure_protobuf() is None:
-        pytest.skip("no google.protobuf runtime available for the transformWithState check")
-    from kafka_streaming_spark.streaming.stateful import running_counter_tws
 
-    counts: dict[str, int] = {}
+def test_old_silver_root_is_refused(spark, tmp_path_factory):
+    """A silver root from before the stateless bronze→silver query is
+    refused, not upgraded, with a ``ValueError`` that names its
+    ``data/append`` dir, before anything is written.  Its files carry no
+    event-time range in their names, which the watermark and the probe
+    read: neither the ``v<N>_insert_<uuid>`` files of the one-file commit
+    nor the files Spark's parquet writer wrote before it
+    (``v<N>_insert_part-…``)."""
+    import re
 
-    def capture(batch_df, _batch_id):
-        counts.update({r["group_id"]: r["event_count"] for r in batch_df.collect()})
+    import pyarrow.parquet as pq
 
-    (
-        running_counter_tws(file_stream(spark, src, EVENT_SCHEMA).select("group_id", "score"))
-        .writeStream.outputMode("update")
-        .foreachBatch(capture)
-        .option("checkpointLocation", f"{root}/tws")
+    from kafka_streaming_spark.schemas import SILVER_SCHEMA
+
+    root = str(tmp_path_factory.mktemp("oldsilver"))
+    silver_rows = derive_event_columns(spark.createDataFrame(_OLD_ROWS, schema=EVENT_SCHEMA)).select(
+        *SILVER_SCHEMA.fieldNames()
+    )
+    spark_written = f"{root}/spark_written"
+    silver_rows.coalesce(1).write.parquet(spark_written)
+    (part,) = [n for n in os.listdir(spark_written) if n.endswith(".parquet")]
+    for tag, name in [("one_file", "v0_insert_0f1e2d3c.parquet"), ("spark", f"v0_insert_{part}")]:
+        append = f"{root}/{tag}/silver/data/append"
+        os.makedirs(append)
+        pq.write_table(silver_rows.toArrow(), f"{append}/{name}")
+        before = _tree(f"{root}/{tag}")
+        with pytest.raises(ValueError, match=re.escape(append)):
+            MedallionPipeline(spark, f"{root}/{tag}")
+        assert _tree(f"{root}/{tag}") == before
+
+
+def test_old_b2s_checkpoint_is_refused(spark, tmp_path_factory):
+    """A bronze→silver checkpoint written by the stream dedup the query
+    ran before holds a ``state/`` dir; starting the stateless query on it
+    raises a ``ValueError`` that names the checkpoint, before anything is
+    written."""
+    import re
+
+    from kafka_streaming_spark.io.sources import file_stream
+
+    root = str(tmp_path_factory.mktemp("oldckpt"))
+    tables, src = f"{root}/stateful", f"{root}/source"
+    b2s = f"{tables}/_checkpoints/bronze_to_silver"
+    spark.createDataFrame(_OLD_ROWS, schema=EVENT_SCHEMA).coalesce(1).write.parquet(src)
+    (  # the stream dedup the bronze→silver query ran before
+        file_stream(spark, src, EVENT_SCHEMA)
+        .withColumn("timestamp", F.timestamp_millis("event_timestamp"))
+        .withWatermark("timestamp", "1 hour")
+        .dropDuplicatesWithinWatermark(["id"])
+        .writeStream.format("noop")
+        .option("checkpointLocation", b2s)
         .trigger(availableNow=True)
         .start()
         .awaitTermination()
     )
-    assert counts == dict(Counter(r[1] for r in rows))
+    assert os.path.isdir(f"{b2s}/state")
+    pipe = MedallionPipeline(spark, tables)
+    before = _tree(tables)
+    with pytest.raises(ValueError, match=re.escape(b2s)):
+        pipe.start_bronze_to_silver(file_stream(spark, src, EVENT_SCHEMA))
+    assert _tree(tables) == before
 
 
-def test_resume_b2s_from_a_rocksdb_checkpoint(spark, tmp_path_factory, monkeypatch):
-    """Upgrade in place: a root whose bronze→silver checkpoint was created
-    under the session's RocksDB default resumes on RocksDB, since a query
-    takes its provider from its checkpoint's offset log, and keeps its
-    dedup state.  The second file repeats some ids: each id lands in silver
-    once, gold is the pyarrow fold of every distinct event and serving
-    equals gold."""
-    from contextlib import nullcontext
-
-    from kafka_streaming_spark.io.generator import EventGenerator
-    from kafka_streaming_spark.io.sources import file_stream
-    from kafka_streaming_spark.session import ROCKSDB_STATE_STORE, STATE_STORE_PROVIDER_CONF
-    from kafka_streaming_spark.streaming import pipeline as pipeline_mod
-
-    root = str(tmp_path_factory.mktemp("rocksdbupgrade"))
-    rows = EventGenerator(seed=31, workers=2).rows(200)
-    first, second = rows[:250], rows[250:] + rows[200:250]
-    src = f"{root}/source"
-    b2s = f"{root}/tables/_checkpoints/bronze_to_silver"
-
-    with monkeypatch.context() as m:  # a pipeline that scoped no provider
-        m.setattr(pipeline_mod, "scoped_conf", lambda _spark, _conf: nullcontext())
-        old_pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 hour")
-        spark.createDataFrame(first, schema=EVENT_SCHEMA).coalesce(1).write.parquet(src)
-        old_pipe.run_available_now(file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=4))
-    assert _b2s_offset_conf(b2s, 0)[STATE_STORE_PROVIDER_CONF] == ROCKSDB_STATE_STORE
-
-    spark.createDataFrame(second, schema=EVENT_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 hour")
-    query = pipe.start_bronze_to_silver(file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=4))
-    query.awaitTermination()
-    pipe.start_silver_to_gold().awaitTermination()
-    pipe.start_gold_to_serving().awaitTermination()
-
-    last = max(int(n) for n in os.listdir(f"{b2s}/offsets") if n.isdigit())
-    assert last > 0
-    assert _b2s_offset_conf(b2s, last)[STATE_STORE_PROVIDER_CONF] == ROCKSDB_STATE_STORE
-    for names in _state_files(b2s).values():
-        assert not any(n.endswith(".delta") for n in names)
-    # the resumed batch started from the first drain's state: every id so far
-    assert query.recentProgress[0]["stateOperators"][0]["numRowsTotal"] == len({r[0] for r in rows})
-
-    ids = [r["id"] for r in pipe.silver.read().select("id").collect()]
-    assert sorted(ids) == sorted({r[0] for r in rows})
-    _assert_gold_is_fold(pipe, rows)
-    serving = {r["_id"]: r["event_count"] for r in pipe.serving_view().collect()}
-    assert serving == {r["group_id"]: r["event_count"] for r in pipe.gold.read().collect()}
-
-
-def test_b2s_dedup_state_is_bounded_by_the_watermark(spark, tmp_path_factory):
-    """The premise that lets the stream-dedup state live on the heap: it
-    holds the keys of the last ``watermark_delay`` of event time, not of
-    history.  After a later file whose event times are an hour past the
-    first file's, with a one-minute delay, the state falls to the later
-    file's keys."""
-    from kafka_streaming_spark.io.generator import EventGenerator
+def test_b2s_drops_late_rows_and_probes_only_files_in_range(spark, tmp_path_factory, monkeypatch):
+    """Silver's watermark is its newest event time less
+    ``watermark_delay``, read from its file names.  After eight commits
+    ten minutes apart in event time, a ninth file carries a new id older
+    than the watermark, dropped as late; a row inside the watermark that
+    repeats an id already in silver, dropped by the anti-join; and new
+    rows, inserted.  Its probe opens only the one file whose event-time
+    range reaches the batch's oldest 180 s bucket, not all eight: the file
+    list ``ds.dataset`` receives."""
+    from kafka_streaming_spark.io import sinks
     from kafka_streaming_spark.io.sources import file_stream
 
-    root = str(tmp_path_factory.mktemp("dedupbound"))
-    early = EventGenerator(seed=41, workers=2).rows(100)
-    late = EventGenerator(seed=141, workers=2, start_ms=EventGenerator.start_ms + 3_600_000).rows(50)
+    root = str(tmp_path_factory.mktemp("latedrop"))
     src = f"{root}/source"
-    spark.createDataFrame(early, schema=EVENT_SCHEMA).coalesce(1).write.parquet(src)
-    spark.createDataFrame(late, schema=EVENT_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+    base_ms = 1_700_000_000_000
 
+    def arrive(rows):
+        spark.createDataFrame(rows, schema=EVENT_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+
+    for f in range(8):
+        arrive([(f"e{f}_{i}", f"g{i % 3}", float(i), base_ms + f * 600_000 + i * 1_000) for i in range(5)])
+    with pytest.raises(ValueError):
+        MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 fortnight")
     pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 minute")
-    query = pipe.start_bronze_to_silver(file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=1))
-    query.awaitTermination()
-    totals = [p["stateOperators"][0]["numRowsTotal"] for p in query.recentProgress]
-    early_ids, late_ids = {r[0] for r in early}, {r[0] for r in late}
-    assert not early_ids & late_ids
-    assert max(totals) == len(early_ids) + len(late_ids)
-    assert totals[-1] == len(late_ids)
-    assert pipe.silver.read().count() == len(early_ids) + len(late_ids)
+    pipe.start_bronze_to_silver(file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=1)).awaitTermination()
+    files = sorted(os.listdir(pipe.silver.cdf_dir))
+    assert len(files) == 8
+    (newest_file,) = [n for n in files if n.startswith("v7_")]
+
+    newest = ("e7_4", "g1", 4.0, base_ms + 7 * 600_000 + 4_000)
+    arrive([
+        ("late", "g0", 9.0, newest[3] - 120_000),  # older than newest - 1 minute
+        newest,  # inside the watermark, already in silver
+        *[(f"n{i}", "g2", 1.0, newest[3] + (i + 1) * 1_000) for i in range(3)],
+    ])
+    probes = []
+    dataset = sinks.ds.dataset
+
+    def spy(source, *args, **kwargs):
+        probes.append(source)
+        return dataset(source, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(sinks.ds, "dataset", spy)
+        query = pipe.start_bronze_to_silver(file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=1))
+        query.awaitTermination()
+    assert not any(p["stateOperators"] for p in query.recentProgress)  # a stateless query
+    assert probes == [[f"{pipe.silver.cdf_dir}/{newest_file}"]]
+    ids = Counter(r["id"] for r in pipe.silver.read().select("id").collect())
+    assert "late" not in ids
+    assert ids["e7_4"] == 1
+    assert sorted(ids) == sorted([f"e{f}_{i}" for f in range(8) for i in range(5)] + ["n0", "n1", "n2"])
 
 
 def test_running_counter_stateful(spark, tmp_path_factory):
@@ -654,8 +637,10 @@ def test_stream_stream_interval_join(spark, tmp_path_factory):
 def test_duplicate_replay_is_idempotent(spark, tmp_path_factory):
     """FIXTURES.md F1 adversarial: exact duplicates within AND beyond the
     watermark window, replayed twice — silver row-set invariant (J1), gold
-    counts stable."""
-    root = str(tmp_path_factory.mktemp("dupes"))
+    counts stable.  ``a`` comes in two 180 s buckets; the second input
+    sends the newer-bucket ``a`` first."""
+    from kafka_streaming_spark.io.sources import file_stream
+
     base_ms = 1_700_000_000_000
     rows = [
         # (id, group, score, ts_ms)
@@ -663,35 +648,34 @@ def test_duplicate_replay_is_idempotent(spark, tmp_path_factory):
         ("a", "g1", 1.0, base_ms),               # dup within watermark
         ("b", "g1", 2.0, base_ms + 5_000),
         ("c", "g2", 3.0, base_ms + 10_000),
-        ("a", "g1", 1.0, base_ms + 120_000),     # dup far beyond 30 s watermark
+        ("a", "g1", 1.0, base_ms + 120_000),     # dup far beyond 30 s watermark, next bucket
         ("d", "g2", 4.0, base_ms + 125_000),
     ]
-    events = spark.createDataFrame(rows, schema=EVENT_SCHEMA)
-    src = f"{root}/source"
-    events.coalesce(1).write.mode("overwrite").parquet(src)
-    # replay the same file set a second time (new files, same rows)
-    events.coalesce(1).write.mode("append").parquet(src)
+    for rows in (rows, rows[4:5] + rows[:4] + rows[5:]):
+        root = str(tmp_path_factory.mktemp("dupes"))
+        events = spark.createDataFrame(rows, schema=EVENT_SCHEMA)
+        src = f"{root}/source"
+        events.coalesce(1).write.mode("overwrite").parquet(src)
+        # replay the same file set a second time (new files, same rows)
+        events.coalesce(1).write.mode("append").parquet(src)
 
-    from kafka_streaming_spark.io.sources import file_stream
+        pipe = MedallionPipeline(spark, f"{root}/tables")
+        stream = file_stream(spark, src, events.schema, max_files_per_trigger=1)
+        pipe.start_bronze_to_silver(stream, available_now=True).awaitTermination()
+        pipe.start_silver_to_gold(available_now=True).awaitTermination()
 
-    pipe = MedallionPipeline(spark, f"{root}/tables")
-    stream = file_stream(spark, src, events.schema, max_files_per_trigger=1)
-    pipe.start_bronze_to_silver(stream, available_now=True).awaitTermination()
-    pipe.start_silver_to_gold(available_now=True).awaitTermination()
-
-    silver = pipe.silver.read()
-    # Pinned semantics (SURVEY.md §7 watch-list 1): duplicates CHAIN-EXTEND
-    # dedup state in dropDuplicatesWithinWatermark — 'a'@+120s is within
-    # 30 s of... nothing, but batch 1 processed it while 'a' state was live,
-    # which extended retention to +150 s; the replayed 'a'@+120s in batch 2
-    # is therefore still deduped even though it falls in a different 180 s
-    # bucket.  Surviving rows: a@B, b@B, c@B, d@B+1.
-    assert silver.count() == 4
-    assert sorted(r["id"] for r in silver.collect()) == ["a", "b", "c", "d"]
-    # Idempotency: the replay (batch 2) added nothing.
-    gold = pipe.gold.read()
-    total = gold.agg(F.sum("event_count")).collect()[0][0]
-    assert total == 4
+        silver = pipe.silver.read()
+        # The rule is ``ParquetAppendTable.insert_if_absent``'s: the first
+        # ``a`` of a batch is kept whatever its bucket, then the rows older
+        # than silver's watermark are dropped, then the rows already in
+        # silver.  Batch 1 lands one a, b, c and d; its replay drops the
+        # rows older than d's time less 30 s as late and the rest as present.
+        assert silver.count() == 4
+        assert sorted(r["id"] for r in silver.collect()) == ["a", "b", "c", "d"]
+        # Idempotency: the replay (batch 2) added nothing.
+        gold = pipe.gold.read()
+        total = gold.agg(F.sum("event_count")).collect()[0][0]
+        assert total == 4
 
 
 def test_gold_batch_replay_same_batch_id_is_noop(spark, tmp_path_factory):
@@ -744,58 +728,14 @@ def test_gold_batch_replay_same_batch_id_is_noop(spark, tmp_path_factory):
     assert per_group == {"g1": 3, "g2": 1}
 
 
-def test_silver_upgrade_in_place_from_spark_written_files(spark, tmp_path_factory):
-    """A silver table made before the driver-side commit holds files
-    Spark's parquet writer wrote, staged and renamed to
-    ``v<N>_insert_<part>``.  ``insert_if_absent`` probes them with pyarrow:
-    their string and long key columns under the ``minute_timestamp`` prune
-    filter.  A batch that repeats some of their keys and adds new ones
-    inserts each new key once and none of the old ones again, and the
-    change feed is still exactly the table."""
-    import os
-    import shutil
-
-    from kafka_streaming_spark.io.sinks import ParquetAppendTable
-    from kafka_streaming_spark.schemas import SILVER_SCHEMA
-
-    root = str(tmp_path_factory.mktemp("silverupgrade"))
-    silver = ParquetAppendTable(spark, root, SILVER_SCHEMA, keys=("minute_timestamp", "id"))
-    cols = SILVER_SCHEMA.fieldNames()
-    base_ms = 1_700_000_000_000
-    # one event a minute: the old rows span ten 180 s prune buckets
-    old = [(f"e{i}", f"g{i % 3}", i / 4, base_ms + i * 60_000) for i in range(30)]
-    stage = f"{root}/stage/0"
-    derive_event_columns(spark.createDataFrame(old, schema=EVENT_SCHEMA)).select(
-        *cols
-    ).repartition(3).write.parquet(stage)
-    for name in os.listdir(stage):
-        if name.endswith(".parquet"):
-            os.rename(f"{stage}/{name}", f"{silver.cdf_dir}/v0_insert_{name}")
-    shutil.rmtree(stage)
-
-    new = [(f"n{i}", f"g{i % 3}", i / 4, base_ms + (20 + i) * 60_000) for i in range(20)]
-    batch = old[::4] + new  # repeats keys in several buckets, adds keys in old and new ones
-    silver.insert_if_absent(
-        derive_event_columns(spark.createDataFrame(batch, schema=EVENT_SCHEMA)).select(*cols),
-        version=1,
-    )
-    table = silver.read().collect()
-    keys = [(r["minute_timestamp"], r["id"]) for r in table]
-    assert len(keys) == len(set(keys)), "a key appears twice"
-    assert sorted(r["id"] for r in table) == sorted(e[0] for e in old + new)
-    feed = silver.read_cdf().collect()
-    assert sorted(tuple(r[c] for c in cols) for r in feed) == sorted(tuple(r) for r in table)
-    assert sorted(r["id"] for r in feed if r["_commit_version"] == 1) == sorted(e[0] for e in new)
-
-
 def test_commit_jobs_per_micro_batch(spark, tmp_path_factory):
     """One commit path, one Spark job per micro-batch: the Spark jobs a
     silver insert and a gold commit run stay pinned.  Every job of a
     streaming micro-batch runs under its query's runId job group, so
     StatusTracker counts them per stage; the count is spread over the
     batches that carried data, as the benchmark's ``jobs_per_batch``.
-    Bronze→silver's final no-data batch (a watermark advance) still runs
-    the stream dedup's one job, so its 3 jobs spread over 2 data batches."""
+    Neither query has a stateful operator, so availableNow runs no
+    trailing no-data batch, and each data batch is its one fetch job."""
     from kafka_streaming_spark.io.sources import file_stream
 
     root = str(tmp_path_factory.mktemp("jobcount"))
