@@ -7,7 +7,9 @@ and data-processing capabilities of the reference medallion pipeline
 - ``session``    — SparkSession builders tuned for local dev and cluster scale
 - ``schemas``    — fixed StructType schemas (event / silver / gold) + testdata
 - ``io``         — sources (parquet, Kafka option bundles, file/rate streams)
-                   and sinks (foreachBatch writers, parquet upsert targets)
+                   and sinks (foreachBatch writers and the parquet tables
+                   that are the engine's one table backend: insert-only
+                   silver, keyed-upsert gold, each with a change feed)
 - ``ops``        — batch operators: projections, filters, dedup, joins,
                    aggregates, windows, time bucketing
 - ``functions``  — column-level packs: text analysis, document dedup
@@ -15,8 +17,6 @@ and data-processing capabilities of the reference medallion pipeline
                    similarity (cosine top-k, LSH)
 - ``streaming``  — watermarked dedup → insert-if-absent silver → incremental
                    gold → serving sink pipeline, runnable with availableNow
-- ``delta_utils``— Delta Lake DDL/OPTIMIZE/VACUUM/MERGE helpers, gated behind
-                   an import probe with parquet-backed fallbacks
 
 Everything in the core is Catalyst-native (no Python UDFs on the hot path);
 Pandas UDFs appear only where built-ins cannot express the semantics

@@ -1,12 +1,13 @@
 """Sinks (SURVEY.md §2.2): foreachBatch writers and two parquet-backed
 change-tracked tables that emulate the Delta surface the reference relies
-on (MERGE targets + Change Data Feed) when delta-spark is not installed.
-Each table owns its file layout; the pipeline only calls its methods.
+on (MERGE targets + Change Data Feed).  They are the engine's one table
+backend: no Delta path exists.  Each table owns its file layout; the
+pipeline only calls its methods.
 
 The emulation is **single-writer micro-batch** semantics — exactly the
 reference's usage (one streaming query owns each table; foreachBatch bodies
-are serial per query).  ``delta_utils`` holds the Delta versions of the two
-commits (real ACID MERGE), as functions the pipeline does not call.
+are serial per query).  Exactly-once needs no transaction log: the source
+is replayable and each commit is idempotent per version.
 
 Layout::
 

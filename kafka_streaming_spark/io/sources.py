@@ -2,7 +2,8 @@
 
 The Kafka option bundle mirrors the reference's subscription
 (silver.py:45-51); file/rate sources are the test-time stand-ins (no broker
-in CI).  Delta CDF reads live in ``delta_utils`` (they need delta-spark).
+in CI).  Change-feed reads of the medallion tables are methods of the
+tables themselves (``io.sinks``: ``read_cdf``, ``stream_cdf``).
 """
 
 from __future__ import annotations

@@ -97,8 +97,8 @@ def merge_insert_if_absent(
     Returns ``target ∪ (source ⟕anti target)``.  With ``prune_col`` the
     anti-join's target side is first pruned to the source's buckets (F3), so
     the anti-join never scans history outside the incoming buckets.  The
-    Delta-backed variant (real MERGE) lives in ``delta_utils``; both must
-    agree (tested).
+    streaming form is ``io.sinks.ParquetAppendTable.insert_if_absent``,
+    silver's commit; there is no Delta-backed variant.
     """
     probe = target
     if prune_col is not None:

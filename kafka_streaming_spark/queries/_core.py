@@ -28,7 +28,6 @@ shuffle join + AQE instead of OOM-ing the executors on a forced broadcast.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -123,12 +122,10 @@ def _bucket_ms(ts: Column) -> Column:
     return F.floor(F.unix_millis(ts) / 1000 / 180).cast("long")
 
 
-def _witness_conf(
-    spark: SparkSession, parts_env: str, partitions: int, provider: str, no_data_batches: bool
-):
+def _witness_conf(spark: SparkSession, partitions: int, provider: str, no_data_batches: bool):
     """The scoped confs of a witness drain (see the two callers)."""
     conf = {
-        "spark.sql.shuffle.partitions": str(int(os.environ.get(parts_env, partitions))),
+        "spark.sql.shuffle.partitions": str(partitions),
         STATE_STORE_PROVIDER_CONF: provider,
     }
     if not no_data_batches:
@@ -148,11 +145,10 @@ def _tiny_stream_conf(
     execution detail: emitted rows are identical under either provider.
     Restores the session confs afterward.
 
-    ``KSS_TINY_PARTS`` overrides ``partitions`` (A/B harness hook, same
-    rationale as ``_tws_stream_conf``).  ``no_data_batches=False``
-    scopes ``noDataMicroBatches.enabled=false`` to the drain — see the
-    ``_tws_stream_conf`` docstring for when that is safe."""
-    return _witness_conf(spark, "KSS_TINY_PARTS", partitions, HDFS_STATE_STORE, no_data_batches)
+    ``no_data_batches=False`` scopes ``noDataMicroBatches.enabled=false``
+    to the drain — see the ``_tws_stream_conf`` docstring for when that is
+    safe."""
+    return _witness_conf(spark, partitions, HDFS_STATE_STORE, no_data_batches)
 
 
 def _tws_stream_conf(
@@ -163,11 +159,10 @@ def _tws_stream_conf(
     choice from :func:`_tiny_stream_conf`, because TWS state uses
     multiple column families, which HDFSBackedStateStoreProvider
     rejects outright (``multipleColumnFamiliesNotSupported``, measured
-    r9).  Restores the session confs afterward.
-
-    ``KSS_TWS_PARTS`` overrides ``partitions`` (A/B harness hook: state
-    partition count is a fixed per-batch cost — one RocksDB instance +
-    one Python state-server handshake each — not a semantics choice).
+    r9).  Restores the session confs afterward.  ``partitions`` is kept
+    small because state partition count is a fixed per-batch cost — one
+    RocksDB instance + one Python state-server handshake each — not a
+    semantics choice.
 
     ``no_data_batches=False`` additionally scopes
     ``spark.sql.streaming.noDataMicroBatches.enabled=false`` to the
@@ -177,7 +172,7 @@ def _tws_stream_conf(
     r12 interleaved A/B on t_stream_session_tws: 6.5s → 5.3s.  Leave
     True for any witness whose returned rows are emitted BY the
     trailing no-data batch."""
-    return _witness_conf(spark, "KSS_TWS_PARTS", partitions, ROCKSDB_STATE_STORE, no_data_batches)
+    return _witness_conf(spark, partitions, ROCKSDB_STATE_STORE, no_data_batches)
 
 
 #: Poll deadlines (seconds), one per attempt, for the live-trigger

@@ -1,10 +1,10 @@
 """SparkSession builders.
 
 Mirrors the capability of the reference's session bootstrap
-(``stream-processor/processing/utils.py:11-50``: Delta extension + catalog,
-CDF default-on, RocksDB state store with changelog checkpointing, shuffle
-partitions sized to the cluster) re-expressed for an engine that must run
-both on a laptop (local[N]) and on a large cluster against ~100 TB.
+(``stream-processor/processing/utils.py:11-50``: RocksDB state store with
+changelog checkpointing, shuffle partitions sized to the cluster)
+re-expressed for an engine that must run both on a laptop (local[N]) and on
+a large cluster against ~100 TB.
 
 Design notes for scale:
 
@@ -15,8 +15,11 @@ Design notes for scale:
   comparisons are deterministic across environments.
 - Arrow is enabled for any pandas interchange (Pandas UDFs on the extension
   surface are Arrow-batched, never row-at-a-time).
-- Delta configs are applied only when delta-spark is importable; the core
-  engine runs on plain parquet (see ``delta_utils``).
+- No Delta configs: the engine has one table backend, the parquet tables
+  in ``io.sinks``, which emulate the reference's Delta MERGE and change
+  feed.  A caller that wants a Delta session passes
+  ``spark.sql.extensions`` and ``spark.sql.catalog.spark_catalog`` through
+  ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -120,16 +123,6 @@ def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
                 spark.conf.set(k, v)
 
 
-def delta_available() -> bool:
-    """True when delta-spark is importable in this environment."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def build_session(
     app_name: str = "kafka-streaming-spark",
     master: str | None = None,
@@ -153,13 +146,6 @@ def build_session(
         conf.update(STREAMING_CONF)
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if delta_available():
-        # Reference: utils.py:29-38 — Delta extension + catalog, CDF on.
-        conf["spark.sql.extensions"] = "io.delta.sql.DeltaSparkSessionExtension"
-        conf["spark.sql.catalog.spark_catalog"] = (
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog"
-        )
-        conf["spark.databricks.delta.properties.defaults.enableChangeDataFeed"] = "true"
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -20,11 +20,10 @@ Topology (reference → engine):
 
 Backend: plain parquet, so the whole pipeline runs with only pyspark —
 silver is a ``ParquetAppendTable``, gold a ``ParquetUpsertTable``, serving
-a pluggable writer (``io.serving``).  ``MedallionPipeline`` always builds
-the parquet tables, delta-spark installed or not; ``delta_utils`` offers
-the Delta versions of the two commits as functions (tested for parity in
-``tests/test_delta_parity.py``) but no stage calls them.  Each table owns
-its file layout; this module only calls its methods.
+a pluggable writer (``io.serving``).  This is the engine's one table
+backend; ``tests/test_delta_parity.py`` holds both tables to the
+contract of the reference's Delta MERGEs.  Each table owns its file
+layout; this module only calls its methods.
 
 The change feeds between stages are consumed as streams (``stream_cdf``)
 — each upstream commit becomes a downstream micro-batch, which is exactly
@@ -255,20 +254,11 @@ class MedallionPipeline:
         seconds"`` triggers (ASAP, the reference's config.py:21 default);
         each downstream stage continuously tails its upstream's change
         feed.  Returns the three StreamingQuery handles (bronze_to_silver,
-        silver_to_gold, gold_to_serving); pair with ``await_any`` /
-        ``stop_all``."""
+        silver_to_gold, gold_to_serving); stop them with ``stop_all``."""
         q1 = self.start_bronze_to_silver(events, available_now=False)
         q2 = self.start_silver_to_gold(available_now=False)
         q3 = self.start_gold_to_serving(available_now=False)
         return [q1, q2, q3]
-
-    def await_any(self, timeout_sec: float | None = None) -> None:
-        """``spark.streams.awaitAnyTermination()`` (reference main.py:20):
-        block until any stage dies — the supervisor then restarts the job."""
-        if timeout_sec is None:
-            self.spark.streams.awaitAnyTermination()
-        else:
-            self.spark.streams.awaitAnyTermination(int(timeout_sec * 1000))
 
     @staticmethod
     def stop_all(queries) -> None:

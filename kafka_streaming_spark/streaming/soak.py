@@ -18,8 +18,9 @@ every downstream stage runs the same commit path the backfill mode uses,
 one Spark job per micro-batch with the rest on the driver (``io.sinks``).
 Per-batch work is not bounded by batch size alone: a gold commit rewrites
 the whole state, O(|state|) in the number of groups, serving rewrites its
-one snapshot per batch, and silver's key probe, though pruned to the
-batch's minutes, opens every silver file.
+one snapshot per batch, and silver's key probe opens only the silver
+files whose event-time range reaches the batch, so its cost is set by
+the watermark delay, not by history.
 """
 
 from __future__ import annotations
@@ -60,10 +61,14 @@ def _stage_progress(query) -> dict:
     against an unbounded source, a pipeline that lags reads ever-bigger
     batches.
 
-    Size statistics use only NON-EMPTY batches (stateful operators emit
-    0-row state-eviction/no-data micro-batches that would drag the
-    median toward zero at low rates).  TWO batch-size baselines come out,
-    with different jobs (the r7-advice split):
+    Size statistics use only NON-EMPTY batches: no medallion query is
+    stateful, but a live query whose trigger finds no new data (the
+    rate source's first trigger, a downstream stage waiting on its
+    upstream's next commit) still posts an idle 0-row progress entry,
+    at most one per ``spark.sql.streaming.noDataProgressEventInterval``,
+    and those would drag the median toward zero at low rates.  TWO
+    batch-size baselines come out, with different jobs (the r7-advice
+    split):
 
     - ``steady_batch_rows`` — median of the SECOND QUARTER, an EARLY
       post-ramp window.  This anchors the DIVERGENCE check: it is fixed
@@ -141,8 +146,8 @@ def soak_medallion(
       baselines deliberately differ (r7-advice split, rationale in
       ``_stage_progress``): the divergence check's baseline is fixed
       early so backlog growth can't re-base it; the lag bound's baseline
-      is the true equilibrium, which early batches under-read.  0-row
-      state-eviction micro-batches are excluded from both.
+      is the true equilibrium, which early batches under-read.  Idle
+      0-row progress entries are excluded from both.
     - ``gold_consistent`` — incremental gold state == batch re-aggregation
       of silver (fold ≡ agg∘history), checked after the tail drain.
     - per-stage ``stages.{bronze_to_silver,silver_to_gold,gold_to_serving}``

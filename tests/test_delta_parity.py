@@ -1,48 +1,21 @@
-"""SURVEY.md §7 watch-list item 2: the parquet-backed fallback
-(``io.sinks.ParquetAppendTable`` / ``ParquetUpsertTable``) and the real Delta path
-(``delta_utils.merge_*``) must produce identical table states for the same
-batch sequence.
-
-delta-spark is NOT installable in this container (no pip/network — see
-README), so the dual-backend tests auto-skip with that reason and activate
-unchanged the moment a delta-spark wheel + jars are present.
-
-Round-5 structure (VERDICT r4 item 7): both backends run ONE shared
-invariant suite (``_silver_invariants`` / ``_gold_invariants``) — the
-parquet variants execute it unconditionally every round, and the skipped
-delta variants carry the exact same bodies plus Delta-only plan-shape
-assertions (MERGE history, CDF read), so day-one activation runs the full
-suite, not a smoke test.
+"""SURVEY.md §7 watch-list item 2: the medallion's two table commits keep
+the contract of the reference's Delta MERGEs (silver.py:22-40, gold.py:19-45)
+for the same batch sequence.  The engine has one table backend, the parquet
+tables in ``io.sinks`` (``ParquetAppendTable`` for silver,
+``ParquetUpsertTable`` for gold); each test runs that backend through one
+invariant suite (``_silver_invariants`` / ``_gold_invariants``): within- and
+cross-batch duplicates, replay idempotence, incremental ≡ batch folds.
 """
 
 from __future__ import annotations
 
 import pyarrow as pa
-import pytest
-from pyspark.sql import functions as F
 
-from kafka_streaming_spark.delta_utils import DeltaUnavailableError, _delta
 from kafka_streaming_spark.io.sinks import ParquetAppendTable, ParquetUpsertTable
 from kafka_streaming_spark.ops.aggregates import combine_states_arrow, group_agg
 from kafka_streaming_spark.ops.projections import derive_event_columns
 from kafka_streaming_spark.schemas import EVENT_SCHEMA, SILVER_SCHEMA
 
-
-def _delta_available() -> bool:
-    try:
-        _delta()
-        return True
-    except DeltaUnavailableError:
-        return False
-
-
-delta_required = pytest.mark.skipif(
-    not _delta_available(),
-    reason=(
-        "delta-spark not installed and not installable in this container "
-        "(no pip/network); test activates unchanged once it is"
-    ),
-)
 
 BASE_MS = 1_700_000_000_000
 
@@ -83,8 +56,8 @@ def _silver_state(df):
 
 
 # ---------------------------------------------------------------------------
-# Shared invariant suites — each takes a backend object and asserts the FULL
-# correctness contract; backend differences live only in the tiny adapters.
+# Invariant suites — each takes the table's commit and read functions and
+# asserts the FULL correctness contract.
 # ---------------------------------------------------------------------------
 
 
@@ -173,11 +146,6 @@ def _gold_invariants(spark, upsert, read):
     assert state() == before
 
 
-# ---------------------------------------------------------------------------
-# Parquet backend: runs unconditionally, every round.
-# ---------------------------------------------------------------------------
-
-
 def test_silver_invariants_parquet(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("pq_silver_inv"))
     pq = ParquetAppendTable(
@@ -206,74 +174,3 @@ def test_gold_invariants_parquet(spark, tmp_path_factory):
         pq.upsert_state(agg.toArrow(), version=version, combine=fold)
 
     _gold_invariants(spark, upsert, pq.read)
-
-
-# ---------------------------------------------------------------------------
-# Delta backend: same bodies + Delta-only assertions; skip-gated on import.
-# ---------------------------------------------------------------------------
-
-
-@delta_required
-def test_silver_invariants_delta(spark, tmp_path_factory):
-    from kafka_streaming_spark import delta_utils
-
-    root = str(tmp_path_factory.mktemp("delta_silver_inv"))
-    delta_path = f"{root}/delta_silver"
-    _batches(spark)[0].limit(0).write.format("delta").save(delta_path)
-    applied: set[int] = set()
-
-    def insert(batch, version):
-        # Delta MERGE is idempotent per-key; version guard mirrors the
-        # foreachBatch replay guard so invariant 3 tests the same contract
-        if version in applied:
-            return
-        delta_utils.merge_insert_if_absent(
-            spark, delta_path, batch, keys=("minute_timestamp", "id"),
-            prune_col="minute_timestamp",
-        )
-        applied.add(version)
-
-    def read():
-        return spark.read.format("delta").load(delta_path)
-
-    _silver_invariants(spark, insert, read)
-
-    # Delta-only plan/feature assertions (DELTA.md §verify): MERGE history
-    # recorded one operation per applied version, and the table is CDF-readable
-    hist = spark.sql(f"DESCRIBE HISTORY delta.`{delta_path}`")
-    assert hist.filter("operation = 'MERGE'").count() == len(applied)
-    cdf = (
-        spark.read.format("delta")
-        .option("readChangeFeed", "true")
-        .option("startingVersion", 0)
-        .load(delta_path)
-    )
-    assert "_change_type" in cdf.columns
-
-
-@delta_required
-def test_gold_invariants_delta(spark, tmp_path_factory):
-    from kafka_streaming_spark import delta_utils
-
-    root = str(tmp_path_factory.mktemp("delta_gold_inv"))
-    delta_path = f"{root}/delta_gold"
-    applied: set[int] = set()
-    created = {"done": False}
-
-    def upsert(agg, version):
-        if version in applied:
-            return
-        stamped = agg.withColumn("updated_at", F.lit(0).cast("long"))
-        if not created["done"]:
-            stamped.limit(0).write.format("delta").save(delta_path)
-            created["done"] = True
-        delta_utils.merge_upsert_aggregate(spark, delta_path, stamped)
-        applied.add(version)
-
-    def read():
-        return spark.read.format("delta").load(delta_path)
-
-    _gold_invariants(spark, upsert, read)
-
-    hist = spark.sql(f"DESCRIBE HISTORY delta.`{delta_path}`")
-    assert hist.filter("operation = 'MERGE'").count() == len(applied)

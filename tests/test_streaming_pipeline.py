@@ -766,24 +766,6 @@ def test_commit_jobs_per_micro_batch(spark, tmp_path_factory):
     assert s2g <= S2G_JOBS, f"silver_to_gold ran {s2g} jobs per batch"
 
 
-def test_sql_literal_formats_types_safely():
-    """MERGE prune literals: typed formatting, no repr() splicing."""
-    import datetime
-
-    from kafka_streaming_spark.delta_utils import _sql_literal
-
-    assert _sql_literal(7) == "7"
-    assert _sql_literal(True) == "true"
-    assert _sql_literal(1.5) == "1.5"
-    assert _sql_literal("plain") == "'plain'"
-    # the round-1 injection surface: quotes/backslashes now escaped
-    assert _sql_literal("it's") == r"'it\'s'"
-    assert _sql_literal("a\\'b") == r"'a\\\'b'"
-    assert _sql_literal(datetime.date(2026, 1, 2)) == "DATE '2026-01-02'"
-    assert _sql_literal(datetime.datetime(2026, 1, 2, 3, 4, 5)).startswith("TIMESTAMP '2026-01-02 03:04:05")
-    assert _sql_literal(object()) is None  # unsupported → caller skips prune
-
-
 def test_concurrent_live_pipeline(spark, tmp_path_factory):
     """T6 in the reference's real deployment shape (main.py:12-20): all
     three stages run CONCURRENTLY with processingTime triggers while the

@@ -29,7 +29,8 @@ def main() -> None:
     ap.add_argument("--rate", type=int, default=4000, help="rows/s target")
     ap.add_argument("--duration", type=float, default=60.0, help="live seconds")
     ap.add_argument("--groups", type=int, default=64)
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)),
+                    help="local[N] threads and shuffle partitions; default: this process's CPUs")
     args = ap.parse_args()
 
     spark = build_session(
