@@ -7,10 +7,12 @@ the same pipeline stage can target parquet (broker-free tests), MongoDB
 (the reference's deployment, import-gated on the mongo-spark connector), or
 any future key-value store.
 
-Contract: ``write(df, batch_id)`` receives the batch WITH the ``_id`` column
-already stamped, one row per ``_id``.  Last-writer-wins per ``_id`` (J3) is
-resolved on write, by ``_id`` replacement, in both writers: the store
-keeps only the newest row of each ``_id``, so a read needs no rank.
+Contract: ``write(rows, batch_id)`` receives the batch as an Arrow table
+WITH the ``_id`` column already stamped, one row per ``_id``; the
+pipeline reads it on the driver, so the parquet writer runs no Spark job.
+Last-writer-wins per ``_id`` (J3) is resolved on write, by ``_id``
+replacement, in both writers: the store keeps only the newest row of
+each ``_id``, so a read needs no rank.
 Replaying a batch id rewrites the same rows (an idempotent sink).
 
 Parquet layout and commit protocol::
@@ -66,7 +68,7 @@ def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
 class ServingWriter(Protocol):
     """K3 sink interface: one call per micro-batch."""
 
-    def write(self, df: DataFrame, batch_id: int) -> None: ...
+    def write(self, rows: pa.Table, batch_id: int) -> None: ...
 
 
 class ParquetServingWriter:
@@ -83,10 +85,9 @@ class ParquetServingWriter:
             # reads, so it would serve only the groups written from now on
             raise ValueError(f"{self.path} holds a serving store in the append layout; rebuild it")
 
-    def write(self, df: DataFrame, batch_id: int) -> None:
-        """Fetch the batch as Arrow, the batch's one Spark job, and fold it
-        into the snapshot."""
-        self.compact(df.toArrow())
+    def write(self, rows: pa.Table, batch_id: int) -> None:
+        """Fold the batch into the snapshot."""
+        self.compact(rows)
 
     def compact(self, rows: pa.Table) -> None:
         """Replace the snapshot's rows of the ``_id``\\ s in ``rows`` by
@@ -105,7 +106,8 @@ class MongoServingWriter:
     append with ``_id``-keyed document replacement.  Option bundle mirrors
     reference config.py:62-77.  Requires the ``mongo-spark-connector``
     package on the session's classpath — probed at write time with a clear
-    error, never at import time."""
+    error, never at import time.  A write builds its DataFrame from the
+    batch's rows on the active session."""
 
     def __init__(self, uri: str, database: str, collection: str):
         self.uri = uri
@@ -119,13 +121,14 @@ class MongoServingWriter:
             "collection": self.collection,
         }
 
-    def write(self, df: DataFrame, batch_id: int) -> None:
+    def write(self, rows: pa.Table, batch_id: int) -> None:
+        df = SparkSession.active().createDataFrame(rows, SERVING_SCHEMA)
         writer = df.write.format("mongodb").mode("append")
         for k, v in self.options().items():
             writer = writer.option(k, v)
         try:
             writer.save()
-        except Exception as exc:  # pragma: no cover - needs connector+server
+        except Exception as exc:
             raise RuntimeError(
                 "MongoServingWriter needs the mongo-spark-connector package "
                 "(org.mongodb.spark:mongo-spark-connector_2.13) on the Spark "

@@ -41,14 +41,17 @@ writes where one does.  The reference's traffic is as dense (one
 ``group_id`` per publisher worker).  Splitting pays only when a batch
 touches far fewer keys than there are files.
 
-One commit path per table, one Spark job per micro-batch: the caller's
-batch is fetched to the driver once as Arrow, and everything after that
-fetch runs on the driver with pyarrow, because a Spark job's fixed
-scheduling cost would dominate a micro-batch this size.
-``insert_if_absent`` fetches the batch rows, keeps the first row of each
-id, drops the rows older than the table's watermark, probes the table's
-keys with a pyarrow scan of the files whose event-time range reaches the
-batch, anti-joins and writes the fresh rows; ``upsert_state`` takes the caller's
+One commit path per table, and one Spark job per event batch, in b2s
+(bronze→silver): ``insert_if_absent`` fetches the caller's batch to the
+driver once as Arrow, because its source can be Kafka; the later stages
+read only files this module wrote, so their bodies read a batch's files
+on the driver (``read_files``, ``read_feed_files``) and run no Spark job.
+Everything after the fetch or the read runs on the driver with pyarrow,
+because a Spark job's fixed scheduling cost would dominate a micro-batch
+this size.  ``insert_if_absent`` keeps the first row of each id, drops
+the rows older than the table's watermark, probes the table's keys with
+a pyarrow scan of the files whose event-time range reaches the batch,
+anti-joins and writes the fresh rows; ``upsert_state`` takes the caller's
 batch as one Arrow table (≤ one row per changed key), reads the prior
 state file, folds the batch in, and stages the change feed and the new
 state file.  First commits and replays go through the same path as
@@ -59,9 +62,12 @@ for gold, the table state), so the source must cap its micro-batches
 (``maxOffsetsPerTrigger``, ``maxFilesPerTrigger``).  The reference caps a
 Kafka micro-batch at 10,000 events.  A fetched silver row with 36-char
 uuid ids is ~115 bytes of Arrow: a 220k-row batch is ~25 MB, and Spark's
-default ``spark.driver.maxResultSize`` of 1 GiB fails the fetch at about
-9M rows.  Nothing checks the cap; a batch past it fails its commit and
-stops the stream, and needs a tighter cap, not a distributed commit.
+default ``spark.driver.maxResultSize`` of 1 GiB fails the b2s fetch at
+about 9M rows.  Nothing checks the cap; a batch past it fails its commit
+and stops the stream, and needs a tighter cap, not a distributed commit.
+Silver→gold reads its batch's silver files with pyarrow, so
+``maxResultSize`` does not apply to it: it holds at most 50 silver files
+(its ``maxFilesPerTrigger``) in driver memory, three of their columns.
 Silver keeps no dedup state besides its own files: the probe reads the
 key columns of the files whose event-time range reaches the batch, so
 its cost is set by the watermark, not by history.
@@ -139,9 +145,9 @@ _SILVER_FILE_RE = re.compile(r"v(\d+)_insert_(-?\d+)_(-?\d+)_[0-9a-f]+\.parquet"
 
 
 def attach_cdf_metadata(df: DataFrame) -> DataFrame:
-    """Derive ``_change_type`` / ``_commit_version`` from the cdf file path.
-    Works on batch and streaming scans alike (``input_file_name`` is set for
-    both)."""
+    """Derive ``_change_type`` / ``_commit_version`` from the cdf file path
+    (``input_file_name``) of a Spark scan; ``read_feed_files`` does the
+    same on the driver."""
     fname = F.input_file_name()
     return df.withColumn(
         "_change_type", F.regexp_extract(fname, _CTYPE_RE, 1)
@@ -180,6 +186,30 @@ class _ParquetTable:
         fields = [f for f in self._arrow_schema if f.name in table.column_names]
         return table.select([f.name for f in fields]).cast(pa.schema(fields))
 
+    def read_files(self, paths: Sequence[str], columns: Sequence[str]) -> pa.Table:
+        """``columns`` of the committed files ``paths``, read on the driver
+        with pyarrow (no Spark job)."""
+        return ds.dataset(list(paths), schema=self._arrow_schema, format="parquet").to_table(
+            columns=list(columns)
+        )
+
+    def read_feed_files(self, paths: Sequence[str]) -> pa.Table:
+        """The change rows of the feed files ``paths``, read on the driver,
+        with ``_change_type`` and ``_commit_version`` taken from each
+        file's name by the same anchored regexes ``attach_cdf_metadata``
+        uses."""
+        feed = pa.schema([*self._arrow_schema, ("_change_type", pa.string()), ("_commit_version", pa.int64())])
+        parts = [feed.empty_table()]
+        for path in paths:
+            rows = pq.read_table(path, schema=self._arrow_schema)
+            change_type = pa.scalar(re.search(_CTYPE_RE, path)[1])
+            version = pa.scalar(int(re.search(_VERSION_RE, path)[1]), pa.int64())
+            parts.append(
+                rows.append_column("_change_type", pa.repeat(change_type, rows.num_rows))
+                .append_column("_commit_version", pa.repeat(version, rows.num_rows))
+            )
+        return pa.concat_tables(parts)
+
     def read_cdf(
         self, starting_version: int = 0, change_types: Sequence[str] | None = None
     ) -> DataFrame:
@@ -192,14 +222,16 @@ class _ParquetTable:
         return df
 
     def stream_cdf(self, max_files_per_trigger: int) -> DataFrame:
-        """S2/S3 as a stream: a file stream over ``cdf_dir`` with the same
-        metadata, so each commit becomes a downstream micro-batch — the
-        incremental-view-maintenance property the reference gets from
-        Delta CDF (per-trigger work ∝ delta, not history)."""
-        raw = file_stream(
+        """S2/S3 as a stream: a file stream over ``cdf_dir``, so each commit
+        becomes a downstream micro-batch — the incremental-view-maintenance
+        property the reference gets from Delta CDF (per-trigger work ∝
+        delta, not history).  The stream's rows are never run: a body
+        reads its batch's files itself (``batch_files``, then
+        ``read_files`` or ``read_feed_files``), so it carries no change
+        metadata."""
+        return file_stream(
             self.spark, self.cdf_dir, self.schema, max_files_per_trigger=max_files_per_trigger
         )
-        return attach_cdf_metadata(raw)
 
 
 class ParquetAppendTable(_ParquetTable):
@@ -355,8 +387,7 @@ class ParquetUpsertTable(_ParquetTable):
     ) -> bool:
         """J2: fold a micro-batch into the table state and commit it as
         version ``version``, logging the changed keys' rows to the change
-        feed.  Everything after the caller's one Spark round-trip runs on
-        the driver with pyarrow.
+        feed.  Runs on the driver with pyarrow, no Spark job.
 
         ``batch`` holds at most one row per changed key.  ``combine(prior,
         rows)`` gets the previous rows of the batch's keys (none for keys

@@ -11,8 +11,8 @@ Topology (reference → engine):
    dropDuplicatesWithinWatermark, silver.py:63,66).  The query is
    stateless: silver's own files are the dedup state.
 2. ``silver_to_gold`` (gold.py:49-69) → ``silver_to_gold``: silver change
-   feed → insert-only filter → per-batch groupBy aggregate → running-total
-   upsert into the gold table.
+   feed (insert-only, so no change-type filter) → per-batch groupBy
+   aggregate → running-total upsert into the gold table.
 3. ``gold_to_mongo`` (tomongo.py:20-35) → ``gold_to_serving``: gold change
    feed → drop preimages → newest row per ``group_id`` → a write that
    replaces the store's row of each ``_id`` (last-writer-wins per
@@ -29,6 +29,18 @@ The change feeds between stages are consumed as streams (``stream_cdf``)
 — each upstream commit becomes a downstream micro-batch, which is exactly
 the incremental-view-maintenance property the reference gets from Delta
 CDF (per-trigger work ∝ delta, not history).
+
+One Spark job per event batch, in b2s: the bronze→silver body fetches
+its batch as Arrow, because its source can be Kafka.  The silver→gold
+and gold→serving bodies never run their batch's DataFrame: they look up
+the files the batch covers in the query's checkpoint
+(``io.sources.batch_files``: the offset log names the source batches,
+the source log their files) and read those files with pyarrow on the
+driver.  The offset and source logs are what Spark replays a batch
+from, so a replayed batch reads the same files.  Spark counts a batch's
+input rows only when its DataFrame runs, so these two queries' progress
+reports 0 ``numInputRows``; a batch shows as its source offset
+advancing.
 
 Checkpoints: the root is a local directory by construction (every table
 commit is an ``os.rename``), so the pipeline writes its streaming
@@ -53,11 +65,12 @@ from __future__ import annotations
 
 import os
 import time
+from collections.abc import Sequence
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kafka_streaming_spark.io.serving import ParquetServingWriter, read_snapshot
 from kafka_streaming_spark.io.sinks import (
@@ -65,8 +78,8 @@ from kafka_streaming_spark.io.sinks import (
     ParquetUpsertTable,
     start_foreach_batch,
 )
+from kafka_streaming_spark.io.sources import batch_files
 from kafka_streaming_spark.ops.aggregates import combine_states_arrow, group_agg_arrow
-from kafka_streaming_spark.ops.dedup import latest_per_key
 from kafka_streaming_spark.ops.projections import derive_event_columns
 from kafka_streaming_spark.schemas import GOLD_SCHEMA, SILVER_SCHEMA
 
@@ -117,6 +130,9 @@ class MedallionPipeline:
         # alone, with the same replace-by-``_id`` semantics.
         self.serving_writer = serving_writer or ParquetServingWriter(self.serving_dir)
 
+    def _checkpoint(self, query_name: str) -> str:
+        return f"{self.root}/_checkpoints/{query_name}"
+
     # -- stage 1: bronze → silver ------------------------------------------
 
     def _silver_batch(self, batch_df: DataFrame, batch_id: int) -> int:
@@ -137,7 +153,7 @@ class MedallionPipeline:
         whole, and one past ``spark.driver.maxResultSize`` (about 9M rows
         at the 1 GiB default) fails and stops the stream — see the
         driver-memory premise in ``io.sinks``."""
-        checkpoint = f"{self.root}/_checkpoints/bronze_to_silver"
+        checkpoint = self._checkpoint("bronze_to_silver")
         if os.path.isdir(f"{checkpoint}/state"):
             raise ValueError(
                 f"{checkpoint} holds stream-dedup state (a state/ dir) of a stateful "
@@ -155,30 +171,34 @@ class MedallionPipeline:
     # -- stage 2: silver CDF → gold ----------------------------------------
 
     def _gold_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """K2 body (gold.py:7-46): per-batch aggregate + running-total
-        upsert.  ``least/greatest`` maintenance of first/last timestamps
-        (see aggregates.combine_states for the documented deviation).
+        """K2 body (gold.py:7-46): :meth:`fold_silver_files` over the silver
+        files the micro-batch covers, as the query's checkpoint records
+        them (``batch_files``).  ``batch_df`` is never run, so the batch
+        runs no Spark job, and Spark's progress reports it read 0 rows."""
+        self.fold_silver_files(batch_files(self._checkpoint("silver_to_gold"), batch_id), batch_id)
 
-        One Spark job, the micro-batch's only Spark work: the inserted
-        rows' group, score and event time, fetched as Arrow — a scan with
-        no shuffle, and no rows for an empty batch.  The rest runs on the
-        driver: ``group_agg_arrow`` aggregates per group, and
-        ``upsert_state`` folds that into the prior state with
-        ``combine_states_arrow`` and commits it as one state file, renamed
-        into place.  The commit keeps the newest two state files: each
-        holds the full state, the next commit folds from the newest, and
-        the one before it stays for a reader that resolved its file
-        (``read()``) before this commit landed."""
+    def fold_silver_files(self, paths: Sequence[str], batch_id: int) -> None:
+        """Per-batch aggregate + running-total upsert of the silver files
+        ``paths`` as gold version ``batch_id``.  ``least/greatest``
+        maintenance of first/last timestamps (see
+        aggregates.combine_states for the documented deviation).
+
+        All on the driver: the files' group, score and event time are read
+        with pyarrow (silver is insert-only, so every row is an insert),
+        ``group_agg_arrow`` aggregates per group, and ``upsert_state``
+        folds that into the prior state with ``combine_states_arrow`` and
+        commits it as one state file, renamed into place.  The commit
+        keeps the newest two state files: each holds the full state, the
+        next commit folds from the newest, and the one before it stays for
+        a reader that resolved its file (``read()``) before this commit
+        landed."""
         if self.gold.version_applied(batch_id):
             # foreachBatch replay after a crash between the gold commit and
             # the checkpoint commit: the running totals already include this
             # micro-batch — folding it again would double-count.  (The
             # reference's gold MERGE has the same hazard, unguarded.)
             return
-        inserts = batch_df.filter(
-            ~F.col("_change_type").isin("update_postimage", "update_preimage", "delete")
-        ).select("group_id", "score", "event_timestamp")
-        rows = inserts.toArrow()
+        rows = self.silver.read_files(paths, ("group_id", "score", "event_timestamp"))
         if not rows.num_rows:
             return
         agg = group_agg_arrow(rows, keys=("group_id",))
@@ -201,7 +221,7 @@ class MedallionPipeline:
         return start_foreach_batch(
             self.silver.stream_cdf(max_files_per_trigger),
             self._gold_batch,
-            checkpoint=f"{self.root}/_checkpoints/silver_to_gold",
+            checkpoint=self._checkpoint("silver_to_gold"),
             query_name="silver_to_gold",
             available_now=available_now,
         )
@@ -209,29 +229,39 @@ class MedallionPipeline:
     # -- stage 3: gold CDF → serving ----------------------------------------
 
     def _serving_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """K3 body (tomongo.py:6-17): key-replaced write through the
-        pluggable writer — ``_id`` = group_id, last-writer-wins (J3) by the
-        store's ``_id`` replacement.
+        """K3 body (tomongo.py:6-17): :meth:`serve_gold_files` over the gold
+        change-feed files the micro-batch covers (``batch_files``); like
+        :meth:`_gold_batch`, it runs no Spark job."""
+        self.serve_gold_files(batch_files(self._checkpoint("gold_to_serving"), batch_id), batch_id)
 
-        A trigger can span several gold versions, each with its own row
-        for a group; only the newest reaches the writer, so a store that
-        replaces by ``_id`` in write order cannot keep a stale one.  The
-        batch is a few small files: on one partition the window needs no
-        shuffle, and the writer's read of it (the parquet writer's
-        ``toArrow()``) stays the batch's one Spark job."""
-        images = batch_df.filter("_change_type != 'update_preimage'").coalesce(1)
-        out = (
-            latest_per_key(images, ["group_id"], "_commit_version")
-            .drop("_change_type", "_commit_version")
-            .withColumn("_id", F.col("group_id"))
+    def serve_gold_files(self, paths: Sequence[str], batch_id: int) -> None:
+        """Key-replaced write of the gold change-feed files ``paths``
+        through the pluggable writer — ``_id`` = group_id, last-writer-wins
+        (J3) by the store's ``_id`` replacement.
+
+        The files are read on the driver, each row labelled with the
+        change type and version its file's name carries; preimages are
+        dropped.  A trigger can span several gold versions, each with its
+        own row for a group; only the newest reaches the writer, so a
+        store that replaces by ``_id`` in write order cannot keep a stale
+        one."""
+        feed = self.gold.read_feed_files(paths)
+        images = feed.filter(pc.field("_change_type") != "update_preimage").sort_by(
+            [("_commit_version", "descending")]
         )
-        self.serving_writer.write(out, batch_id)
+        if not images.num_rows:
+            return
+        # index_in gives each row the index of its group's first row, which
+        # after the version-descending sort is the group's newest
+        newest = images.take(pc.unique(pc.index_in(images["group_id"], images["group_id"])))
+        out = newest.drop_columns(["_change_type", "_commit_version"])
+        self.serving_writer.write(out.append_column("_id", out["group_id"]), batch_id)
 
     def start_gold_to_serving(self, available_now: bool = True, max_files_per_trigger: int = 16):
         return start_foreach_batch(
             self.gold.stream_cdf(max_files_per_trigger),
             self._serving_batch,
-            checkpoint=f"{self.root}/_checkpoints/gold_to_serving",
+            checkpoint=self._checkpoint("gold_to_serving"),
             query_name="gold_to_serving",
             available_now=available_now,
         )

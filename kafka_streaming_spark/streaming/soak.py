@@ -15,7 +15,8 @@ but corrupts the fold cannot pass.
 
 Scale shape: the rate source partitions its row range (``numPartitions``);
 every downstream stage runs the same commit path the backfill mode uses,
-one Spark job per micro-batch with the rest on the driver (``io.sinks``).
+with one Spark job per event batch, in b2s, and the rest on the driver
+(``io.sinks``).
 Per-batch work is not bounded by batch size alone: a gold commit rewrites
 the whole state, O(|state|) in the number of groups, serving rewrites its
 one snapshot per batch, and silver's key probe opens only the silver
@@ -61,14 +62,17 @@ def _stage_progress(query) -> dict:
     against an unbounded source, a pipeline that lags reads ever-bigger
     batches.
 
-    Size statistics use only NON-EMPTY batches: no medallion query is
-    stateful, but a live query whose trigger finds no new data (the
-    rate source's first trigger, a downstream stage waiting on its
-    upstream's next commit) still posts an idle 0-row progress entry,
-    at most one per ``spark.sql.streaming.noDataProgressEventInterval``,
-    and those would drag the median toward zero at low rates.  TWO
-    batch-size baselines come out, with different jobs (the r7-advice
-    split):
+    A batch counts when its source offset advanced (``startOffset !=
+    endOffset``), not when it reports rows: a live query whose trigger
+    finds no new data (a downstream stage waiting on its upstream's next
+    commit) still posts an idle progress entry, at most one per
+    ``spark.sql.streaming.noDataProgressEventInterval``, and those would
+    drag the wall figures and the size median toward idle triggers.  The
+    silver→gold and gold→serving bodies read their batch's files on the
+    driver, so Spark reports 0 rows for their batches: their batch and
+    wall figures are real, their row figures read 0.  Size statistics use
+    the batches with rows.  TWO batch-size baselines come out, with
+    different jobs (the r7-advice split):
 
     - ``steady_batch_rows`` — median of the SECOND QUARTER, an EARLY
       post-ramp window.  This anchors the DIVERGENCE check: it is fixed
@@ -84,7 +88,9 @@ def _stage_progress(query) -> dict:
       bound — safe to take from the tail because the divergence check
       above guards it: in a diverging run the tail median inflates, but
       last/steady grows without bound and fails first."""
-    progress = list(query.recentProgress)
+    progress = [
+        p for p in query.recentProgress if p["sources"][0]["startOffset"] != p["sources"][0]["endOffset"]
+    ]
     sizes = [int(p["numInputRows"]) for p in progress]
     nz = [s for s in sizes if s > 0]
     # Second quarter [n/4, n/2); q1 is floored at 1 so the FIRST (ramp)
@@ -147,7 +153,7 @@ def soak_medallion(
       ``_stage_progress``): the divergence check's baseline is fixed
       early so backlog growth can't re-base it; the lag bound's baseline
       is the true equilibrium, which early batches under-read.  Idle
-      0-row progress entries are excluded from both.
+      progress entries (no offset advance) are excluded from both.
     - ``gold_consistent`` — incremental gold state == batch re-aggregation
       of silver (fold ≡ agg∘history), checked after the tail drain.
     - per-stage ``stages.{bronze_to_silver,silver_to_gold,gold_to_serving}``

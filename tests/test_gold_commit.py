@@ -1,12 +1,16 @@
 """The gold commit (``ParquetUpsertTable.upsert_state`` fed by
-``MedallionPipeline._gold_batch``): the Arrow fold it commits with matches
-``combine_states`` bit for bit, and a crash at any step of its commit,
-followed by the same micro-batch re-offered, neither loses nor double-counts
-an event in the table or its change feed.
+``MedallionPipeline.fold_silver_files``): the Arrow fold it commits with
+matches ``combine_states`` bit for bit, and a crash at any step of its
+commit, followed by the same micro-batch re-offered, neither loses nor
+double-counts an event in the table or its change feed.  The same holds
+for the silver→gold and gold→serving queries: a body that raises stops
+its query, and a restart on the same checkpoint reads the failed batch's
+files again.
 """
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 import re
@@ -16,10 +20,12 @@ import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
+from pyspark.errors import StreamingQueryException
 
-from kafka_streaming_spark.io import sinks
+from kafka_streaming_spark.io import serving, sinks
+from kafka_streaming_spark.io.generator import EventGenerator
 from kafka_streaming_spark.io.sinks import ParquetUpsertTable
+from kafka_streaming_spark.io.sources import file_stream
 from kafka_streaming_spark.ops.aggregates import (
     AGG_COLUMNS,
     combine_states,
@@ -299,18 +305,18 @@ def test_gold_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, mon
             derive_event_columns(spark.createDataFrame(batch, schema=EVENT_SCHEMA)).select(*silver_cols),
             version=v,
         )
-        batch_df = pipe.silver.read_cdf(starting_version=v).filter(F.col("_commit_version") == v)
+        files = glob.glob(f"{pipe.silver.cdf_dir}/v{v}_insert_*.parquet")
 
         with monkeypatch.context() as m:
             if fault is not None:
                 fault(m)
                 with pytest.raises(Crash):
-                    pipe._gold_batch(batch_df, v)
+                    pipe.fold_silver_files(files, v)
             else:
-                pipe._gold_batch(batch_df, v)
+                pipe.fold_silver_files(files, v)
         assert pipe.gold.version_applied(v) is not interrupts
         landed = set(os.listdir(pipe.gold.cdf_dir))
-        pipe._gold_batch(batch_df, v)  # restart: the same batch re-offered
+        pipe.fold_silver_files(files, v)  # restart: the same batch re-offered
         assert pipe.gold.version_applied(v)
         assert landed <= set(os.listdir(pipe.gold.cdf_dir)), f"v{v}: a landed feed file was rewritten"
         assert not os.listdir(f"{root}/gold/stage")
@@ -338,6 +344,114 @@ def test_gold_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, mon
     for v in range(len(FAULTS)):
         files = [n for n in os.listdir(pipe.gold.cdf_dir) if n.startswith(f"v{v}_")]
         assert 1 <= len(files) <= 3
+
+
+# -- crash inside a query's body, then the query restarted -------------------
+
+
+def _after(monkeypatch, owner, name, should_crash):
+    """Make ``owner.name`` raise ``Crash`` right after the first call whose
+    arguments satisfy ``should_crash(args)`` has returned: the step lands,
+    then the body dies."""
+    inner = getattr(owner, name)
+
+    def landed(*args, **kwargs):
+        out = inner(*args, **kwargs)
+        if should_crash(args):
+            monkeypatch.setattr(owner, name, inner)
+            raise Crash(name)
+        return out
+
+    monkeypatch.setattr(owner, name, landed)
+
+
+def _run_until_crash(start) -> None:
+    """Start a query with a fault armed; it stops on the ``Crash`` its body
+    raises."""
+    with pytest.raises(StreamingQueryException, match="Crash"):
+        start().awaitTermination()
+
+
+def _drained_silver(spark, root: str) -> MedallionPipeline:
+    """A pipeline whose silver holds four commits of generated events."""
+    rows = EventGenerator(seed=21, workers=3).rows(120)
+    events = spark.createDataFrame(rows, schema=EVENT_SCHEMA)
+    events.repartitionByRange(4, "event_timestamp").write.parquet(f"{root}/source")
+    pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="1 hour")
+    stream = file_stream(spark, f"{root}/source", EVENT_SCHEMA, max_files_per_trigger=1)
+    pipe.start_bronze_to_silver(stream, available_now=True).awaitTermination()
+    assert len(glob.glob(f"{pipe.silver.cdf_dir}/*.parquet")) == 4
+    return pipe
+
+
+def _assert_gold_is_silver_fold(pipe) -> dict:
+    """Gold equals the pyarrow fold of every silver row: no event lost or
+    counted twice.  Returns gold's rows by group."""
+    silver = pq.read_table(pipe.silver.cdf_dir, columns=["group_id", "score", "event_timestamp"])
+    folded = silver.group_by("group_id").aggregate(
+        [("score", "sum"), ("score", "count"), ("event_timestamp", "min"), ("event_timestamp", "max")]
+    )
+    want = {
+        r["group_id"]: (r["score_sum"], r["score_count"], r["event_timestamp_min"], r["event_timestamp_max"])
+        for r in folded.to_pylist()
+    }
+    gold = {r["group_id"]: r.asDict() for r in pipe.gold.read().collect()}
+    assert sorted(gold) == sorted(want)
+    for g, (total, n, lo, hi) in want.items():
+        r = gold[g]
+        assert (r["event_count"], r["first_event_timestamp"], r["last_event_timestamp"]) == (n, lo, hi), g
+        assert r["cumulative_score"] == pytest.approx(total, rel=1e-9), g
+    return gold
+
+
+def test_silver_to_gold_query_crash_then_restart(spark, tmp_path_factory, monkeypatch):
+    """The silver→gold body raises before gold version 1's state rename;
+    the restarted query raises after version 2's state rename (its feed
+    not yet landed); the third start runs clean.  Each restart re-reads
+    the failed batch's silver files from the checkpoint, and gold ends as
+    the pyarrow fold of silver."""
+    pipe = _drained_silver(spark, str(tmp_path_factory.mktemp("s2gcrash")))
+
+    def start():
+        return pipe.start_silver_to_gold(available_now=True, max_files_per_trigger=1)
+
+    with monkeypatch.context() as m:
+        _arm(m, sinks.os, "rename", lambda a, calls: str(a[1]).endswith("/gold/data/v_1.parquet"))
+        _run_until_crash(start)
+    assert sorted(os.listdir(f"{pipe.gold.root}/data")) == ["v_0.parquet"]
+    with monkeypatch.context() as m:
+        _after(m, sinks.os, "rename", lambda a: str(a[1]).endswith("/gold/data/v_2.parquet"))
+        _run_until_crash(start)
+    assert not pipe.gold.version_applied(2)  # its feed files are still staged
+    start().awaitTermination()
+    assert sorted(os.listdir(f"{pipe.gold.root}/data")) == ["v_2.parquet", "v_3.parquet"]
+    assert not os.listdir(f"{pipe.gold.root}/stage")
+    _assert_gold_is_silver_fold(pipe)
+
+
+def test_gold_to_serving_query_crash_then_restart(spark, tmp_path_factory, monkeypatch):
+    """The gold→serving body raises before its second snapshot rename; the
+    restarted query raises right after the replayed batch's rename landed
+    (so its checkpoint commit is lost); the third start runs clean.
+    Serving ends equal to gold, one row per group."""
+    pipe = _drained_silver(spark, str(tmp_path_factory.mktemp("g2scrash")))
+    pipe.start_silver_to_gold(available_now=True, max_files_per_trigger=1).awaitTermination()
+    gold = _assert_gold_is_silver_fold(pipe)
+
+    def start():
+        return pipe.start_gold_to_serving(available_now=True, max_files_per_trigger=3)
+
+    with monkeypatch.context() as m:
+        _arm(m, serving.os, "replace", lambda a, calls: len(calls) == 1)
+        _run_until_crash(start)
+    with monkeypatch.context() as m:
+        _after(m, serving.os, "replace", lambda a: True)
+        _run_until_crash(start)
+    start().awaitTermination()
+    rows = pipe.serving_view().collect()
+    assert len(rows) == len({r["_id"] for r in rows})
+    assert {r["_id"]: {k: r[k] for k in GOLD_SCHEMA.names} for r in rows} == gold
+    assert all(r["_id"] == r["group_id"] for r in rows)
 
 
 def _last_images(pipe) -> dict:

@@ -1,7 +1,8 @@
 """The serving commit (``ParquetServingWriter``): a crash at any step of a
 snapshot write, followed by the same batch re-offered, leaves one snapshot
 file holding the newest row of every ``_id``; a directory in the old
-append layout is refused.
+append layout is refused.  ``MongoServingWriter`` without its connector
+fails with an error that names it.
 """
 
 from __future__ import annotations
@@ -12,7 +13,12 @@ import pyarrow.parquet as pq
 import pytest
 
 from kafka_streaming_spark.io import serving
-from kafka_streaming_spark.io.serving import SERVING_SCHEMA, ParquetServingWriter, read_snapshot
+from kafka_streaming_spark.io.serving import (
+    SERVING_SCHEMA,
+    MongoServingWriter,
+    ParquetServingWriter,
+    read_snapshot,
+)
 from tests.conftest import Crash, _arm
 
 
@@ -83,7 +89,7 @@ def test_serving_commit_crash_at_each_step_then_replay(spark, tmp_path_factory, 
     fold: dict = {}
     for v in range(N_BATCHES):
         fault = FAULTS[v % len(FAULTS)]
-        df = spark.createDataFrame(_batch(v), schema=SERVING_SCHEMA)
+        df = spark.createDataFrame(_batch(v), schema=SERVING_SCHEMA).toArrow()
         before = dict(fold)
         fold.update({r[-1]: r for r in _batch(v)})
         with monkeypatch.context() as m:
@@ -114,6 +120,17 @@ def test_append_layout_serving_dir_is_refused(spark, tmp_path_factory):
         ParquetServingWriter(path)
 
     snap = f"{tmp_path_factory.mktemp('snapshotserving')}/serving"
-    ParquetServingWriter(snap).write(spark.createDataFrame(_batch(0), schema=SERVING_SCHEMA), 0)
-    ParquetServingWriter(snap).write(spark.createDataFrame(_batch(1), schema=SERVING_SCHEMA), 1)
+    ParquetServingWriter(snap).write(spark.createDataFrame(_batch(0), schema=SERVING_SCHEMA).toArrow(), 0)
+    ParquetServingWriter(snap).write(spark.createDataFrame(_batch(1), schema=SERVING_SCHEMA).toArrow(), 1)
     assert set(_view(spark, snap)) == {r[-1] for r in _batch(0) + _batch(1)}
+
+
+def test_mongo_writer_without_its_connector_names_it(spark):
+    """The writer takes the batch as Arrow, like every serving writer, and
+    builds its DataFrame on the active session; with no mongo-spark
+    connector on the classpath Spark fails at once (no data source named
+    ``mongodb``), and the error says which package is missing."""
+    rows = spark.createDataFrame(_batch(0), schema=SERVING_SCHEMA).toArrow()
+    writer = MongoServingWriter("mongodb://localhost:27017", "analytics", "gold")
+    with pytest.raises(RuntimeError, match="mongo-spark-connector"):
+        writer.write(rows, 0)

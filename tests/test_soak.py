@@ -45,6 +45,8 @@ def test_soak_medallion_sustains_and_folds(spark, tmp_path_factory):
     # Every stage actually ran batches while live.
     assert m["stages"]["bronze_to_silver"]["input_rows"] > 0
     assert m["stages"]["bronze_to_silver"]["batches"] > 1
+    assert m["stages"]["silver_to_gold"]["batches"] >= 1
+    assert m["stages"]["gold_to_serving"]["batches"] >= 1
 
 
 def test_rate_micro_batch_is_deterministic(spark, tmp_path_factory):
@@ -148,12 +150,16 @@ def test_stage_progress_short_run_skips_ramp_batch():
     exists."""
     from kafka_streaming_spark.streaming.soak import _stage_progress
 
+    def _entry(rows, start, end, ms=100):
+        return {
+            "numInputRows": rows,
+            "durationMs": {"triggerExecution": ms},
+            "sources": [{"startOffset": start, "endOffset": end}],
+        }
+
     class _FakeQuery:
         def __init__(self, sizes):
-            self.recentProgress = [
-                {"numInputRows": s, "durationMs": {"triggerExecution": 100}}
-                for s in sizes
-            ]
+            self.recentProgress = [_entry(s, str(i), str(i + 1)) for i, s in enumerate(sizes)]
 
     # Ramp batch of 10 rows, then two healthy 100-row batches: steady
     # must anchor on the post-ramp batches, never the ramp batch.
@@ -172,3 +178,15 @@ def test_stage_progress_short_run_skips_ramp_batch():
     # Long run unchanged: second quarter of 8 non-empty batches.
     m8 = _stage_progress(_FakeQuery([1, 2, 3, 4, 5, 6, 7, 8]))
     assert m8["steady_batch_rows"] in (3, 4)
+
+    # An idle entry (its offset did not move) is no batch, however long its
+    # trigger took; an entry whose offset moved is one, with rows or
+    # without (silver→gold and gold→serving read their files on the
+    # driver, so Spark reports 0 rows for them).
+    q = _FakeQuery([10, 100, 100])
+    q.recentProgress.insert(1, _entry(0, "1", "1", ms=5000))
+    q.recentProgress.append(_entry(0, "3", "4", ms=300))
+    m = _stage_progress(q)
+    assert (m["batches"], m["input_rows"]) == (4, 210)
+    assert (m["mean_batch_sec"], m["max_batch_sec"]) == (0.15, 0.3)
+    assert (m["steady_batch_rows"], m["last_batch_rows"], m["median_batch_rows"]) == (100, 100, 100)

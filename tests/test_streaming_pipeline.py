@@ -7,6 +7,7 @@ F1 adversarial variants).
 
 from __future__ import annotations
 
+import glob
 import os
 from collections import Counter
 
@@ -20,10 +21,24 @@ from kafka_streaming_spark.schemas import EVENT_SCHEMA, load_table
 from kafka_streaming_spark.streaming.pipeline import MedallionPipeline
 from tests.conftest import SF_SMALL, replace_rows
 
-#: Spark jobs per micro-batch of one silver insert / one gold commit in
-#: ``test_commit_jobs_per_micro_batch`` (measured; lower is better).
+#: Spark jobs per micro-batch of one silver insert / one gold commit / one
+#: serving write in ``test_commit_jobs_per_micro_batch`` (measured; lower
+#: is better).
 B2S_JOBS = 1.0
-S2G_JOBS = 1.0
+S2G_JOBS = 0.0
+G2S_JOBS = 0.0
+
+
+def _batches(query) -> int:
+    """The micro-batches ``query`` ran: its progress entries whose source
+    offset advanced.  (Silver→gold and gold→serving read their files on
+    the driver, so Spark reports 0 input rows for their batches.)"""
+    return sum(p.sources[0].startOffset != p.sources[0].endOffset for p in query.recentProgress)
+
+
+def _silver_files(pipe, version: int) -> list[str]:
+    """The silver file silver commit ``version`` wrote, if any."""
+    return sorted(glob.glob(f"{pipe.silver.cdf_dir}/v{version}_insert_*.parquet"))
 
 
 def _write_event_source(spark, events_df, path, n_files=4):
@@ -104,14 +119,14 @@ def test_serving_gets_one_row_per_id_when_a_trigger_spans_gold_versions(spark, t
     """K3: a gold→serving trigger that spans two gold versions hands the
     writer one row per ``_id``, the newest, so a store that replaces by
     ``_id`` in write order (``MongoServingWriter``) cannot keep a stale
-    row; the batch stays one Spark job (no shuffle)."""
+    row; the batch runs no Spark job."""
 
     class RecordingWriter:
         def __init__(self):
             self.rows = []
 
-        def write(self, df, batch_id):
-            self.rows += df.collect()
+        def write(self, rows, batch_id):
+            self.rows += rows.to_pylist()
 
     root = str(tmp_path_factory.mktemp("servingspan"))
     writer = RecordingWriter()
@@ -125,16 +140,16 @@ def test_serving_gets_one_row_per_id_when_a_trigger_spans_gold_versions(spark, t
     for v, rows in enumerate(batches):
         events = derive_event_columns(spark.createDataFrame(rows, schema=EVENT_SCHEMA))
         pipe.silver.insert_if_absent(events.select(*silver_cols), version=v)
-        pipe._gold_batch(pipe.silver.read_cdf(starting_version=v), batch_id=v)
+        pipe.fold_silver_files(_silver_files(pipe, v), batch_id=v)
 
     query = pipe.start_gold_to_serving(available_now=True)
     query.awaitTermination()
-    assert sum(p.numInputRows > 0 for p in query.recentProgress) == 1  # one trigger, both versions
+    assert _batches(query) == 1  # one trigger, both versions
     assert sorted((r["_id"], r["event_count"], r["cumulative_score"]) for r in writer.rows) == [
         ("g1", 2, 4.0), ("g2", 1, 2.0),
     ]
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
-    assert len(jobs) == 1, f"gold_to_serving ran {len(jobs)} jobs for one batch"
+    assert len(jobs) == G2S_JOBS, f"gold_to_serving ran {len(jobs)} jobs for one batch"
 
 
 def test_checkpoint_resume_processes_only_new_files(spark, tmp_path_factory):
@@ -252,7 +267,7 @@ def test_gold_keeps_two_state_files_and_redoes_from_the_prior_state(spark, tmp_p
     _assert_gold_is_fold(pipe, drained)
 
     # replay: the last batch id re-offered after a lost checkpoint commit
-    pipe._gold_batch(pipe.silver.read_cdf(starting_version=silver_versions[-1]), last)
+    pipe.fold_silver_files(_silver_files(pipe, silver_versions[-1]), last)
     _assert_gold_is_fold(pipe, drained)
 
     # redo: the next commit crashes before its state rename, then is re-offered
@@ -263,14 +278,14 @@ def test_gold_keeps_two_state_files_and_redoes_from_the_prior_state(spark, tmp_p
         ),
         version=version,
     )
-    batch = pipe.silver.read_cdf(starting_version=version)
+    batch = _silver_files(pipe, version)
     with monkeypatch.context() as m:
         _arm(m, sinks.os, "rename", lambda a, calls: "/gold/data/" in str(a[1]))
         with pytest.raises(Crash):
-            pipe._gold_batch(batch, last + 1)
+            pipe.fold_silver_files(batch, last + 1)
     assert not pipe.gold.version_applied(last + 1)
     assert sorted(os.listdir(gold_data)) == [f"v_{last - 1}.parquet", f"v_{last}.parquet"]
-    pipe._gold_batch(batch, last + 1)
+    pipe.fold_silver_files(batch, last + 1)
     assert sorted(os.listdir(gold_data)) == [f"v_{last}.parquet", f"v_{last + 1}.parquet"]
     _assert_gold_is_fold(pipe, rows)
 
@@ -683,8 +698,6 @@ def test_gold_batch_replay_same_batch_id_is_noop(spark, tmp_path_factory):
     dies after the gold commit but before the checkpoint commit, the same
     batch_id is re-offered on restart — the running totals must not fold the
     same micro-batch twice."""
-    from kafka_streaming_spark.io.sinks import attach_cdf_metadata
-
     root = str(tmp_path_factory.mktemp("goldreplay"))
     base_ms = 1_700_000_000_000
     rows = [
@@ -698,9 +711,9 @@ def test_gold_batch_replay_same_batch_id_is_noop(spark, tmp_path_factory):
         *[f.name for f in pipe.silver.schema.fields]
     )
     pipe.silver.insert_if_absent(silver_rows, version=0)
-    cdf_batch = pipe.silver.read_cdf()
+    cdf_batch = _silver_files(pipe, 0)
 
-    pipe._gold_batch(cdf_batch, batch_id=0)
+    pipe.fold_silver_files(cdf_batch, batch_id=0)
     state_once = sorted(
         (r["group_id"], r["cumulative_score"], r["event_count"])
         for r in pipe.gold.read().collect()
@@ -708,7 +721,7 @@ def test_gold_batch_replay_same_batch_id_is_noop(spark, tmp_path_factory):
     assert [(g, n) for g, _s, n in state_once] == [("g1", 2), ("g2", 1)]
 
     # replay: same batch content, same batch_id → must be a no-op
-    pipe._gold_batch(cdf_batch, batch_id=0)
+    pipe.fold_silver_files(cdf_batch, batch_id=0)
     state_twice = sorted(
         (r["group_id"], r["cumulative_score"], r["event_count"])
         for r in pipe.gold.read().collect()
@@ -722,20 +735,21 @@ def test_gold_batch_replay_same_batch_id_is_noop(spark, tmp_path_factory):
         derive_event_columns(more).select(*[f.name for f in pipe.silver.schema.fields]),
         version=1,
     )
-    new_cdf = pipe.silver.read_cdf(starting_version=1)
-    pipe._gold_batch(new_cdf, batch_id=1)
+    new_cdf = _silver_files(pipe, 1)
+    pipe.fold_silver_files(new_cdf, batch_id=1)
     per_group = {r["group_id"]: r["event_count"] for r in pipe.gold.read().collect()}
     assert per_group == {"g1": 3, "g2": 1}
 
 
 def test_commit_jobs_per_micro_batch(spark, tmp_path_factory):
-    """One commit path, one Spark job per micro-batch: the Spark jobs a
-    silver insert and a gold commit run stay pinned.  Every job of a
-    streaming micro-batch runs under its query's runId job group, so
-    StatusTracker counts them per stage; the count is spread over the
-    batches that carried data, as the benchmark's ``jobs_per_batch``.
-    Neither query has a stateful operator, so availableNow runs no
-    trailing no-data batch, and each data batch is its one fetch job."""
+    """One Spark job per event, in b2s: a silver insert runs its one fetch
+    job, and a gold commit and a serving write run none (they read their
+    batch's files on the driver).  Every job of a streaming micro-batch
+    runs under its query's runId job group, so StatusTracker counts them
+    per stage; the count is spread over the batches the query ran (its
+    source offset advanced), as the benchmark's ``jobs_per_batch``.  No
+    query has a stateful operator, so availableNow runs no trailing
+    no-data batch."""
     from kafka_streaming_spark.io.sources import file_stream
 
     root = str(tmp_path_factory.mktemp("jobcount"))
@@ -754,16 +768,19 @@ def test_commit_jobs_per_micro_batch(spark, tmp_path_factory):
 
     def jobs_per_batch(query) -> float:
         query.awaitTermination()
-        batches = sum(p.numInputRows > 0 for p in query.recentProgress)
+        batches = _batches(query)
         assert batches >= 1
         return len(tracker.getJobIdsForGroup(str(query.runId))) / batches
 
     stream = file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=1)
     b2s = jobs_per_batch(pipe.start_bronze_to_silver(stream, available_now=True))
-    s2g = jobs_per_batch(pipe.start_silver_to_gold(available_now=True))
+    s2g = jobs_per_batch(pipe.start_silver_to_gold(available_now=True, max_files_per_trigger=1))
+    g2s = jobs_per_batch(pipe.start_gold_to_serving(available_now=True, max_files_per_trigger=1))
     assert pipe.gold.read().agg(F.sum("event_count")).collect()[0][0] == 80
-    assert b2s <= B2S_JOBS, f"bronze_to_silver ran {b2s} jobs per batch"
-    assert s2g <= S2G_JOBS, f"silver_to_gold ran {s2g} jobs per batch"
+    assert sum(r["event_count"] for r in pipe.serving_view().collect()) == 80
+    assert b2s == B2S_JOBS, f"bronze_to_silver ran {b2s} jobs per batch"
+    assert s2g == S2G_JOBS, f"silver_to_gold ran {s2g} jobs per batch"
+    assert g2s == G2S_JOBS, f"gold_to_serving ran {g2s} jobs per batch"
 
 
 def test_concurrent_live_pipeline(spark, tmp_path_factory):
@@ -977,7 +994,7 @@ def test_cdf_metadata_reads_the_file_name_not_the_root(spark, tmp_path_factory):
             derive_event_columns(spark.createDataFrame(events, schema=EVENT_SCHEMA)).select(*silver_cols),
             version=v,
         )
-        pipe._gold_batch(pipe.silver.read_cdf(starting_version=v), v)
+        pipe.fold_silver_files(_silver_files(pipe, v), v)
 
     silver = pipe.silver.read_cdf().collect()
     assert sorted((r["_commit_version"], r["id"]) for r in silver) == [
@@ -985,13 +1002,17 @@ def test_cdf_metadata_reads_the_file_name_not_the_root(spark, tmp_path_factory):
     ]
     assert {r["_change_type"] for r in silver} == {"insert"}
     gold = pipe.gold.read_cdf().collect()
-    assert sorted((r["_commit_version"], r["_change_type"], r["group_id"]) for r in gold) == [
+    want = [
         (0, "insert", "g0"),
         (1, "insert", "g1"), (1, "update_postimage", "g0"), (1, "update_preimage", "g0"),
         (2, "insert", "g2"),
         (2, "update_postimage", "g0"), (2, "update_postimage", "g1"),
         (2, "update_preimage", "g0"), (2, "update_preimage", "g1"),
     ]
+    assert sorted((r["_commit_version"], r["_change_type"], r["group_id"]) for r in gold) == want
+    # the driver-side read gold→serving uses labels the rows the same way
+    feed = pipe.gold.read_feed_files(glob.glob(f"{pipe.gold.cdf_dir}/*.parquet")).to_pylist()
+    assert sorted((r["_commit_version"], r["_change_type"], r["group_id"]) for r in feed) == want
 
 
 def test_upsert_random_commit_sequences(spark, tmp_path_factory, monkeypatch):
